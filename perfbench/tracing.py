@@ -113,6 +113,31 @@ def job_stats(spark, ids: list[int], timeout: float = 5.0) -> dict:
     return out
 
 
+def tree_cpu_s(pid: int | None = None) -> float:
+    """CPU seconds (user plus system, reaped children included) used so far
+    by process `pid` (default: this one) and every live process descended
+    from it: the Python driver, the JVM it launched and any Python workers
+    the JVM forked."""
+    stats = {}
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                with open(f"/proc/{d}/stat", encoding="ascii") as fh:
+                    f = fh.read().rsplit(")", 1)[1].split()
+            except OSError:
+                continue  # exited meanwhile
+            stats[int(d)] = (int(f[1]), sum(int(x) for x in f[11:15]))
+    children: dict[int, list[int]] = {}
+    for p, (ppid, _) in stats.items():
+        children.setdefault(ppid, []).append(p)
+    ticks, todo = 0, [pid or os.getpid()]
+    while todo:
+        p = todo.pop()
+        ticks += stats.get(p, (0, 0))[1]
+        todo += children.get(p, [])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def storage_mb(spark) -> float:
     """Memory plus disk size of every persisted relation."""
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()

@@ -13,9 +13,11 @@ import hashlib
 import json
 import os
 import pickle
+import shutil
 import time
 from contextlib import nullcontext
 
+from gen import PROPS
 from tracing import covered, dir_stats, job_ids, job_stats
 
 # Reference pipeline queries and their time-series and TPC-H-style
@@ -27,9 +29,10 @@ QUERY_MIX = (
     "q_dedup_ngram_jaccard", "q_dedup_clusters", "q_corpus_dedup",
     "q_cosine_topk", "q_bm25_rank",
 )
-STREAM_PATHS = ("window_avg", "session_windows", "interval_join", "incremental_dedup")
-EVENT_FILES_PER_TRIGGER = 2
-DOC_FILES_PER_TRIGGER = 2
+# the dedup path takes longest, so it starts first
+STREAM_PATHS = ("incremental_dedup", "window_avg", "session_windows", "interval_join")
+EVENT_FILES_PER_TRIGGER = PROPS["stream_ingest"]["event_files_per_trigger"]
+DOC_FILES_PER_TRIGGER = PROPS["stream_ingest"]["doc_files_per_trigger"]
 
 
 def _clear_group(spark) -> None:
@@ -132,7 +135,9 @@ def _progress(q) -> list[dict]:
 class StreamWorkload:
     """Four streaming paths over one landed backlog, running side by side
     as one ingest service runs its queries. Each pass drains them with
-    AvailableNow from fresh checkpoint and output directories."""
+    AvailableNow from fresh checkpoint and output directories. The dedup
+    index is bootstrapped once, in the first pass, as a service builds it
+    once before streaming; each pass streams into a fresh copy of it."""
 
     def __init__(self, spark, data: str, work: str):
         self.spark, self.data, self.work = spark, data, work
@@ -141,6 +146,8 @@ class StreamWorkload:
         self.docs = os.path.join(data, "landing_docs")
         self.outputs: dict[str, list[str]] = {p: [] for p in STREAM_PATHS}
         self.pass_exec: dict[int, dict] = {}  # traced passes: drain wall and gap
+        self.index = os.path.join(work, "bootstrap-index")
+        self.bootstrap_s = 0.0
 
     def _start(self, name: str, d: str, stage_times: dict):
         from pyspark.sql import functions as F
@@ -151,10 +158,12 @@ class StreamWorkload:
 
         spark, out, ckpt = self.spark, f"{d}/out", f"{d}/ckpt"
         if name == "incremental_dedup":
-            t0 = time.perf_counter()
-            docs = table(spark, self.data, "documents").select("doc_id", "text")
-            inc.build_corpus_index(docs, f"{d}/index")
-            stage_times["bootstrap_s"] = time.perf_counter() - t0
+            if not os.path.exists(self.index):
+                t0 = time.perf_counter()
+                docs = table(spark, self.data, "documents").select("doc_id", "text")
+                inc.build_corpus_index(docs, self.index)
+                self.bootstrap_s = time.perf_counter() - t0
+            shutil.copytree(self.index, f"{d}/index")
             stream = inc.read_doc_stream(spark, self.docs, DOC_FILES_PER_TRIGGER)
             return inc.run_incremental_dedup(
                 spark, stream, f"{d}/index", out, ckpt, stage_times=stage_times
@@ -195,14 +204,21 @@ class StreamWorkload:
                         queries[name] = self._start(name, f"{base}/{name}", rec["stage_times"])
                     except Exception as exc:  # noqa: BLE001 - counted as failed
                         rec.update(ok=False, error=str(exc)[:500])
+                # block until a query ends rather than poll, so waiting costs
+                # no CPU in either process
                 running = dict(queries)
                 while running:
+                    try:
+                        spark.streams.awaitAnyTermination()
+                    except Exception:  # noqa: BLE001 - q.exception() reports it below
+                        pass
+                    now = time.perf_counter()
+                    spark.streams.resetTerminated()
                     for name, q in list(running.items()):
                         if not q.isActive:
                             rec = next(r for r in recs if r["name"] == name)
-                            rec["wall_s"] = time.perf_counter() - rec["t0"]
+                            rec["wall_s"] = now - rec["t0"]
                             del running[name]
-                    time.sleep(0.02)
         finally:
             if tracer is not None:
                 _clear_group(spark)
@@ -226,7 +242,8 @@ class StreamWorkload:
                 rec["sink_files"], rec["sink_bytes"] = dir_stats(f"{d}/out")
                 rec["checkpoint_bytes"] = dir_stats(f"{d}/ckpt")[1]
         if tracer is not None:
-            # the index bootstrap runs on this thread, under the pass's group
+            # in the first pass the index bootstrap runs on this thread, under
+            # the pass's group
             boot = job_stats(spark, job_ids(spark, group))
             stage_iv += boot["stage_intervals"]
             inc = next(r for r in recs if r["name"] == "incremental_dedup")
