@@ -1,26 +1,20 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}.
 
-Each query is executed to completion through a noop sink so the full plan
-— scan, shuffle, join — actually runs. No DataFrame is cached between
-queries; the only pre-warming is one untimed full read of each fixture
-table (OS page cache / parquet footers) plus JVM/MLlib/Arrow spin-up, so
-per-query numbers measure steady-state plan cost rather than which query
-happened to touch a table first.
+Each query is executed once, to completion, through a noop sink so the
+full plan — scan, shuffle, join — actually runs. No DataFrame is cached
+between queries; the only pre-warming is one untimed full read of each
+fixture table (OS page cache / parquet footers) plus JVM/MLlib/Arrow
+spin-up, so per-query numbers measure steady-state plan cost rather than
+which query happened to touch a table first. The shared persist-once
+relations are built and timed once before the query pass.
 
-Reps (r11 VERDICT item 1): a single pass swings ±45% run-to-run on this
-host (measured 143–216 s for identical code), which made every
-round-over-round ratio noise. SPARK_GRAFT_BENCH_REPS (default 1) runs
-the timing loop N times in one session and records the PER-QUERY MIN —
-min, not median, because plan cost is a lower-bound quantity: contention
-only ever adds time, so the min is the best estimate of the plan's
-intrinsic cost (the statistic GUARDS_AB's A/B arms already use). The
-canonical committed artifact must be a min-of-≥3 run (snapshot_round
-sets the env; its --skip-bench gate refuses lesser stamps); plain
-`python bench.py` (the driver, /verify) stays one rep and is stamped as
-such.
+The full per-query map goes to BENCH_FULL.json; the full-registry DuckDB
+oracle mirror at $SPARK_GRAFT_ORACLE_SF_DIR (default sf0.01) goes to
+ORACLE_LOCAL.json. A single pass is noisy on a shared host; the gated,
+repeated benchmark is perfbench/run.py.
 """
 
 from __future__ import annotations
@@ -36,7 +30,8 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from bitcoinminingetl_spark.registry import load_all
-from bitcoinminingetl_spark.session import get_spark
+from bitcoinminingetl_spark.session import default_parallelism, get_spark
+from scripts.stamp import tree_stamp
 
 # Headline set: the flagship reference query plus the most
 # shuffle/join/agg-heavy operators — the ones whose plans matter at 100 TB.
@@ -56,205 +51,6 @@ HEADLINE = (
     "q_knn_join_lsh",
     "q_hybrid_rrf",
 )
-
-
-def _numeric_guards_enabled() -> bool:
-    from bitcoinminingetl_spark.functions import numeric
-
-    return numeric.GUARDS
-
-
-def _tree_stamp() -> dict:
-    """Git commit (+dirty flag) of the tree this artifact describes — so
-    BENCH_FULL.json / ORACLE_LOCAL.json are verifiably stamped at the code
-    they measured (r5 VERDICT item 2: an artifact claiming full-registry
-    correctness must carry the commit it was generated at). Delegates to
-    the ONE shared implementation so the stamp's artifact exemptions and
-    the snapshot's staging can't drift (r11 review finding: three
-    hand-rolled copies had already diverged in exception handling)."""
-    from scripts.snapshot_round import tree_stamp
-
-    return tree_stamp(Path(_REPO))
-
-
-BUDGET_FACTOR = 1.5
-REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "1")))
-
-
-def _budget_verdict(current_total: float, current_reps: int = 1) -> dict:
-    """Compare this run's plan cost against the committed canonical
-    bench. Baseline comes from `git show HEAD:BENCH_FULL.json` (never
-    the working-tree file — A/B reps overwrite that), and only a
-    CANONICAL committed artifact (guards on, oracle not skipped) sets a
-    budget; otherwise the verdict records why no budget applied.
-
-    Like statistic to like (r11 VERDICT item 1): a single-run total
-    compared against a min-of-N baseline measures host noise, not plan
-    regressions (singles sit up to ~45% above the per-query min), so
-    the gate only applies when this run's reps are >= the baseline's.
-    The transition direction is fine — a min-of-N run against a
-    single-run baseline is conservative (min <= any single), so the
-    first multi-rep round still gets a meaningful verdict."""
-    from scripts.snapshot_round import committed_bench_full
-
-    committed = committed_bench_full(Path(_REPO))
-    if committed is None:
-        return {"applied": False, "reason": "no committed BENCH_FULL"}
-    if committed.get("numeric_guards") is False or committed.get(
-        "oracle_skipped"
-    ):
-        return {"applied": False, "reason": "committed artifact non-canonical"}
-    base = committed.get("plan_cost_total")
-    if not base:
-        return {"applied": False, "reason": "committed artifact has no total"}
-    committed_reps = committed.get("reps", 1)
-    if current_reps < committed_reps:
-        return {
-            "applied": False,
-            "reason": (
-                f"statistic mismatch: this run is {current_reps} rep(s) "
-                f"vs a min-of-{committed_reps} committed baseline — "
-                "rerun with SPARK_GRAFT_BENCH_REPS="
-                f"{committed_reps} for a comparable total"
-            ),
-            "committed_total": base,
-            "committed_reps": committed_reps,
-            "reps": current_reps,
-        }
-    # Compare UNROUNDED: rounding first would let a marginal breach
-    # (e.g. 1.5004x → 1.5) slip under the gate. The stamped display
-    # value alone is rounded.
-    raw_ratio = current_total / base
-    verdict = {
-        "applied": True,
-        "committed_total": base,
-        "committed_reps": committed_reps,
-        "reps": current_reps,
-        "ratio": round(raw_ratio, 3),
-        "limit": BUDGET_FACTOR,
-        "exceeded": raw_ratio > BUDGET_FACTOR,
-    }
-    # Sanctioned acceptance path (r10 code-review finding): without one,
-    # a LEGITIMATE >1.5x round (a large intentional suite expansion,
-    # adjudicated via bench_ab_outliers) deadlocks — the canonical bench
-    # exits 1 forever and --skip-bench refuses the exceeded stamp, so
-    # the baseline can never ratchet forward inside the gated workflow.
-    # The operator states the reason in the env; it is STAMPED into the
-    # committed artifact so the acceptance is auditable, and
-    # snapshot_round admits an exceeded-but-accepted stamp.
-    # r10 VERDICT item 3: the reason must NAME a committed adjudication
-    # receipt and at least one query that receipt actually covers — a
-    # one-word wave-through is recorded as rejected and the breach
-    # stands (the gate still exits 1 and --skip-bench still refuses).
-    reason = os.environ.get("SPARK_GRAFT_BUDGET_ACCEPT", "").strip()
-    if verdict["exceeded"] and reason:
-        receipt = _acceptance_receipt(reason)
-        if receipt is None:
-            verdict["acceptance_rejected"] = (
-                "reason names no committed adjudication receipt "
-                "(OUTLIERS_AB.json / GUARDS_AB.json / "
-                "SUITE_EXPANSION.json) plus a query it covers: "
-                f"{reason!r}"
-            )
-        else:
-            verdict["accepted_reason"] = reason
-            verdict["accepted_receipt"] = receipt
-    return verdict
-
-
-# Receipts an acceptance may cite: each is a committed JSON artifact
-# whose `queries` mapping names the adjudicated/added queries.
-ACCEPTANCE_RECEIPTS = (
-    "OUTLIERS_AB.json",
-    "GUARDS_AB.json",
-    "SUITE_EXPANSION.json",
-)
-
-
-def _acceptance_receipt(reason: str) -> dict | None:
-    """Validate a budget-acceptance reason against COMMITTED receipts:
-    it must mention one of ACCEPTANCE_RECEIPTS by name AND at least one
-    query that receipt's `queries` mapping actually covers (read from
-    git HEAD — the working-tree copy can be freely fabricated). Query
-    matching is WORD-BOUNDARY, not substring: a reason citing
-    q_dedup_embed_cosine_lsh must not validate against a receipt that
-    covers only its prefix q_dedup_embed_cosine (r11 review finding).
-    A SUITE_EXPANSION receipt must additionally be bound to the CURRENT
-    committed baseline (its baseline_total equals the committed
-    plan_cost_total), and an OUTLIERS_AB receipt likewise (r11 verdict
-    residual, closed r12): every cited query's recorded `committed`
-    reading must equal the canonical artifact's current reading, so an
-    adjudication minted against an older baseline cannot wave through a
-    later, unrelated breach — a fresh breach requires a fresh
-    bench_ab_outliers run. Returns
-    {"file": ..., "queries": [...], "receipt_commit": ...} or None.
-
-    Known residual (documented, not closed): a GUARDS_AB receipt's
-    on/off minima carry no committed reading to bind — the stamp
-    records which receipt and commit the acceptance cited, so the judge
-    can audit the link, but the validator cannot prove it."""
-    import re as _re
-    import subprocess
-
-    for name in ACCEPTANCE_RECEIPTS:
-        if not _re.search(rf"\b{_re.escape(name)}\b", reason):
-            continue
-        try:
-            committed = json.loads(
-                subprocess.run(
-                    ["git", "show", f"HEAD:{name}"],
-                    cwd=_REPO, capture_output=True, text=True, check=True,
-                ).stdout
-            )
-        except (subprocess.CalledProcessError, ValueError, OSError):
-            continue
-        covered = committed.get("queries")
-        if not isinstance(covered, dict):
-            continue
-        if name == "SUITE_EXPANSION.json":
-            from scripts.snapshot_round import committed_bench_full
-
-            base = committed_bench_full(Path(_REPO))
-            if base is None or committed.get("baseline_total") != base.get(
-                "plan_cost_total"
-            ):
-                continue  # receipt minted against a different baseline
-        cited = sorted(
-            q
-            for q in covered
-            if _re.search(rf"\b{_re.escape(q)}\b", reason)
-        )
-        if cited and name == "OUTLIERS_AB.json":
-            from scripts.snapshot_round import committed_bench_full
-
-            base_q = (committed_bench_full(Path(_REPO)) or {}).get(
-                "queries", {}
-            )
-
-            def _bound(q: str) -> bool:
-                row = covered.get(q)
-                return (
-                    isinstance(row, dict)
-                    and row.get("committed") is not None
-                    and row.get("committed") == base_q.get(q)
-                )
-
-            if not all(_bound(q) for q in cited):
-                continue  # adjudication minted against a different baseline
-        if cited:
-            try:
-                receipt_commit = subprocess.run(
-                    ["git", "log", "-1", "--format=%h", "--", name],
-                    cwd=_REPO, capture_output=True, text=True, check=True,
-                ).stdout.strip()
-            except (subprocess.CalledProcessError, OSError):
-                receipt_commit = None
-            return {
-                "file": name,
-                "queries": cited,
-                "receipt_commit": receipt_commit,
-            }
-    return None
 
 
 def main() -> None:
@@ -354,22 +150,8 @@ def main() -> None:
     # in the grand total, and every family member's per-query number is
     # then warm plan cost. At 100 TB these are the corpus-snapshot index
     # tables a production pipeline writes once and serves to every query.
-    # r13 measurement fix (guide §1): the infra phase used to be timed
-    # ONCE per bench run while every per-query number is min-of-REPS —
-    # so host noise landing in the single infra pass went straight into
-    # the headline (committed r13 baseline read 124.6 s for a build that
-    # times ~20 s isolated on a quiet host). The infra builds now run
-    # REPS passes with ALL persist-once caches dropped between passes
-    # (honest rebuilds, same clearing discipline as scaling_check) and
-    # each label reports its min; per-pass totals are stamped in
-    # rep_infra_totals so the raw readings stay on record. Write-once
-    # layout builds (parquet directories, not persisted relations) are
-    # timed on the first pass only — a re-run would time a dict hit.
     shared_infra: dict[str, float] = {}
-    rep_infra_totals: list[float] = []
-    _INFRA_RUN_ONCE = {"partitioned_events_layout"}
     try:
-        from bitcoinminingetl_spark.functions import cache as _cache
         from bitcoinminingetl_spark.operators import corpus_ops as _corpus
         from bitcoinminingetl_spark.operators import dedup as _dedup
         from bitcoinminingetl_spark.operators import (
@@ -489,60 +271,27 @@ def main() -> None:
                 _mat(lambda: _text.bm25_tf(spark, sf_dir)),
             ),
         )
-        for infra_rep in range(REPS):
-            if infra_rep:
-                # drop every persist-once relation so this pass rebuilds
-                # for real; the int node-count side cache is the one
-                # non-DataFrame memo (pagerank_graph) and must go too or
-                # its 1-row count job would be skipped on later passes
-                _cache.unpersist_all()
-                _corpus._PR_NODES_CACHE.clear()
-                spark.catalog.clearCache()
-            pass_total = 0.0
-            for label, run in infra_entries:
-                if infra_rep and label in _INFRA_RUN_ONCE:
-                    pass_total += shared_infra[label]
-                    continue
-                t0 = time.perf_counter()
-                run()
-                dt = round(time.perf_counter() - t0, 3)
-                pass_total += dt
-                if label not in shared_infra or dt < shared_infra[label]:
-                    shared_infra[label] = dt
-            rep_infra_totals.append(round(pass_total, 3))
+        for label, run in infra_entries:
+            t0 = time.perf_counter()
+            run()
+            shared_infra[label] = round(time.perf_counter() - t0, 3)
     except Exception as exc:  # noqa: BLE001 — consumers rebuild lazily
         print(f"bench: shared-infra prebuild failed: {exc}", file=sys.stderr)
 
-    # Rep loop (r11 VERDICT item 1): per-query MIN over REPS full
-    # passes — see the module docstring for why min and why the
-    # canonical run is >=3 reps. Each rep executes every plan end to
-    # end through the noop sink: the full plan runs JVM-side, nothing
-    # crosses into Python (a foreach/collect would time row
-    # serialization, not the query).
-    rep_timings: list[dict[str, float]] = []
-    for rep in range(REPS):
-        t_rep: dict[str, float] = {}
-        for name in names:
-            spec = registry[name]
-            t0 = time.perf_counter()
-            try:
-                df = spec.fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                t_rep[name] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:  # noqa: BLE001 — bench must survive one bad query
-                print(
-                    f"bench: {name} failed (rep {rep}): {exc}",
-                    file=sys.stderr,
-                )
-                t_rep[name] = -1.0
-        rep_timings.append(t_rep)
-
-    # a query is failed only if NO rep completed it; otherwise its
-    # reading is the min over the reps that did
+    # One pass: every plan executes end to end through the noop sink, so
+    # the full plan runs JVM-side and nothing crosses into Python (a
+    # foreach/collect would time row serialization, not the query).
     timings: dict[str, float] = {}
     for name in names:
-        ok_vals = [r[name] for r in rep_timings if r.get(name, -1.0) >= 0]
-        timings[name] = min(ok_vals) if ok_vals else -1.0
+        spec = registry[name]
+        t0 = time.perf_counter()
+        try:
+            df = spec.fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            timings[name] = round(time.perf_counter() - t0, 3)
+        except Exception as exc:  # noqa: BLE001 — bench must survive one bad query
+            print(f"bench: {name} failed: {exc}", file=sys.stderr)
+            timings[name] = -1.0
 
     total = round(
         sum(t for t in timings.values() if t >= 0)
@@ -557,67 +306,6 @@ def main() -> None:
     # blamed on) streaming jitter. Headline total on stdout is unchanged.
     lifecycle = {
         n: t for n, t in timings.items() if n.startswith("q_streaming_")
-    }
-    # Expected lifecycle bands (r5 VERDICT stretch 7): these queries time
-    # trigger cadence + drain + (for incremental dedup) a restart cycle,
-    # dominated by fixed ProcessingTime waits — so their wall time should
-    # sit inside a BAND, not at a point. A reading outside its band is a
-    # genuine streaming-plan regression (extra micro-batch, lost state
-    # reuse, slow recovery), not jitter. Bands derived from r4/r5 driver
-    # runs +/- observed jitter at sf0.1/local[32]; the bands only mean
-    # anything under the conditions they were calibrated at, so the
-    # out-of-band check is gated on (sf, cpus) matching — at sf0.01 or on
-    # a different box a reading outside [8, 16] s is a scale/host
-    # mismatch, not a regression, and flagging it would be a false alarm.
-    lifecycle_bands = {
-        "q_streaming_window_avg": [1.5, 5.0],
-        "q_streaming_sessionize": [1.5, 5.0],
-        # SPLIT of this band (r8 VERDICT stretch 8, so a regression in
-        # the VARIABLE part can't hide under the fixed floor): the
-        # lifecycle runs TWO full AvailableNow drains (initial corpus +
-        # incremental batch, each query start/stop ~2.5-3 s of trigger
-        # scheduling and state-store recovery) plus two idempotent
-        # batch-sink writes — a ~7-8 s fixed floor measured independent
-        # of landed volume (sf0.001 drains in ~14 s total incl. session
-        # overheads; see SCALING.md lifecycle rows). The per-row part
-        # (dedup state probes + sink rows) is the remaining 0-8 s of the
-        # band: a reading near 16 s at sf0.1 means per-row work grew
-        # ~4x, NOT that the floor moved — diagnose against the sf0.001
-        # lifecycle timing before blaming volume. Measured attribution
-        # (r11 VERDICT item 5, STREAMSTATE.json incremental_dedup_cost):
-        # bootstrap index ~2.3 s, drain ~7 s of which foreachBatch work
-        # ~6.5 s (dedup verify+accept write ~3.8, index increments
-        # ~1.1, batch prep ~1.6) and trigger overhead only ~0.5 s — the
-        # cost is real one-time index build + per-batch dedup work, not
-        # avoidable recompute, so no cross-batch caching fix applies at
-        # this batch cardinality. Floor lowered 8.0 -> 6.5 when the
-        # canonical statistic became min-of-reps (r12): the min sits
-        # ~15-25% under a typical single, and the r12 min measured
-        # 8.68 s — a reading below 6.5 would mean a drain or index
-        # stage silently stopped running, which is what the floor
-        # exists to catch.
-        "q_streaming_incremental_dedup": [6.5, 16.0],
-        # stream-stream join: per-micro-batch cost is the symmetric-hash
-        # state stores (4 per shuffle partition) checkpointing to disk,
-        # so its floor sits well above the single-store window/session
-        # lifecycles (measured 8-10 s warm, 16.5 cold at sf0.1/local[32])
-        "q_streaming_interval_join": [5.0, 18.0],
-        # same state machinery plus the watermark-close scan that emits
-        # the proven-unmatched rows
-        "q_streaming_interval_join_outer": [5.0, 18.0],
-    }
-    from bitcoinminingetl_spark.session import default_parallelism
-
-    cpus = default_parallelism()  # the session's actual local[N]
-    bands_calibration = {"sf": 0.1, "cpus": 32}
-    bands_apply = sf == bands_calibration["sf"] and cpus == bands_calibration["cpus"]
-    out_of_band = {
-        n: t
-        for n, t in lifecycle.items()
-        if bands_apply
-        and n in lifecycle_bands
-        and t >= 0
-        and not (lifecycle_bands[n][0] <= t <= lifecycle_bands[n][1])
     }
     plan_timings = {n: t for n, t in timings.items() if n not in lifecycle}
     # Full per-query timing map goes to a file on disk; the stdout line is
@@ -634,100 +322,52 @@ def main() -> None:
         # rather than whichever query alphabetically runs first
         "shared_infra": shared_infra,
         "shared_infra_total": round(sum(shared_infra.values()), 3),
-        # r13: per-label min over REPS rebuild passes (caches dropped
-        # between passes); raw per-pass totals on record like
-        # rep_plan_cost_totals. Write-once layout labels time pass 0.
-        "rep_infra_totals": rep_infra_totals,
-        "lifecycle_bands": lifecycle_bands,
-        "lifecycle_bands_calibration": {**bands_calibration, "applied": bands_apply},
-        "lifecycle_out_of_band": out_of_band,
         "plan_cost_total": round(
             sum(t for t in plan_timings.values() if t >= 0), 3
         ),
         "lifecycle_total": round(
             sum(t for t in lifecycle.values() if t >= 0), 3
         ),
-        # statistic stamp (r11 VERDICT item 1): how many full passes
-        # this artifact's per-query numbers are the min of, plus each
-        # pass's raw plan-cost total so the scatter itself is on record
-        # (the ±45% the min exists to defeat stays auditable).
-        "reps": REPS,
-        "statistic": "min" if REPS > 1 else "single",
-        "rep_plan_cost_totals": [
-            round(
-                sum(t for n, t in r.items() if t >= 0 and n not in lifecycle),
-                3,
-            )
-            for r in rep_timings
-        ],
         "sf": sf,
-        "cpus": cpus,
-        # Run-configuration stamp: an A/B arm (bench_ab_guards.py) writes
-        # this same file with guards off / oracle skipped, and nothing in
-        # the timings reveals that — so the artifact itself must say which
-        # configuration it measured. snapshot_round.py --skip-bench
-        # refuses to commit a non-canonical stamp.
-        "numeric_guards": _numeric_guards_enabled(),
-        "oracle_skipped": os.environ.get("SPARK_GRAFT_SKIP_ORACLE") == "1",
+        "cpus": default_parallelism(),  # the session's actual local[N]
         # False until the mirror phase below completes; rewritten to True
         # on success so a swallowed mirror failure (or a hard kill mid-
-        # mirror) can't masquerade as a canonical run — ORACLE_LOCAL.json
-        # would be stale from a previous tree in exactly that case. None
-        # when the mirror was deliberately skipped (the skip flag above
-        # already disqualifies the artifact).
-        "oracle_mirror_ok": (
-            None
-            if os.environ.get("SPARK_GRAFT_SKIP_ORACLE") == "1"
-            else False
-        ),
+        # mirror) stays visible — ORACLE_LOCAL.json would be stale from a
+        # previous tree in exactly that case.
+        "oracle_mirror_ok": False,
         "n_queries": len(timings),
         "n_failed": sum(1 for t in timings.values() if t < 0),
-        **_tree_stamp(),
+        **tree_stamp(Path(_REPO)),
     }
-    # Per-round budget gate (r9 VERDICT stretch 7): the bench grows every
-    # round, and ambient growth is where a pathological plan hides. The
-    # declared budget: plan_cost_total may not exceed BUDGET_FACTOR x the
-    # COMMITTED canonical total (git HEAD's BENCH_FULL — host jitter is
-    # ~1.2x on this box, so 1.5x is a real plan regression, not drift).
-    # The verdict is stamped into the artifact, printed to stderr, and
-    # the process exits 1 AFTER the compact line prints — the driver
-    # still gets its JSON, snapshot_round refuses to commit the breach.
-    full["budget"] = _budget_verdict(full["plan_cost_total"], REPS)
     (Path(_REPO) / "BENCH_FULL.json").write_text(json.dumps(full, indent=1))
 
-    # Per-round tail gate (round-3 VERDICT item 4): the external driver
-    # hash-checks only the ~50 alphabetically-first queries, so bench.py
-    # regenerates the full-registry DuckDB differential verdict at the
-    # correctness SF and writes it to ORACLE_LOCAL.json — every query in
-    # the registry gets a committed per-round pass/fail, not just the
-    # driver's window. Skippable via SPARK_GRAFT_SKIP_ORACLE=1 for pure
-    # timing runs.
-    if os.environ.get("SPARK_GRAFT_SKIP_ORACLE") != "1":
-        try:
-            from bitcoinminingetl_spark.oracle_check import run_oracle_check
+    # Full-registry oracle mirror: every registered query gets a DuckDB
+    # differential pass/fail at the correctness SF, in ORACLE_LOCAL.json.
+    try:
+        from bitcoinminingetl_spark.oracle_check import run_oracle_check
 
-            oracle_sf_dir = os.environ.get(
-                "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-            )
-            summary = run_oracle_check(spark, oracle_sf_dir)
-            summary.update(_tree_stamp())
-            (Path(_REPO) / "ORACLE_LOCAL.json").write_text(
-                json.dumps(summary, indent=1)
-            )
-            print(
-                f"oracle mirror: {summary['n_match']} match / "
-                f"{summary['n_rows_only']} rows-only / "
-                f"{summary['n_mismatch']} mismatch / "
-                f"{summary['n_spark_error'] + summary['n_oracle_error']} error"
-                f" -> ORACLE_LOCAL.json",
-                file=sys.stderr,
-            )
-            full["oracle_mirror_ok"] = True
-            (Path(_REPO) / "BENCH_FULL.json").write_text(
-                json.dumps(full, indent=1)
-            )
-        except Exception as exc:  # noqa: BLE001 — the bench line must still print
-            print(f"bench: oracle mirror failed: {exc}", file=sys.stderr)
+        oracle_sf_dir = os.environ.get(
+            "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+        )
+        summary = run_oracle_check(spark, oracle_sf_dir)
+        summary.update(tree_stamp(Path(_REPO)))
+        (Path(_REPO) / "ORACLE_LOCAL.json").write_text(
+            json.dumps(summary, indent=1)
+        )
+        print(
+            f"oracle mirror: {summary['n_match']} match / "
+            f"{summary['n_rows_only']} rows-only / "
+            f"{summary['n_mismatch']} mismatch / "
+            f"{summary['n_spark_error'] + summary['n_oracle_error']} error"
+            f" -> ORACLE_LOCAL.json",
+            file=sys.stderr,
+        )
+        full["oracle_mirror_ok"] = True
+        (Path(_REPO) / "BENCH_FULL.json").write_text(
+            json.dumps(full, indent=1)
+        )
+    except Exception as exc:  # noqa: BLE001 — the bench line must still print
+        print(f"bench: oracle mirror failed: {exc}", file=sys.stderr)
 
     compact = {
         "metric": "headline_queries_total",
@@ -741,23 +381,6 @@ def main() -> None:
     }
     print(json.dumps(compact))
     spark.stop()
-    budget = full["budget"]
-    # Only a CANONICAL run fails on breach: A/B reps (guards off /
-    # oracle skipped) run under deliberate contention and their stamp
-    # already disqualifies them from being committed — failing them
-    # would abort adjudication harnesses on host noise.
-    canonical_run = full["numeric_guards"] and not full["oracle_skipped"]
-    if budget.get("exceeded") and not budget.get("accepted_reason") and canonical_run:
-        print(
-            f"bench: BUDGET EXCEEDED — plan_cost_total "
-            f"{full['plan_cost_total']}s is {budget['ratio']}x the "
-            f"committed canonical {budget['committed_total']}s "
-            f"(limit {BUDGET_FACTOR}x). A plan regressed or the suite "
-            f"grew pathologically; adjudicate with "
-            f"scripts/bench_ab_outliers.py before snapshotting.",
-            file=sys.stderr,
-        )
-        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -38,10 +38,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-# Every dict ever passed to lru_persisted, by identity — lets the bench
-# drop ALL persist-once relations between shared-infra timing passes
-# (min-of-reps needs each pass to rebuild honestly) without hardcoding
-# the per-module cache list anywhere.
+# Every dict ever passed to lru_persisted, by identity — lets a timing
+# harness (perfbench/run.py) drop ALL persist-once relations between
+# passes, so each pass rebuilds honestly, without hardcoding the
+# per-module cache list anywhere.
 _ALL_CACHES: list[dict] = []
 
 

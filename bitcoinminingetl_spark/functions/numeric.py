@@ -11,23 +11,8 @@ decimal-free (stable across engines).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Measurement-only A/B switch (r5 VERDICT item 1): the r5 bench regressed
-# 17% round-over-round and the prime suspect was the guard doctrine below
-# (double-eval coalesce in round2/roundn, twin max(abs) aggregate in dsum).
-# SPARK_GRAFT_NUMERIC_GUARDS=0 compile-time disables every guard so
-# scripts/bench_ab_guards.py can run the identical bench twice under
-# identical conditions and attribute the delta per query. NOT a production
-# knob: with guards off, one pathological row (1e24 magnitude, NaN) would
-# crash an ANSI-mode job or silently mis-sum. Both the Spark builders and
-# their _sql oracle twins honor the flag, so even a guards-off oracle run
-# stays self-consistent.
-GUARDS = os.environ.get("SPARK_GRAFT_NUMERIC_GUARDS", "1") != "0"
-
 
 # Overflow fallback (both rounders): a magnitude past the decimal's
 # integer digits can't be quantized — under ANSI mode the cast RAISES
@@ -57,7 +42,7 @@ GUARDS = os.environ.get("SPARK_GRAFT_NUMERIC_GUARDS", "1") != "0"
 
 def round2(col: Column, *, guard: bool = True) -> Column:
     """2-dp engine-stable rounding of a double expression (Spark side)."""
-    if not guard or not GUARDS:
+    if not guard:
         return F.round(col.cast("decimal(24,6)"), 2).cast("double")
     return F.coalesce(
         F.round(col.try_cast("decimal(24,6)"), 2).cast("double"),
@@ -82,7 +67,7 @@ def _nan_masked(expr: str) -> str:
 
 def round2_sql(expr: str, *, guard: bool = True) -> str:
     """The DuckDB-side twin of :func:`round2`."""
-    if not guard or not GUARDS:
+    if not guard:
         return f"CAST(round(CAST(({expr}) AS DECIMAL(24,6)), 2) AS DOUBLE)"
     return (
         f"CAST(COALESCE(round(TRY_CAST({_nan_masked(expr)} AS DECIMAL(24,6)), 2), "
@@ -92,7 +77,7 @@ def round2_sql(expr: str, *, guard: bool = True) -> str:
 
 def roundn(col: Column, n: int, *, guard: bool = True) -> Column:
     """n-dp engine-stable rounding (similarity scores etc.)."""
-    if not guard or not GUARDS:
+    if not guard:
         return F.round(col.cast("decimal(28,12)"), n).cast("double")
     return F.coalesce(
         F.round(col.try_cast("decimal(28,12)"), n).cast("double"),
@@ -101,7 +86,7 @@ def roundn(col: Column, n: int, *, guard: bool = True) -> Column:
 
 
 def roundn_sql(expr: str, n: int, *, guard: bool = True) -> str:
-    if not guard or not GUARDS:
+    if not guard:
         return f"CAST(round(CAST(({expr}) AS DECIMAL(28,12)), {n}) AS DOUBLE)"
     return (
         f"CAST(COALESCE(round(TRY_CAST({_nan_masked(expr)} AS DECIMAL(28,12)), {n}), "
@@ -140,7 +125,7 @@ def dsum(col: Column, *, bounded: bool = False) -> Column:
     the violating element becomes NULL and is skipped — a documented,
     weaker semantic than the guarded NULL-poison, acceptable only because
     the contract says such rows cannot exist in the real schema."""
-    if bounded or not GUARDS:
+    if bounded:
         return F.sum(col.try_cast("decimal(18,4)")).cast("double")
     return F.when(
         F.max(F.abs(col)) >= _DSUM_BOUND, F.lit(None).cast("double")
@@ -148,7 +133,7 @@ def dsum(col: Column, *, bounded: bool = False) -> Column:
 
 
 def dsum_sql(expr: str, *, bounded: bool = False) -> str:
-    if bounded or not GUARDS:
+    if bounded:
         return f"CAST(sum(TRY_CAST({_nan_masked(expr)} AS DECIMAL(18,4))) AS DOUBLE)"
     return (
         f"CASE WHEN max(abs({expr})) >= {_DSUM_BOUND:g} THEN NULL "

@@ -145,8 +145,8 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     [1, 50] by TPC-H schema, 12 orders of magnitude under the dsum poison
     bound — so the max(abs) guard leg is dropped. Through Expand that leg
     is not a constant: it re-ran once per grouping set per row and was
-    the dominant term in this query's r5 2.2x regression (GUARDS_AB.json
-    attributes the cost)."""
+    the dominant term in this query's r5 2.2x regression (measured by a
+    guards-on/off bench A/B)."""
     return (
         table(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")

@@ -451,18 +451,18 @@ def q_semdedup(
         .select("id_b")
         .distinct()
     )
-    # r13 (guide §2.4 / §1.2-1): one broadcast left join + ONE aggregate
-    # replace the previous anti-join + semi-join + two groupBys + final
-    # join — `assigned` (a transform pass over the persisted embeddings)
-    # is computed 3x instead of 4x and the per-cell rollup shuffles
-    # once. Equivalent by construction: every block keeps its min id
+    # r13 (guide §2.4 / §1.2-1): one left join + ONE aggregate replace
+    # the previous anti-join + semi-join + two groupBys + final join —
+    # `assigned` (a transform pass over the persisted embeddings) is
+    # computed 3x instead of 4x and the per-cell rollup shuffles once.
+    # Equivalent by construction: every block keeps its min id
     # (id_a < id_b within a block), so no cell empties and the kept/
     # dropped split is exactly the anti/semi partition of before.
+    # `pairs` is every near-dup id in the corpus — data-proportional —
+    # so the join strategy is left to the planner, never a forced hint.
     dropped = F.col("id_b").isNotNull()
     return (
-        assigned.join(
-            F.broadcast(pairs), assigned.vec_id == pairs.id_b, "left"
-        )
+        assigned.join(pairs, assigned.vec_id == pairs.id_b, "left")
         .groupBy("cell")
         .agg(
             F.count(F.when(~dropped, 1)).alias("n_kept"),

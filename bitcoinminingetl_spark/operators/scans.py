@@ -293,9 +293,7 @@ def _z_interleave_col(d8, q8):
     FROM pb GROUP BY layout
     """,
 )
-def q_zorder_layout(
-    spark: SparkSession, sf_dir: str, *, design: str = "ntile"
-) -> DataFrame:
+def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ORDER data layout vs single-column layouts, measured by the
     statistic that decides scan cost at 100 TB: how many files a
     two-dimensional predicate must open. Parquet/Delta/Iceberg skip a
@@ -369,13 +367,10 @@ def q_zorder_layout(
         .otherwise(F.col("q"))
         .alias("key"),
     )
-    if design == "parallel":
-        bucketed = _z_parallel_ntile(lay)
-    else:
-        w = Window.partitionBy("lid").orderBy("key", *_Z_TIEBREAK)
-        bucketed = lay.select(
-            "lid", "day", "q", F.ntile(_Z_BUCKETS).over(w).alias("bucket")
-        )
+    w = Window.partitionBy("lid").orderBy("key", *_Z_TIEBREAK)
+    bucketed = lay.select(
+        "lid", "day", "q", F.ntile(_Z_BUCKETS).over(w).alias("bucket")
+    )
     pb = (
         bucketed
         .groupBy("lid", "bucket")
@@ -411,90 +406,6 @@ def q_zorder_layout(
             "avg_day_span",
             "avg_qty_span",
         )
-    )
-
-
-# Parallelism of the parallel exact-ntile design: key-range cells per
-# layout (the rank window then runs 3 x _Z_PAR_CELLS concurrent
-# partitions instead of 3).
-_Z_PAR_CELLS = 64
-
-
-def _z_parallel_ntile(lay: DataFrame) -> DataFrame:
-    """The PARALLEL exact-ntile design (r13 VERDICT item 6 — the
-    rejected-at-fixture-scale rewrite, resurrected as a measurable
-    configuration so SCALING.md can carry the decade crossover receipt
-    against the shipped 3-partition ntile; q_surrogate_key_dist's
-    sketch-bucket + prefix-sum pattern):
-
-    1. per-layout key-range cells from ONE percentile_approx sketch
-       (deterministic for identical input — the surrogate_buckets
-       doctrine; equal keys always land in the same cell, so cell order
-       extends (key, tiebreak) order exactly);
-    2. row_number within (lid, cell) — 3 x _Z_PAR_CELLS concurrent sort
-       partitions instead of the shipped design's 3;
-    3. per-cell counts -> per-layout prefix-sum offsets (a tiny
-       broadcast relation), global rank = offset + within-cell rank;
-    4. the exact ntile bucket from (rank, per-layout total): with
-       sz = n div B and big = n mod B, rows ranked <= big*(sz+1) fall in
-       the first `big` buckets of size sz+1, the rest in buckets of
-       size sz — bit-identical to ntile({_Z_BUCKETS}) semantics.
-
-    Output rows identical to the window design (planted-parity test +
-    collect-compare at sf0.01/sf0.1 in tests/receipts)."""
-    from bitcoinminingetl_spark.functions.state import ckpt
-
-    qs = [i / _Z_PAR_CELLS for i in range(1, _Z_PAR_CELLS)]
-    # accuracy 1000: the bounds only BALANCE cells (any deterministic
-    # boundary set yields exact results — cell order extends key order
-    # regardless of where the cuts land), so the sketch can be coarse
-    bounds = lay.groupBy("lid").agg(
-        F.percentile_approx("key", qs, 1000).alias("bs")
-    )
-    cell = F.lit(0)
-    for i in range(len(qs)):
-        cell = cell + (F.col("key") > F.element_at("bs", i + 1)).cast("int")
-    # the celled relation feeds three branches (counts, totals, data) —
-    # materialize it once per invocation or each branch re-runs the
-    # scan + explode + sketch join (the same honesty the shipped design
-    # gets from its single window pass)
-    celled = ckpt(
-        lay.join(F.broadcast(bounds), "lid").select(
-            "lid", "day", "q", *_Z_TIEBREAK, "key", cell.alias("cell")
-        )
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("lid", "cell").orderBy("key", *_Z_TIEBREAK)
-    )
-    counts = celled.groupBy("lid", "cell").agg(F.count(F.lit(1)).alias("cnt"))
-    offs = counts.select(
-        "lid",
-        "cell",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.partitionBy("lid")
-                .orderBy("cell")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("offset"),
-    )
-    totals = counts.groupBy("lid").agg(F.sum("cnt").alias("n"))
-    r = (F.col("offset") + rn).cast("long")
-    sz = (F.col("n") / _Z_BUCKETS).cast("long")  # n div B
-    big = F.col("n") - sz * _Z_BUCKETS  # n mod B
-    head = big * (sz + 1)  # rows living in the size-(sz+1) buckets
-    bucket = F.when(
-        r <= head, ((r - 1) / (sz + 1)).cast("long") + 1
-    ).otherwise(
-        big + F.when(sz > 0, ((r - head - 1) / sz).cast("long") + 1).otherwise(
-            F.lit(0)
-        )
-    )
-    return (
-        celled.join(F.broadcast(offs), ["lid", "cell"])
-        .join(F.broadcast(totals), "lid")
-        .select("lid", "day", "q", bucket.cast("int").alias("bucket"))
     )
 
 

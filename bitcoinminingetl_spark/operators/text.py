@@ -475,7 +475,7 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc with no text; the only defensible stat for absent text is
     NULL.
 
-    COST NOTE (r9, attributed by OUTLIERS_AB round-8 receipts): the r8
+    COST NOTE (r9, attributed by a controlled per-query A/B): the r8
     fix wrapped the zip_with gram FOLD itself in when(text IS NOT
     NULL, ...), and codegen does not subexpression-eliminate across
     conditional branches — the fold ran per output column and the plan

@@ -1,8 +1,8 @@
 """Constrained-heap skew-guard smoke (r9 VERDICT item 4).
 
-GUARDS_AB proves the df_cap / bucket-cap / cluster-cap guards cost ~2.6%
-of total TIME; nothing demonstrated they bound MEMORY — the thing a cap
-actually exists for. This harness plants the corpora the caps were
+A guards-on/off bench A/B measured the df_cap / bucket-cap /
+cluster-cap guards at ~2.6% of total TIME; nothing demonstrated they
+bound MEMORY — the thing a cap actually exists for. This harness plants the corpora the caps were
 designed against, then runs the guarded dedup/ANN family in a fresh
 subprocess pinned to a ~2 GiB driver heap on local[4]:
 
@@ -25,7 +25,7 @@ poison the next):
   blow the timeout — the demonstration that the caps are what stands
   between the guarded paths and a 2·10^8-row fan-out, not corpus luck.
 
-Writes MEMGUARD.json (committed like GUARDS_AB.json).
+Writes MEMGUARD.json (a committed receipt).
 
 Usage: python scripts/mem_smoke.py            (~2-4 min)
        python scripts/mem_smoke.py arm <name> (internal: one subprocess arm)
@@ -66,15 +66,6 @@ GUARDED = [
 UNGUARDED = "q_dedup_ngram_jaccard"  # unpruned exact twin: must die here
 ARM_TIMEOUT_S = 600
 UNGUARDED_TIMEOUT_S = 300
-
-
-def _tree_stamp() -> dict:
-    """Delegates to snapshot_round.tree_stamp — the ONE stamp
-    implementation (bench.py / window_drill.py / stream_state.py
-    doctrine; r11 VERDICT item 6 brought this receipt under it)."""
-    from scripts.snapshot_round import tree_stamp
-
-    return tree_stamp(REPO)
 
 
 def guarded_module_paths() -> set[str]:
@@ -198,6 +189,8 @@ def run_arm(name: str) -> None:
 
 
 def main() -> int:
+    from scripts.stamp import tree_stamp
+
     if len(sys.argv) > 2 and sys.argv[1] == "arm":
         run_arm(sys.argv[2])
         return 0
@@ -294,7 +287,7 @@ def main() -> int:
         # it now carries tree_commit AND tree_dirty like every other
         # artifact, and tests/test_round_hygiene.py pins the allowed
         # lag: no guarded-module code change between stamp and HEAD)
-        **_tree_stamp(),
+        **tree_stamp(REPO),
         "guarded_modules": sorted(guarded_module_paths()),
         "arms": results,
         "verdict": {

@@ -41,7 +41,7 @@ SF01_DIR = "/root/testdata/sf0.1"
 def main() -> int:
     from bitcoinminingetl_spark.oracle_check import run_oracle_check
     from bitcoinminingetl_spark.session import get_spark
-    from scripts.snapshot_round import tree_stamp
+    from scripts.stamp import tree_stamp
 
     spark = get_spark(app_name="oracle-sf01", cpus=16, shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")

@@ -37,7 +37,7 @@ Determinism doctrine (what keeps a fuzz failure a REAL divergence):
 
 Usage: python scripts/query_fuzz.py [--seed N] [--n N] [--sf-dir DIR]
 Writes FUZZ.json (seed, n, per-status counts, divergence samples, tree
-stamp via snapshot_round.tree_stamp) and exits 1 on any divergence.
+stamp via scripts/stamp.py) and exits 1 on any divergence.
 """
 
 from __future__ import annotations
@@ -930,7 +930,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from bitcoinminingetl_spark.session import get_spark
-    from scripts.snapshot_round import tree_stamp
+    from scripts.stamp import tree_stamp
 
     spark = get_spark()
     summary = run_fuzz(spark, args.sf_dir, args.seed, args.n)

@@ -215,8 +215,8 @@ AUDIT = [
     ("q_hard_negatives_lsh", LINEAR_BAND, "label-blind sign-bucket candidates; label filter at re-rank"),
     ("q_bitext_mine_lsh", LINEAR_BAND, "sign-bucket candidates + margin windows keyed by src/tgt id"),
     # r6 VERDICT item 2: the two driver-run outliers join the audit so
-    # their growth exponents are on record alongside the OUTLIERS_AB
-    # controlled-cost attribution
+    # their growth exponents are on record alongside the r6 controlled
+    # per-query cost attribution
     ("q_funnel_stages", LINEAR_BAND, "per-stage min-after-previous aggs, user_id-keyed joins — linear"),
     ("q_fingerprint_winnow", LINEAR_BAND, "rolling-min window over in-scan shingle positions, one exchange"),
     # r7 widening: the round's new operators (all sub-second at sf0.1 —
@@ -269,7 +269,7 @@ AUDIT = [
     ("q_kll_quantile_merge", LINEAR_BAND, "mergeable KLL sketch aggs, one grouped pass + |keys| blob merge"),
     # r10 hysteresis admissions: committed cost ~0.2-0.3 s but a
     # mid-round bench saw >1.0 s (host jitter — q_window_lag's identical
-    # spike was adjudicated environment drift in r9's OUTLIERS_AB);
+    # spike was adjudicated environment drift by r9's per-query A/B);
     # auditing them is cheap and keeps the >1.0 s rule jitter-proof
     ("q_try_funcs", LINEAR_BAND, "map-only try_* scalar scan, zero shuffles"),
     ("q_window_lag", LINEAR_BAND, "keyed lag window, one exchange"),

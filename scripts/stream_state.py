@@ -33,15 +33,6 @@ sys.path.insert(0, str(REPO))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _tree_stamp() -> dict:
-    """Delegates to snapshot_round.tree_stamp — the ONE stamp
-    implementation shared with bench.py and window_drill.py (r11 review
-    finding: hand-rolled copies drift)."""
-    from scripts.snapshot_round import tree_stamp
-
-    return tree_stamp(REPO)
-
-
 def _land(spark, work: str) -> str:
     """One week of events as 8 time-range JSON files -> 8 single-file
     micro-batches with a monotone watermark, so expiry is visible batch
@@ -248,6 +239,7 @@ def run_incremental_dedup_decade(spark) -> dict:
 def main() -> int:
     from bitcoinminingetl_spark.functions.state import workdir
     from bitcoinminingetl_spark.session import get_spark
+    from scripts.stamp import tree_stamp
     from tests.test_streaming import state_expiry_verdict
 
     spark = get_spark(
@@ -294,7 +286,7 @@ def main() -> int:
         if k != "legs"
     })
     spark.stop()
-    out.update(_tree_stamp())
+    out.update(tree_stamp(REPO))
     (REPO / "STREAMSTATE.json").write_text(json.dumps(out, indent=1))
     print(f"wrote {REPO / 'STREAMSTATE.json'}")
     ok = all_bounded and decade_ok

@@ -73,19 +73,12 @@ def _counts(results: dict[str, dict]) -> dict[str, int]:
     return counts
 
 
-def _tree_stamp() -> dict:
-    """Delegates to snapshot_round.tree_stamp — the ONE stamp
-    implementation shared with bench.py and stream_state.py (r11 review
-    finding: hand-rolled copies drift)."""
-    from scripts.snapshot_round import tree_stamp
-
-    return tree_stamp(REPO)
-
-
 def _emit(out: dict, results: dict[str, dict]) -> int:
+    from scripts.stamp import tree_stamp
+
     counts = _counts(results)
     out["counts"] = counts
-    out.update(_tree_stamp())
+    out.update(tree_stamp(REPO))
     out["queries"] = results
     (REPO / "WINDOW_DRILL.json").write_text(json.dumps(out, indent=1))
     bad = (

@@ -237,7 +237,6 @@ def test_embed_centroids_null_token_parity_with_oracle(spark, adv_dir):
     exercises the exact-or-NULL rendering path."""
     import duckdb
 
-    from bitcoinminingetl_spark.functions.numeric import GUARDS
     from tests.test_oracle import _canon_rows
 
     spec = REGISTRY["q_embed_centroids"]
@@ -265,14 +264,13 @@ def test_embed_centroids_null_token_parity_with_oracle(spark, adv_dir):
         o_cols, o_rows
     )
 
-    # non-vacuity: with guards on, the poisoned dimension really rendered
-    # as a "null" token at position 0 and ONLY there (no positional shift)
+    # non-vacuity: the poisoned dimension really rendered as a "null"
+    # token at position 0 and ONLY there (no positional shift)
     csv5 = next(r.centroid_csv for r in s_rows if r.label == 5)
     parts = csv5.split(",")
     assert len(parts) == 64
-    if GUARDS:
-        assert parts[0] == "null"
-        assert "null" not in parts[1:]
+    assert parts[0] == "null"
+    assert "null" not in parts[1:]
 
 
 def test_null_text_yields_null_counts_not_crash(spark, adv_dir):

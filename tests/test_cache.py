@@ -68,10 +68,10 @@ def test_distinct_keys_distinct_relations(spark):
 
 
 def test_unpersist_all_clears_every_registered_cache(spark):
-    """r13 (bench infra min-of-reps): unpersist_all must drop every
-    relation in every dict that ever passed through lru_persisted —
-    the bench relies on it between infra timing passes so later passes
-    rebuild honestly instead of timing cache hits."""
+    """unpersist_all must drop every relation in every dict that ever
+    passed through lru_persisted — perfbench/run.py relies on it between
+    timing passes so later passes rebuild honestly instead of timing
+    cache hits."""
     from bitcoinminingetl_spark.functions.cache import unpersist_all
 
     c1: dict = {}

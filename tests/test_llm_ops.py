@@ -1761,53 +1761,6 @@ def test_zorder_layout_rectangles(spark, sf_dir, tmp_path):
     assert {r.layout for r in out} == {"zorder", "linear_ship", "linear_qty"}
 
 
-def test_zorder_parallel_design_is_row_identical(spark, sf_dir, tmp_path):
-    """r13 VERDICT item 6: the parallel exact-ntile design (sketch
-    cells + prefix-sum rank — the decade-crossover arm SCALING.md
-    measures against the shipped 3-partition ntile) must produce the
-    IDENTICAL output relation: exact ntile semantics reconstructed from
-    (global rank, per-layout total), including the uneven-bucket head
-    (n mod B buckets of size sz+1) and the n < B degenerate case."""
-    ntile_rows = sorted(
-        map(tuple, REGISTRY["q_zorder_layout"].fn(spark, sf_dir).collect())
-    )
-    par_rows = sorted(
-        map(
-            tuple,
-            REGISTRY["q_zorder_layout"]
-            .fn(spark, sf_dir, design="parallel")
-            .collect(),
-        )
-    )
-    assert ntile_rows == par_rows
-    # n < _Z_BUCKETS degenerate case: every row gets its own bucket
-    from datetime import datetime, timedelta
-
-    t0 = datetime(1995, 1, 1)
-    tiny = [
-        (i + 1, 1, i + 1, i + 1, float((i * 7) % 50 + 1),
-         t0 + timedelta(days=3 * i))
-        for i in range(17)
-    ]
-    spark.createDataFrame(
-        tiny,
-        "l_orderkey long, l_linenumber int, l_partkey long, l_suppkey long,"
-        " l_quantity double, l_shipdate timestamp",
-    ).write.parquet(str(tmp_path / "lineitem.parquet"))
-    a = sorted(
-        map(tuple, REGISTRY["q_zorder_layout"].fn(spark, str(tmp_path)).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            REGISTRY["q_zorder_layout"]
-            .fn(spark, str(tmp_path), design="parallel")
-            .collect(),
-        )
-    )
-    assert a == b
-
-
 def test_kll_quantile_merge_planted(spark, tmp_path):
     """Merged-sketch quantiles track the exact percentiles of a known
     distribution within sketch error; a group living entirely on one
