@@ -1,7 +1,10 @@
-"""Shared DuckDB differential-oracle checker — the one compare
-implementation behind scripts/driver_sim.py (the verify-skill driver
-simulation), tests/test_oracle.py's semantics, and bench.py's per-round
-ORACLE_LOCAL.json artifact.
+"""Shared DuckDB differential-oracle checker. ``compare`` is the one
+implementation of the driver's compare contract; ``check_one`` runs a
+registered query through ``runner.run_query`` and compares it with its
+oracle, and ``run_oracle_check`` sweeps the registry (or a named subset)
+with it. Callers: bench.py's ORACLE_LOCAL.json mirror,
+scripts/driver_sim.py, window_drill, oracle_subset, oracle_sf01,
+query_fuzz (compare only) and perfbench's output check.
 
 Why this exists: the external driver hash-checks only the ~50
 alphabetically-first queries per round, so most of the registry would
@@ -20,9 +23,8 @@ import datetime
 import decimal
 import math
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from bitcoinminingetl_spark.catalog import TABLES
+from bitcoinminingetl_spark.runner import run_query
 
 
 def canon(v):
@@ -81,8 +83,7 @@ def check_one(spark, con, spec, sf_dir: str, oracle_memo: dict | None = None) ->
     with ``{sql: None}`` for exactly the SHARED oracle strings, so only
     twins' results are retained (memory stays bounded)."""
     try:
-        sdf = spec.fn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
+        sdf, srows, _ = run_query(spark, spec.name, spec.fn, sf_dir, "collect")
     except Exception as exc:  # noqa: BLE001 — the record carries the error
         return {"status": "spark_error", "err": str(exc)[:500]}
     if spec.oracle is None:
@@ -95,7 +96,15 @@ def check_one(spark, con, spec, sf_dir: str, oracle_memo: dict | None = None) ->
             "spark_rows": len(srows),
             "err": str(exc)[:500],
         }
-    scols = [c.lower() for c in sdf.columns]
+    return compare(sdf.columns, srows, ocols, orows)
+
+
+def compare(scols, srows, ocols, orows) -> dict:
+    """The driver's compare contract: column-name set (case-insensitive),
+    row count, and order-insensitive canonicalized values. Returns the
+    result record — status match/mismatch, row counts, and on mismatch
+    the sorted column lists plus up to 3 spark-only/oracle-only rows."""
+    scols = [c.lower() for c in scols]
     sidx = sorted(range(len(scols)), key=lambda i: scols[i])
     oidx = sorted(range(len(ocols)), key=lambda i: ocols[i])
     sset = sorted([tuple(canon(r[i]) for i in sidx) for r in srows], key=repr)
@@ -125,17 +134,18 @@ def shared_oracle_memo(registry) -> dict:
     return {sql: None for sql, c in counts.items() if c > 1}
 
 
-def run_oracle_check(spark, sf_dir: str, on_result=None) -> dict:
-    """Run the full-registry differential check; returns the summary dict
-    written to ORACLE_LOCAL.json. ``on_result(name, record)`` is called
-    per query (driver_sim uses it for live per-line output)."""
+def run_oracle_check(spark, sf_dir: str, on_result=None, names=None) -> dict:
+    """Run the differential check over ``names`` (default: the full
+    registry, sorted); returns the summary dict written to
+    ORACLE_LOCAL.json. ``on_result(name, record)`` is called per query
+    (for live per-line output)."""
     from bitcoinminingetl_spark.registry import load_all
 
     registry = load_all()
     con = duck_connect(sf_dir)
     queries: dict[str, dict] = {}
     oracle_memo = shared_oracle_memo(registry)
-    for name in sorted(registry):
+    for name in sorted(registry) if names is None else names:
         rec = check_one(spark, con, registry[name], sf_dir, oracle_memo)
         queries[name] = rec
         if on_result is not None:

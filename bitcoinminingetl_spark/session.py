@@ -18,7 +18,8 @@ _MAX_PARTITION_BYTES = str(128 * 1024 * 1024)
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -50,4 +51,22 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.mergeSchema", "false")
     )
+    return builder.getOrCreate()
+
+
+def plain_session(
+    app_name: str, cpus: int = 8, driver_memory: str | None = None
+) -> SparkSession:
+    """The external driver's plain session: Spark's default configs
+    (deliberately NOT get_spark's), 8 shuffle partitions and the UI off.
+    Tools that run under driver conditions use it to catch configs our
+    code wrongly assumes."""
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+    )
+    if driver_memory:
+        builder = builder.config("spark.driver.memory", driver_memory)
     return builder.getOrCreate()

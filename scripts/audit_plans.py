@@ -178,6 +178,7 @@ def bnlj_violation(name: str, rows: list[int]) -> str | None:
 
 def main() -> int:
     from bitcoinminingetl_spark.registry import load_all
+    from bitcoinminingetl_spark.runner import run_query
     from bitcoinminingetl_spark.session import get_spark
 
     spark = get_spark(app_name="audit-plans", cpus=4, shuffle_partitions=8)
@@ -189,13 +190,12 @@ def main() -> int:
     for name in sorted(reg):
         if name in LIFECYCLE:
             continue
-        df = reg[name].fn(spark, SF_DIR)
         # Execute the query's own QueryExecution first: AQE finalizes the
         # adaptive plan only on execution, so reading executedPlan()
         # un-executed would audit the initial plan (isFinalPlan=false) and
         # miss runtime join demotions/promotions and skew splits.
         try:
-            df.collect()
+            df, _, _ = run_query(spark, name, reg[name].fn, SF_DIR, "collect")
         except Exception as exc:  # noqa: BLE001 — audit must name the query
             violations.append(f"{name}: execution failed: {exc}")
             continue

@@ -15,8 +15,6 @@ import os
 import sys
 from pathlib import Path
 
-from pyspark.sql import SparkSession
-
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
@@ -25,14 +23,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 def main() -> int:
     from bitcoinminingetl_spark.oracle_check import run_oracle_check
+    from bitcoinminingetl_spark.session import plain_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("driver-sim")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = plain_session("driver-sim")
     spark.sparkContext.setLogLevel("ERROR")
     mod = importlib.import_module("__spark_entry__")
 

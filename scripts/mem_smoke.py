@@ -1,10 +1,10 @@
 """Constrained-heap skew-guard smoke (r9 VERDICT item 4).
 
-A guards-on/off bench A/B measured the df_cap / bucket-cap /
-cluster-cap guards at ~2.6% of total TIME; nothing demonstrated they
-bound MEMORY — the thing a cap actually exists for. This harness plants the corpora the caps were
-designed against, then runs the guarded dedup/ANN family in a fresh
-subprocess pinned to a ~2 GiB driver heap on local[4]:
+The df_cap / bucket-cap / cluster-cap guards exist to bound MEMORY,
+not time. This harness plants the corpora the caps were designed
+against, then runs the guarded dedup/ANN family in a fresh subprocess
+(the plain driver session, session.plain_session) pinned to a ~2 GiB
+driver heap on local[4], each query counted through runner.run_query:
 
 - hot-SHINGLE corpus: 20k documents that all share one boilerplate
   sentence (document frequency 20,000 — 400x the df_cap=50 stop-shingle
@@ -66,25 +66,6 @@ GUARDED = [
 UNGUARDED = "q_dedup_ngram_jaccard"  # unpruned exact twin: must die here
 ARM_TIMEOUT_S = 600
 UNGUARDED_TIMEOUT_S = 300
-
-
-def guarded_module_paths() -> set[str]:
-    """Repo-relative source files whose code this receipt certifies:
-    the modules implementing every guarded query, the unguarded
-    contrast, and this harness itself. The hygiene lag rule
-    (tests/test_round_hygiene.py::test_memguard_receipt_is_stamp_fresh)
-    allows the committed receipt to lag HEAD only by commits that touch
-    NONE of these — change one and the receipt must be regenerated."""
-    import importlib
-
-    from bitcoinminingetl_spark.registry import load_all
-
-    reg = load_all()
-    paths = {"scripts/mem_smoke.py"}
-    for q in [*GUARDED, UNGUARDED]:
-        mod = importlib.import_module(reg[q].fn.__module__)
-        paths.add(str(Path(mod.__file__).resolve().relative_to(REPO)))
-    return paths
 
 
 def build_corpus() -> None:
@@ -157,34 +138,17 @@ def build_corpus() -> None:
 def run_arm(name: str) -> None:
     """One subprocess arm under the constrained heap. Prints one JSON
     line per query to stdout; the parent collects them."""
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"mem-smoke-{name}")
-        .config("spark.driver.memory", HEAP)
-        .config("spark.sql.shuffle.partitions", str(CPUS * 2))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     from bitcoinminingetl_spark.registry import load_all
+    from bitcoinminingetl_spark.runner import run_query
+    from bitcoinminingetl_spark.session import plain_session
 
+    spark = plain_session(f"mem-smoke-{name}", cpus=CPUS, driver_memory=HEAP)
+    spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
     queries = GUARDED if name == "guarded" else [UNGUARDED]
     for q in queries:
-        t0 = time.perf_counter()
-        n = registry[q].fn(spark, str(CORPUS)).count()
-        print(
-            json.dumps(
-                {
-                    "query": q,
-                    "rows": n,
-                    "sec": round(time.perf_counter() - t0, 2),
-                }
-            ),
-            flush=True,
-        )
+        _, n, sec = run_query(spark, q, registry[q].fn, str(CORPUS), "count")
+        print(json.dumps({"query": q, "rows": n, "sec": round(sec, 2)}), flush=True)
     spark.stop()
 
 
@@ -282,13 +246,9 @@ def main() -> int:
             "labels": 1,
             "unguarded_pair_bound": N_DOCS * (N_DOCS - 1) // 2,
         },
-        # the ONE shared stamp implementation (r11 VERDICT item 6:
-        # MEMGUARD was the only receipt outside the stamp contract —
-        # it now carries tree_commit AND tree_dirty like every other
-        # artifact, and tests/test_round_hygiene.py pins the allowed
-        # lag: no guarded-module code change between stamp and HEAD)
+        # the ONE shared stamp implementation: tree_commit and
+        # tree_dirty, like every other receipt
         **tree_stamp(REPO),
-        "guarded_modules": sorted(guarded_module_paths()),
         "arms": results,
         "verdict": {
             "guarded_completed_under_heap": guarded_ok,

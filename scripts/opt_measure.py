@@ -1,9 +1,11 @@
 """Per-query A/B measurement + plan capture for optimization rounds.
 
 Times a named subset of registry queries in ONE warm session (same
-methodology as bench.py: noop sink, page-cache warmup, shared-infra
-prebuild so family members measure warm plan cost) and optionally dumps
-each query's .explain("formatted") to plans/<tag>/<query>_<suffix>.txt.
+methodology as bench.py: noop sink through runner.run_query after
+runner.warm) and optionally dumps each query's .explain("formatted") to
+plans/<tag>/<query>_<suffix>.txt. One untimed pass of the targets runs
+before the timed reps, so every persisted relation they read is built
+before the first timed rep and family members measure warm plan cost.
 
 Usage:
   python scripts/opt_measure.py --queries q_a,q_b --reps 3 \
@@ -19,15 +21,14 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from bitcoinminingetl_spark.catalog import table  # noqa: E402
 from bitcoinminingetl_spark.registry import load_all  # noqa: E402
+from bitcoinminingetl_spark.runner import run_query, warm  # noqa: E402
 from bitcoinminingetl_spark.session import get_spark  # noqa: E402
 
 
@@ -41,11 +42,6 @@ def main() -> None:
     )
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--suffix", default="before")
-    ap.add_argument(
-        "--skip-infra",
-        action="store_true",
-        help="skip the shared-infra prebuild (for queries outside the families)",
-    )
     args = ap.parse_args()
     names = [n for n in args.queries.split(",") if n]
 
@@ -56,70 +52,13 @@ def main() -> None:
 
     spark = get_spark(app_name="opt-measure")
     spark.sparkContext.setLogLevel("ERROR")
+    warm(spark, args.sf_dir)
 
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        try:
-            table(spark, args.sf_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:  # noqa: BLE001
-            pass
-
-    if not args.skip_infra:
-        from bitcoinminingetl_spark.operators import corpus_ops as _corpus
-        from bitcoinminingetl_spark.operators import dedup as _dedup
-        from bitcoinminingetl_spark.operators import text as _text
-
-        for build in (
-            lambda: _dedup.shingle_index(spark, args.sf_dir),
-            lambda: _dedup.normed_embeddings(spark, args.sf_dir),
-            lambda: _dedup.shingle_index(spark, args.sf_dir, n=_corpus._DECON_N),
-            lambda: _dedup.pair_overlaps(spark, args.sf_dir),
-            lambda: _dedup.simhash_tokens(spark, args.sf_dir),
-            lambda: _dedup.pair_overlaps(spark, args.sf_dir, df_cap=_dedup._DF_CAP),
-            lambda: _text.ccnet_scored(spark, args.sf_dir),
-        ):
-            try:
-                build().write.format("noop").mode("overwrite").save()
-            except Exception:  # noqa: BLE001
-                pass
-        from bitcoinminingetl_spark.operators import (
-            reference_pipeline as _refpipe,
-        )
-
-        # optional shared relations added during r13 live behind getattr so
-        # this script also runs on the pre-optimization tree
-        for extra in (
-            "span_grams",
-            "span_dup_grams",
-            "shingle_strings",
-            "shingle_sets",
-            "surrogate_buckets",
-            "bm25_tf",
-        ):
-            fn = (
-                getattr(_dedup, extra, None)
-                or getattr(_corpus, extra, None)
-                or getattr(_refpipe, extra, None)
-                or getattr(_text, extra, None)
-            )
-            if fn is not None:
-                try:
-                    fn(spark, args.sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception:  # noqa: BLE001
-                    pass
-
-    # one untimed warmup pass of the targets themselves (JIT/codegen)
+    # one untimed warmup pass of the targets themselves (JIT/codegen and
+    # the persist-once relations they read)
     for n in names:
         try:
-            registry[n].fn(spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            run_query(spark, n, registry[n].fn, args.sf_dir)
         except Exception as exc:  # noqa: BLE001
             print(f"warmup {n} failed: {exc}", file=sys.stderr)
 
@@ -133,18 +72,13 @@ def main() -> None:
                 df.explain("formatted")
             (plans_dir / f"{n}_{args.suffix}.txt").write_text(buf.getvalue())
 
-    reps: list[dict[str, float]] = []
-    for _ in range(args.reps):
-        t_rep: dict[str, float] = {}
-        for n in names:
-            spark.sparkContext.setJobDescription(f"opt_measure:{n}")
-            t0 = time.perf_counter()
-            registry[n].fn(spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t_rep[n] = round(time.perf_counter() - t0, 3)
-            spark.sparkContext.setJobDescription(None)
-        reps.append(t_rep)
+    reps = [
+        {
+            n: round(run_query(spark, n, registry[n].fn, args.sf_dir)[2], 3)
+            for n in names
+        }
+        for _ in range(args.reps)
+    ]
 
     out = {
         "queries": {n: min(r[n] for r in reps) for n in names},

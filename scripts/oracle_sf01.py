@@ -43,7 +43,7 @@ def main() -> int:
     from bitcoinminingetl_spark.session import get_spark
     from scripts.stamp import tree_stamp
 
-    spark = get_spark(app_name="oracle-sf01", cpus=16, shuffle_partitions=32)
+    spark = get_spark(app_name="oracle-sf01")
     spark.sparkContext.setLogLevel("ERROR")
 
     def report(name: str, rec: dict) -> None:

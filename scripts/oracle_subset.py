@@ -18,11 +18,7 @@ def main() -> int:
     names = [n for n in sys.argv[1].split(",") if n]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
-    from bitcoinminingetl_spark.oracle_check import (
-        check_one,
-        duck_connect,
-        shared_oracle_memo,
-    )
+    from bitcoinminingetl_spark.oracle_check import run_oracle_check
     from bitcoinminingetl_spark.registry import load_all
     from bitcoinminingetl_spark.session import get_spark
 
@@ -33,16 +29,15 @@ def main() -> int:
 
     spark = get_spark(app_name="oracle-subset")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duck_connect(sf_dir)
-    memo = shared_oracle_memo(registry)
-    bad = 0
-    for n in names:
-        rec = check_one(spark, con, registry[n], sf_dir, memo)
-        print(f"{n}: {rec['status']} ({rec.get('spark_rows')} rows)")
+
+    def report(name: str, rec: dict) -> None:
+        print(f"{name}: {rec['status']} ({rec.get('spark_rows')} rows)")
         if rec["status"] not in ("match", "rows_only"):
-            bad += 1
             print("  ", {k: rec.get(k) for k in ("spark_only", "oracle_only", "err")})
+
+    summary = run_oracle_check(spark, sf_dir, on_result=report, names=names)
     spark.stop()
+    bad = summary["n_mismatch"] + summary["n_spark_error"] + summary["n_oracle_error"]
     print("RESULT:", "OK" if bad == 0 else f"{bad} FAILURES")
     return 0 if bad == 0 else 1
 

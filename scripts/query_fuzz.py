@@ -14,7 +14,7 @@ compiles every generated query BOTH ways:
 - to a **DuckDB SQL string**,
 
 then value-hash-compares the two with the driver's own canonicalization
-(`oracle_check.canon`: column-name set, row count, order-insensitive
+(`oracle_check.compare`: column-name set, row count, order-insensitive
 9-dp-rounded values — exactly the external driver's contract).
 
 r13 grammar widening (second pass, same determinism doctrine): ROLLUP /
@@ -52,7 +52,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from pyspark.sql import Column, DataFrame, Window  # noqa: E402
+from pyspark.sql import Column, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from bitcoinminingetl_spark.functions.numeric import (  # noqa: E402
@@ -61,7 +61,11 @@ from bitcoinminingetl_spark.functions.numeric import (  # noqa: E402
     dsum,
     dsum_sql,
 )
-from bitcoinminingetl_spark.oracle_check import canon, duck_connect  # noqa: E402
+from bitcoinminingetl_spark.oracle_check import (  # noqa: E402
+    compare,
+    duck_connect,
+    fetch_oracle,
+)
 
 # ---------------------------------------------------------------------------
 # typed column catalog — the grammar's terminals. dtypes: int (exact
@@ -840,36 +844,6 @@ class Gen:
         return build, sql
 
 
-def compare(sdf: DataFrame, con, sql: str) -> dict:
-    """The driver's compare contract (oracle_check.check_one's core),
-    applied to one generated query."""
-    srows = [tuple(r) for r in sdf.collect()]
-    res = con.execute(sql)
-    ocols = [d[0].lower() for d in res.description]
-    orows = res.fetchall()
-    scols = [c.lower() for c in sdf.columns]
-    sidx = sorted(range(len(scols)), key=lambda i: scols[i])
-    oidx = sorted(range(len(ocols)), key=lambda i: ocols[i])
-    sset = sorted([tuple(canon(r[i]) for i in sidx) for r in srows], key=repr)
-    oset = sorted([tuple(canon(r[i]) for i in oidx) for r in orows], key=repr)
-    ok = (
-        sorted(scols) == sorted(ocols)
-        and len(srows) == len(orows)
-        and sset == oset
-    )
-    rec = {
-        "status": "match" if ok else "mismatch",
-        "spark_rows": len(srows),
-        "oracle_rows": len(orows),
-    }
-    if not ok:
-        rec["spark_cols"] = sorted(scols)
-        rec["oracle_cols"] = sorted(ocols)
-        rec["spark_only"] = [repr(r) for r in sset if r not in oset][:3]
-        rec["oracle_only"] = [repr(r) for r in oset if r not in sset][:3]
-    return rec
-
-
 def run_fuzz(spark, sf_dir: str, seed: int, n: int) -> dict:
     con = duck_connect(sf_dir)
     pools = _lit_pools(con)
@@ -889,7 +863,9 @@ def run_fuzz(spark, sf_dir: str, seed: int, n: int) -> dict:
         build, sql = q
         made += 1
         try:
-            rec = compare(build(env), con, sql)
+            sdf = build(env)
+            srows = sdf.collect()
+            rec = compare(sdf.columns, srows, *fetch_oracle(con, sql))
         except Exception as exc:  # noqa: BLE001 — recorded per query
             statuses["error"] += 1
             divergences.append(

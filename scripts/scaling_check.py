@@ -17,8 +17,7 @@ are listed with their declared exponent and audited against THAT bound
 instead: the point is no query grows faster than its plan claims.
 
 Every timing is the per-cell MIN over TIMING_REPS FULL PASSES of the
-audit (r12, the bench's min-of-reps doctrine applied here): an alpha is
-a ratio of two timings, so single-run host noise (±40% on this box)
+audit (r12): an alpha is a ratio of two timings, so single-run host noise (±40% on this box)
 lands directly in the exponent — q_semdedup's decade read anywhere in
 1.3-1.45 across runs of identical code. Pass-level, NOT back-to-back
 per-query reps: many audited queries read session-persisted relations
@@ -42,11 +41,12 @@ from __future__ import annotations
 
 import math
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+
+from bitcoinminingetl_spark.runner import run_query, warm  # noqa: E402
 
 SF_DIRS = [
     ("/root/testdata/sf0.001", 0.001),
@@ -60,8 +60,8 @@ TIMING_REPS = 2
 
 
 def _min_over_passes(spark, cells, run_cell) -> tuple[dict, dict]:
-    """Per-cell min wall time over TIMING_REPS full passes of `cells`
-    in their given order, with spark.catalog.clearCache() between
+    """Per-cell min wall time (run_cell's return value) over TIMING_REPS
+    full passes of `cells` in their given order, with spark.catalog.clearCache() between
     passes so every pass pays (and amortizes) the same persisted-
     relation builds — see the module docstring for why back-to-back
     per-cell reps would instead time cached reads.
@@ -81,9 +81,7 @@ def _min_over_passes(spark, cells, run_cell) -> tuple[dict, dict]:
             file=sys.stderr,
         )
         for key in cells:
-            t0 = time.perf_counter()
-            run_cell(key)
-            dt = time.perf_counter() - t0
+            dt = run_cell(key)
             all_times[key].append(dt)
             if dt < best.get(key, float("inf")):
                 best[key] = dt
@@ -418,26 +416,17 @@ def run_decade(registry) -> list[tuple]:
     both legs equally."""
     import scripts.make_sf1 as make_sf1
 
-    from bitcoinminingetl_spark.catalog import table
     from bitcoinminingetl_spark.session import get_spark
 
     sf1_dir = str(make_sf1.ensure())
-    spark = get_spark(
-        app_name="scaling-decade", cpus=16, shuffle_partitions=32
-    )
+    spark = get_spark(app_name="scaling-decade")
     spark.sparkContext.setLogLevel("ERROR")
-    for t in ("lineitem", "documents", "embeddings"):
-        for d in (SF_DIRS[2][0], sf1_dir):
-            table(spark, d, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
+    warm(spark, SF_DIRS[2][0], sf1_dir)
     for name, _bound, _why in DECADE_AUDIT:
         # warm BOTH leg configurations (a DECADE_RUNNERS hi leg can
         # carry its own plan — e.g. the scaled-k fit-sample variant)
         for leg in ("lo", "hi"):
-            _decade_fn(registry, name, leg)(spark, SF_DIRS[1][0]).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            run_query(spark, name, _decade_fn(registry, name, leg), SF_DIRS[1][0])
 
     leg_dirs = {"lo": SF_DIRS[2][0], "hi": sf1_dir}
     cells = [
@@ -448,12 +437,9 @@ def run_decade(registry) -> list[tuple]:
     timings, decade_all_times = _min_over_passes(
         spark,
         cells,
-        lambda cell: _decade_fn(registry, cell[0], cell[1])(
-            spark, leg_dirs[cell[1]]
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda cell: run_query(
+            spark, cell[0], _decade_fn(registry, cell[0], cell[1]), leg_dirs[cell[1]]
+        )[2],
     )
     decade_rows = []
     for name, bound, why in DECADE_AUDIT:
@@ -486,21 +472,10 @@ def main() -> int:
         if not ok
     ]
 
-    spark = get_spark(app_name="scaling-check", cpus=16, shuffle_partitions=32)
+    spark = get_spark(app_name="scaling-check")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm page cache + JVM so timings measure plan cost (bench.py doctrine)
-    from bitcoinminingetl_spark.catalog import table
-
-    for sf_dir, _ in SF_DIRS:
-        for t in (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings"
-        ).split():
-            table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    registry["q_window_join"].fn(spark, SF_DIRS[0][0]).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    # warm page cache + JVM so timings measure plan cost
+    warm(spark, *(sf_dir for sf_dir, _ in SF_DIRS))
 
     audit_cells = [
         (name, sf_dir)
@@ -510,10 +485,7 @@ def main() -> int:
     audit_timings, audit_all_times = _min_over_passes(
         spark,
         audit_cells,
-        lambda cell: registry[cell[0]].fn(spark, cell[1])
-        .write.format("noop")
-        .mode("overwrite")
-        .save(),
+        lambda cell: run_query(spark, cell[0], registry[cell[0]].fn, cell[1])[2],
     )
     rows = []
     for name, bound, why in AUDIT:
@@ -551,8 +523,8 @@ def main() -> int:
         "drain + sink read-back): a FIXED trigger/recovery floor dominates",
         "at these scales, so alpha well under 1 is the expected shape — the",
         "audit exists to catch a lifecycle growing FASTER than its landed",
-        "volume (state leak, per-batch re-scan), and the fixed-vs-variable",
-        "split is documented at the band definition in bench.py.",
+        "volume (state leak, per-batch re-scan); bench.py reports their",
+        "timings apart from plan cost (`lifecycle_queries`).",
         "",
         "| query | sf0.001 s | sf0.01 s | sf0.1 s | alpha | bound | verdict | plan claim |",
         "|---|---|---|---|---|---|---|---|",

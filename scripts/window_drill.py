@@ -30,40 +30,23 @@ SF_DIR = "/root/testdata/sf0.01"
 DRIVER_WINDOW = 50
 
 
-def _fresh_session():
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("window-drill")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
-def _run_window(registry, window: list[str]) -> dict[str, dict]:
+def _run_window(window: list[str]) -> dict[str, dict]:
     """One driver-shaped pass: fresh plain SparkSession + fresh DuckDB
     connection, torn down after — the same cold-start conditions the
     driver gives each round's correctness run."""
-    from bitcoinminingetl_spark.oracle_check import (
-        check_one,
-        duck_connect,
-        shared_oracle_memo,
-    )
+    from bitcoinminingetl_spark.oracle_check import run_oracle_check
+    from bitcoinminingetl_spark.session import plain_session
 
-    spark = _fresh_session()
-    con = duck_connect(SF_DIR)
-    memo = shared_oracle_memo(registry)
-    results: dict[str, dict] = {}
-    for name in window:
-        rec = check_one(spark, con, registry[name], SF_DIR, memo)
-        results[name] = rec
-        print(f"{name}: {rec['status']}", flush=True)
+    spark = plain_session("window-drill")
+    spark.sparkContext.setLogLevel("ERROR")
+    summary = run_oracle_check(
+        spark,
+        SF_DIR,
+        on_result=lambda name, rec: print(f"{name}: {rec['status']}", flush=True),
+        names=window,
+    )
     spark.stop()
-    return results
+    return summary["queries"]
 
 
 def _counts(results: dict[str, dict]) -> dict[str, int]:
@@ -110,7 +93,7 @@ def main() -> int:
                 f"[{window[0]} .. {window[-1]}] ---",
                 flush=True,
             )
-            wres = _run_window(registry, window)
+            wres = _run_window(window)
             results.update(wres)
             meta.append(
                 {
@@ -135,7 +118,7 @@ def main() -> int:
     if not window:
         print(f"no queries at or after {start!r}")
         return 1
-    results = _run_window(registry, window)
+    results = _run_window(window)
     out = {
         "metric": "window_drill",
         "mode": "single_window",

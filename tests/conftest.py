@@ -32,14 +32,8 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    import duckdb
+    from bitcoinminingetl_spark.oracle_check import duck_connect
 
-    from bitcoinminingetl_spark.catalog import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duck_connect(sf_dir)
     yield con
     con.close()
