@@ -28,7 +28,6 @@ from bitcoinminingetl_spark.functions.numeric import (
     roundn,
     roundn_sql,
 )
-from bitcoinminingetl_spark.functions.state import ckpt
 from bitcoinminingetl_spark.registry import query
 
 
@@ -752,9 +751,7 @@ _RESAMPLE_AGG_CACHE: dict[str, DataFrame] = {}
     FROM anno
     """,
 )
-def q_resample_interpolate(
-    spark: SparkSession, sf_dir: str, *, materialize: str = "persist"
-) -> DataFrame:
+def q_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regular-grid resampling with linear interpolation — the reference's
     previous-window fallback (R10, load.py:17-25) generalized from "reuse
     the last value" to "reconstruct the missing bucket from both
@@ -789,30 +786,23 @@ def q_resample_interpolate(
     # persist shares the in-memory aggregate between the two consumers
     # lazily. Confirmed at local[32] interleaved (5 reps): persist
     # 1.40/1.74 vs ckpt 1.52/1.78 — the occasional >4 s bench reading is
-    # first-touch position noise, not plan cost. "ckpt" stays available
-    # for sessions with a reliable checkpoint dir where surviving
-    # executor loss matters more than the copy (see functions/state.ckpt).
-    agg = (
-        table(spark, sf_dir, "events")
-        .groupBy("event_type", bucket.alias("bucket"))
-        .agg(davg(F.col("value")).alias("v"))
+    # first-touch position noise, not plan cost.
+    #
+    # Persist-once per (session, corpus) with bounded LRU eviction — the
+    # shared pattern of functions/cache.py (shingle index, normed
+    # embeddings). A bare .persist() per invocation leaked one
+    # never-unpersisted relation per call into the block manager (bench
+    # reps, scaling sweeps); immutable-input assumption documented in the
+    # helper module.
+    agg = lru_persisted(
+        _RESAMPLE_AGG_CACHE,
+        f"{spark.sparkContext.applicationId}:{sf_dir}",
+        lambda: (
+            table(spark, sf_dir, "events")
+            .groupBy("event_type", bucket.alias("bucket"))
+            .agg(davg(F.col("value")).alias("v"))
+        ),
     )
-    if materialize == "persist":
-        # Persist-once per (session, corpus) with bounded LRU eviction —
-        # the shared pattern of functions/cache.py (shingle index, normed
-        # embeddings). A bare .persist() per invocation leaked one
-        # never-unpersisted relation per call into the block manager
-        # (bench reps, scaling sweeps); immutable-input assumption
-        # documented in the helper module.
-        base = agg
-        agg = lru_persisted(
-            _RESAMPLE_AGG_CACHE,
-            f"{spark.sparkContext.applicationId}:{sf_dir}",
-            lambda: base,
-        )
-    elif materialize == "ckpt":
-        agg = ckpt(agg, eager=False)
-    # materialize == "none": recompute — two fact scans, never right at scale
     spine = (
         agg.groupBy("event_type")
         .agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))

@@ -21,6 +21,12 @@ from bitcoinminingetl_spark.catalog import table
 from bitcoinminingetl_spark.functions.cache import lru_persisted
 from bitcoinminingetl_spark.functions.numeric import roundn, roundn_sql
 from bitcoinminingetl_spark.functions.state import ckpt
+from bitcoinminingetl_spark.functions.vectors import (
+    DOT_SQL,
+    dot,
+    norm_sql,
+    usable_norm_sql,
+)
 from bitcoinminingetl_spark.operators.dedup import (
     near_dup_pairs,
     NGRAM_PAIRS_ORACLE,
@@ -803,37 +809,21 @@ _SEMDECON_THRESHOLD = 0.25  # tuned to the synthetic embedding spread
     oracle=f"""
     WITH hits AS (
         SELECT a.vec_id,
-               {{dot}} / ({{na}} * {{nb}}) AS cosine
+               {DOT_SQL} / ({norm_sql("a")} * {norm_sql("b")}) AS cosine
         FROM embeddings a
         JOIN embeddings b
           ON a.label = b.label
          AND b.vec_id % 10 = 0
          AND a.vec_id % 10 != 0
-        WHERE isfinite({{na}}) AND {{na}} > 0
-          AND isfinite({{nb}}) AND {{nb}} > 0
+        WHERE {usable_norm_sql("a")} AND {usable_norm_sql("b")}
     )
     SELECT vec_id,
            CAST(count(*) AS BIGINT) AS n_eval_hits,
-           {{maxcos}} AS max_cosine
+           {roundn_sql("max(cosine)", 6, guard=False)} AS max_cosine
     FROM hits
     WHERE cosine >= {_SEMDECON_THRESHOLD}
     GROUP BY vec_id
-    """.format(
-        dot=(
-            "list_reduce(list_transform(generate_series(1, len(a.embedding)), "
-            "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), "
-            "(x, y) -> x + y)"
-        ),
-        na=(
-            "sqrt(list_reduce(list_transform(CAST(a.embedding AS DOUBLE[]), "
-            "v -> v * v), (x, y) -> x + y))"
-        ),
-        nb=(
-            "sqrt(list_reduce(list_transform(CAST(b.embedding AS DOUBLE[]), "
-            "v -> v * v), (x, y) -> x + y))"
-        ),
-        maxcos="CAST(round(CAST(max(cosine) AS DECIMAL(28,12)), 6) AS DOUBLE)",
-    ),
+    """,
 )
 def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic train/eval decontamination — the embedding-space
@@ -852,14 +842,14 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed O(n) before the join. The eval side is a small fraction of
     the corpus by construction, so at scale it BROADCASTS and the check
     is a map-side pass over the training scan."""
-    from bitcoinminingetl_spark.operators.dedup import _dot, normed_embeddings
+    from bitcoinminingetl_spark.operators.dedup import normed_embeddings
 
     # normed load: zero-norm vectors are excluded (cosine undefined;
     # ANSI division would kill the job) — see dedup.normed_embeddings
     emb = normed_embeddings(spark, sf_dir)
     train = emb.filter(F.col("vec_id") % 10 != 0).alias("a")
     ev = emb.filter(F.col("vec_id") % 10 == 0).alias("b")
-    cos = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
+    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
         F.col("a.norm") * F.col("b.norm")
     )
     return (

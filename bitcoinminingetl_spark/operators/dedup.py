@@ -18,13 +18,23 @@ Scale architecture (the 100 TB story):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bitcoinminingetl_spark.catalog import table
 from bitcoinminingetl_spark.functions.cache import lru_persisted
 from bitcoinminingetl_spark.functions.numeric import roundn, roundn_sql
+from bitcoinminingetl_spark.functions.vectors import (
+    COSINE_SQL,
+    MD5_Q_SCALE,
+    cosine,
+    md5_bucket_sql,
+    md5_planes,
+    norm,
+    quantize_sql,
+    sign_bucket_udf,
+    usable_norm_sql,
+)
 from bitcoinminingetl_spark.registry import query
 
 _NGRAM = 3
@@ -990,50 +1000,6 @@ _COSINE_THRESHOLD = 0.35
 # amplification is tuned for (recall math in q_dedup_embed_cosine_lsh).
 _COSINE_LSH_THRESHOLD = 0.9
 
-# Left-fold dot product, identical evaluation order to Spark's
-# zip_with + aggregate, so the doubles match bit-for-bit pre-rounding.
-_DOT_SQL = (
-    "list_reduce(list_transform(generate_series(1, len(a.embedding)), "
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), "
-    "(x, y) -> x + y)"
-)
-
-
-def _norm_sql(side: str) -> str:
-    return (
-        f"sqrt(list_reduce(list_transform(CAST({side}.embedding AS DOUBLE[]), "
-        "v -> v * v), (x, y) -> x + y))"
-    )
-
-
-def _usable_norm_sql(side: str) -> str:
-    """Oracle-side mirror of normed_embeddings' corrupt-vector
-    exclusion: finite positive norm. Without it a NaN-component vector
-    sails through the oracle's cosine filter — DuckDB (like Spark)
-    compares NaN GREATER than any threshold — and every oracle pair set
-    grows phantom corrupt pairs the Spark side excludes by doctrine
-    (r8 adversarial sweep)."""
-    return f"(isfinite({_norm_sql(side)}) AND {_norm_sql(side)} > 0)"
-
-
-def _dot(x: Column, y: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(x: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(x, lambda v: v.cast("double") * v.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 _NORMED_EMB_CACHE: dict[str, DataFrame] = {}
 
 
@@ -1066,7 +1032,7 @@ def normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         key,
         lambda: (
             table(spark, sf_dir, "embeddings")
-            .withColumn("norm", _norm(F.col("embedding")))
+            .withColumn("norm", norm(F.col("embedding")))
             .filter(
                 (F.col("norm") > 0) & (F.col("norm") < F.lit(float("inf")))
             )
@@ -1081,8 +1047,8 @@ _EMB_LSH_SEED = 11
 
 def _emb_planes(dims: int = 64):
     """Deterministic hyperplanes for the near-dup sub-buckets: TABLES
-    independent tables of BITS sign planes each (seeded numpy), embedded
-    as plan literals so they broadcast by construction."""
+    independent tables of BITS sign planes each (seeded numpy), shipped
+    in the bucket UDF's closure so they broadcast by construction."""
     import numpy as np
 
     rng = np.random.default_rng(_EMB_LSH_SEED)
@@ -1094,11 +1060,10 @@ def _emb_planes(dims: int = 64):
     oracle=f"""
     WITH pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
-               {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-                   AS cosine
+               {COSINE_SQL} AS cosine
         FROM embeddings a JOIN embeddings b
           ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE {_usable_norm_sql("a")} AND {_usable_norm_sql("b")}
+        WHERE {usable_norm_sql("a")} AND {usable_norm_sql("b")}
     )
     SELECT * FROM pairs WHERE cosine >= {_COSINE_THRESHOLD}
     """,
@@ -1133,18 +1098,11 @@ def q_dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("emb_b"),
         F.col("norm").alias("norm_b"),
     )
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))
+    cos = cosine("emb_a", "emb_b", "norm_a", "norm_b")
     return (
         a.join(b, on="label")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            "label",
-            # guard=False: zero norms filtered upstream so cosine is a
-            # finite [-1,1] — keeps the HOF dot product single-eval
-            roundn(cos, 6, guard=False).alias("cosine"),
-        )
+        .select("vec_a", "vec_b", "label", cos.alias("cosine"))
         .filter(F.col("cosine") >= _COSINE_THRESHOLD)
     )
 
@@ -1185,44 +1143,24 @@ def dedup_embed_cosine_lsh(
     one-sided error direction.
 
     ``bucket_udf`` swaps the sign-plane assignment (default: the seeded
-    float planes below) so the md5-quantized oracle twin
-    (q_dedup_embed_cosine_lsh_md5) runs the IDENTICAL plan — the same
-    parametrization _knn_lsh_pairs uses. ``require_label`` drops
-    NULL-label vectors up front: struct-grouping puts NULL labels in
-    ONE sub-bucketed block (production behavior — unlabeled vectors
-    still dedup against each other), but the oracle-hashed twins join
-    blocks with SQL equality where NULL ≠ NULL, so the twin excludes
-    them to keep both engines on the exact twin's equality semantics."""
-    from pyspark.sql.functions import pandas_udf
-
+    float planes of _emb_planes) so the md5-quantized oracle twin
+    (q_dedup_embed_cosine_lsh_md5) runs the IDENTICAL plan.
+    ``require_label`` drops NULL-label vectors up front: struct-grouping
+    puts NULL labels in ONE sub-bucketed block (production behavior —
+    unlabeled vectors still dedup against each other), but the
+    oracle-hashed twins join blocks with SQL equality where NULL ≠ NULL,
+    so the twin excludes them to keep both engines on the exact twin's
+    equality semantics."""
     emb = normed_embeddings(spark, sf_dir)
     if require_label:
         emb = emb.filter(F.col("label").isNotNull())
-
-    if bucket_udf is None:
-
-        @pandas_udf("array<long>")
-        def lsh_buckets(embedding: pd.Series) -> pd.Series:
-            # All TABLES×BITS plane projections in ONE numpy matmul per
-            # Arrow batch — the HOF-per-plane form evaluates 24
-            # interpreted array aggregates per row and benches ~5×
-            # slower at sf0.1.
-            import numpy as np
-
-            planes = np.asarray(_emb_planes())  # (T, B, D)
-            t, b, d = planes.shape
-            x = np.vstack(embedding.to_numpy())  # (n, D)
-            bits = (x @ planes.reshape(t * b, d).T) >= 0  # (n, T*B)
-            buckets = bits.reshape(len(x), t, b) @ (1 << np.arange(b))
-            return pd.Series(list(buckets.astype("int64")))
-
-        bucket_udf = lsh_buckets
+    bucket_of = bucket_udf or sign_bucket_udf(_emb_planes(), _EMB_LSH_BITS)
 
     bands = (
         emb.select(
             F.col("vec_id").alias("doc_id"),
             "label",
-            F.posexplode(bucket_udf(F.col("embedding"))).alias("band", "bucket"),
+            F.posexplode(bucket_of(F.col("embedding"))).alias("band", "bucket"),
         )
         .select(
             "doc_id",
@@ -1244,18 +1182,11 @@ def dedup_embed_cosine_lsh(
         F.col("embedding").alias("emb_b"),
         F.col("norm").alias("norm_b"),
     )
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))
+    cos = cosine("emb_a", "emb_b", "norm_a", "norm_b")
     return (
         cand.join(a, on="vec_a")
         .join(b, on="vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            "label",
-            # guard=False: zero norms filtered upstream so cosine is a
-            # finite [-1,1] — keeps the HOF dot product single-eval
-            roundn(cos, 6, guard=False).alias("cosine"),
-        )
+        .select("vec_a", "vec_b", "label", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -1282,75 +1213,7 @@ def q_dedup_embed_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- md5-quantized twin of the sub-bucket machinery ----------------------
 
-# Quantization scale for the md5-plane twin (the q_knn_join_lsh_md5
-# doctrine, similarity.py): one double multiply + floor per element —
-# IEEE-identical in numpy and DuckDB — then every bucket dot is exact
-# int64 (max |dot| ~ 64 dims * 1e6 * 128 ≈ 8.2e9, far under the edge).
-_EMB_Q_SCALE = 1_000_000.0
-_EMB_FLOOR_SAFE = float(2**63)
-
-
-def _emb_plane_ints() -> list[list[int]]:
-    """(tables*bits) integer hyperplanes from md5 bytes (first byte of
-    md5('embplane|t|b|d') - 128 ∈ [-128, 127]) — engine-portable by
-    CONSTRUCTION: Python-computed constants embedded as literals in
-    both the UDF closure and the DuckDB oracle text."""
-    import hashlib
-
-    return [
-        [
-            hashlib.md5(f"embplane|{t}|{b}|{d}".encode()).digest()[0] - 128
-            for d in range(64)
-        ]
-        for t in range(_EMB_LSH_TABLES)
-        for b in range(_EMB_LSH_BITS)
-    ]
-
-
-def _emb_bucket_udf_md5():
-    """md5-plane twin of the default sign-bucket UDF — SAME Arrow-batched
-    numpy matmul plan over exact int64 arithmetic: embeddings quantize
-    to floor(v·1e6) int64 under the floor_long guard (overflow/NaN/Inf
-    components contribute 0, identically in both engines), planes are
-    small ints, so bucket assignment cannot disagree with the oracle's
-    per-element list_reduce fold."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array(_emb_plane_ints(), dtype=np.int64)  # (T*B, 64)
-    weights = (2 ** np.arange(_EMB_LSH_BITS)).astype(np.int64)
-
-    @pandas_udf("array<long>")
-    def buckets(embedding: pd.Series) -> pd.Series:
-        import numpy as np
-
-        V = np.vstack(embedding.to_numpy()).astype(np.float64)  # (n, D)
-        X = V * _EMB_Q_SCALE
-        ok = np.abs(X) < _EMB_FLOOR_SAFE  # False for NaN/Inf/overflow
-        Q = np.floor(np.where(ok, X, 0.0)).astype(np.int64)
-        bits = (Q @ planes.T >= 0).astype(np.int64)  # exact int64 dots
-        per_table = bits.reshape(len(V), _EMB_LSH_TABLES, _EMB_LSH_BITS)
-        return pd.Series(list(per_table @ weights))
-
-    return buckets
-
-
-def _emb_md5_bucket_sql(t: int) -> str:
-    """DuckDB bucket expression for sub-bucket table `t` over the
-    quantized vector column `q`: sum of 2^b sign bits of exact int64
-    plane dots (mirrors _knn_md5_bucket_sql)."""
-    planes = _emb_plane_ints()
-    terms = []
-    for b in range(_EMB_LSH_BITS):
-        w = planes[t * _EMB_LSH_BITS + b]
-        lit = "[" + ", ".join(str(x) for x in w) + "]"
-        dot = (
-            "list_reduce(list_transform(generate_series(1, len(q)), "
-            f"i -> q[i] * ({lit})[i]), (x, y) -> x + y)"
-        )
-        terms.append(f"(CASE WHEN {dot} >= 0 THEN {2 ** b} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
+_EMB_MD5_PLANES = md5_planes("embplane", _EMB_LSH_TABLES, _EMB_LSH_BITS)
 
 # DuckDB twin of q_dedup_embed_cosine_lsh_md5: quantize -> per-table
 # sign buckets -> candidates sharing (table, label, bucket) under the
@@ -1360,24 +1223,13 @@ def _emb_md5_bucket_sql(t: int) -> str:
 _EMB_LSH_MD5_ORACLE = f"""
 WITH base AS (
     SELECT e.vec_id, e.label, e.embedding FROM embeddings e
-    WHERE {_usable_norm_sql('e')} AND e.label IS NOT NULL
+    WHERE {usable_norm_sql('e')} AND e.label IS NOT NULL
 ),
-qv AS (
-    -- floor_long doctrine: scaled components at/past 2^63 (incl.
-    -- NaN/Inf, which compare not-less-than the bound) quantize to 0 —
-    -- matching the UDF's mask exactly; an unguarded CAST raises here
-    SELECT vec_id, label,
-           list_transform(CAST(embedding AS DOUBLE[]),
-                          v -> CASE WHEN abs(v * {_EMB_Q_SCALE!r})
-                                        < 9223372036854775808.0
-                                    THEN CAST(floor(v * {_EMB_Q_SCALE!r})
-                                              AS BIGINT)
-                                    ELSE 0 END) AS q
-    FROM base
-),
+qv AS (SELECT vec_id, label, {quantize_sql(MD5_Q_SCALE)} AS q FROM base),
 bk AS (
     {' UNION ALL '.join(
-        f"SELECT vec_id, label, {t} AS tbl, {{BKT{t}}} AS bkt FROM qv"
+        f"SELECT vec_id, label, {t} AS tbl, "
+        f"{md5_bucket_sql(_EMB_MD5_PLANES, _EMB_LSH_BITS, t)} AS bkt FROM qv"
         for t in range(_EMB_LSH_TABLES)
     )}
 ),
@@ -1393,18 +1245,14 @@ cand AS (
     WHERE z.g <= {_LSH_BUCKET_CAP}
 ),
 scored AS (
-    SELECT c.vec_a, c.vec_b, a.label,
-           {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-               AS cosine
+    SELECT c.vec_a, c.vec_b, a.label, {COSINE_SQL} AS cosine
     FROM cand c
     JOIN embeddings a ON a.vec_id = c.vec_a
     JOIN embeddings b ON b.vec_id = c.vec_b
 )
 SELECT vec_a, vec_b, label, cosine FROM scored
 WHERE cosine >= {_COSINE_THRESHOLD}
-""".format(**{
-    f"BKT{t}": _emb_md5_bucket_sql(t) for t in range(_EMB_LSH_TABLES)
-})
+"""
 
 
 @query("q_dedup_embed_cosine_lsh_md5", oracle=_EMB_LSH_MD5_ORACLE)
@@ -1429,11 +1277,9 @@ def q_dedup_embed_cosine_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         threshold=_COSINE_THRESHOLD,
-        bucket_udf=_emb_bucket_udf_md5(),
+        bucket_udf=sign_bucket_udf(_EMB_MD5_PLANES, _EMB_LSH_BITS, MD5_Q_SCALE),
         require_label=True,
     )
-
-
 
 
 @query(

@@ -33,22 +33,25 @@ from pyspark.sql.window import Window
 
 from bitcoinminingetl_spark.catalog import table
 from bitcoinminingetl_spark.functions.numeric import roundn
+from bitcoinminingetl_spark.functions.vectors import (
+    cosine,
+    dot,
+    norm_sql,
+    usable_norm_sql,
+)
 from bitcoinminingetl_spark.operators.dedup import (
     _NGRAM,
     _candidate_pairs,
-    _dot,
-    _norm,
     _verify_candidates,
     normed_embeddings,
     shingle_index,
 )
-from bitcoinminingetl_spark.operators.dedup import _usable_norm_sql
 from bitcoinminingetl_spark.operators.similarity import (
     _IVF_CELL_DOT,
-    _IVF_CENT_NORM,
     _N_CELLS,
     _N_QUERIES,
     _TOP_K,
+    _top_k,
     ivf_centroids,
 )
 from bitcoinminingetl_spark.registry import query
@@ -280,21 +283,9 @@ def q_ann_ivf_kmeans(
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        roundn(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm")),
-            6,
-            # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-            guard=False,
-        ).alias("cosine"),
+        cosine("q_emb", "embedding", "q_norm", "norm").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _TOP_K)
-    )
+    return _top_k(scored, "query_id", "neighbor_id", _TOP_K)
 
 
 _PCA_K = 16
@@ -444,7 +435,7 @@ def q_semdedup(
         a.join(b, "block")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            _dot(F.col("emb_a"), F.col("emb_b"))
+            dot(F.col("emb_a"), F.col("emb_b"))
             / (F.col("norm_a") * F.col("norm_b"))
             >= _SEMDEDUP_COS
         )
@@ -550,23 +541,22 @@ def q_cluster_keywords(
 
 
 # Inline double-fold expressions for the deterministic-quantizer oracle:
-# the SAME left-fold arithmetic as Spark's _dot/_norm (F.aggregate from
+# the SAME left-fold arithmetic as vectors.dot/norm (F.aggregate from
 # 0.0) — a DuckDB list_reduce folds from the first element, and
 # (0.0 + x) == x exactly in IEEE, so the doubles agree bit-for-bit
 # (parity already proven by q_cosine_topk's hash-checked oracle).
 # Shared with q_ann_ivf's oracle: ONE definition of the quantizer
 # parity arithmetic (r10 code-review finding — a hand-maintained copy
 # here could silently fork the left-fold contract both oracles cite).
-_CKW_CENT_NORM = _IVF_CENT_NORM
 _CKW_DOT = _IVF_CELL_DOT
 
 _CKW_IVF_ORACLE = f"""
     WITH cents AS MATERIALIZED (
         SELECT row_number() OVER (ORDER BY e.vec_id) - 1 AS cell,
                list_transform(CAST(e.embedding AS DOUBLE[]),
-                              v -> v / {_CKW_CENT_NORM}) AS c_emb
+                              v -> v / {norm_sql('e')}) AS c_emb
         FROM (SELECT vec_id, embedding FROM embeddings e
-              WHERE {_usable_norm_sql('e')}
+              WHERE {usable_norm_sql('e')}
               ORDER BY vec_id LIMIT {_N_CELLS}) e
     ),
     asgn AS MATERIALIZED (
@@ -576,7 +566,7 @@ _CKW_IVF_ORACLE = f"""
                                       ORDER BY {_CKW_DOT} DESC, b.cell)
                        AS rn
             FROM embeddings a, cents b
-            WHERE {_usable_norm_sql('a')}
+            WHERE {usable_norm_sql('a')}
         ) WHERE rn = 1
     ),
     ct AS MATERIALIZED (
@@ -637,7 +627,7 @@ def q_cluster_keywords_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = ivf_centroids(spark, emb)
     cells = (
         emb.crossJoin(F.broadcast(cents))
-        .withColumn("sim", _dot(F.col("embedding"), F.col("c_emb")))
+        .withColumn("sim", dot(F.col("embedding"), F.col("c_emb")))
         .groupBy("vec_id")
         .agg(
             # negated cell id: max(struct) prefers the HIGHEST second

@@ -2,10 +2,12 @@
 exact brute-force cosine top-k as the correctness baseline, and a
 random-hyperplane LSH variant as the scale path.
 
-Both are pure DataFrame plans. The vector math lives in higher-order
-functions (zip_with/aggregate — JVM, no Python): at 64 dims the dot
-product is a tight codegen loop, and the query side is always broadcast —
-the 100 TB corpus never shuffles for scoring.
+Both are pure DataFrame plans. The vector math (functions/vectors.py)
+lives in higher-order functions (zip_with/aggregate — JVM, no Python):
+at 64 dims the dot product is a tight codegen loop. The exact twins
+broadcast their small query side, so the 100 TB corpus never shuffles
+for scoring; the blocked-LSH family leaves its data-proportional query
+side to the planner.
 """
 
 from __future__ import annotations
@@ -22,30 +24,45 @@ from bitcoinminingetl_spark.functions.numeric import (
     roundn,
     roundn_sql,
 )
-from bitcoinminingetl_spark.operators.dedup import (
-    _DOT_SQL,
-    _usable_norm_sql,
-    _dot,
-    _norm_sql,
-    normed_embeddings,
+from bitcoinminingetl_spark.functions.vectors import (
+    COSINE_SQL,
+    MD5_Q_SCALE,
+    cosine,
+    dot,
+    md5_bucket_sql,
+    md5_planes,
+    norm_sql,
+    quantize_sql,
+    sign_bucket_udf,
+    usable_norm_sql,
 )
+from bitcoinminingetl_spark.operators.dedup import normed_embeddings
 from bitcoinminingetl_spark.registry import query
 
 _N_QUERIES = 5  # query set: vec_id < 5
 _TOP_K = 10
 
 
+def _top_k(scored: DataFrame, key: str, other: str, k: int) -> DataFrame:
+    """Per-`key` top-k of a scored pair relation by rounded cosine, ties
+    broken by the `other` id; `rn` is the long rank."""
+    w = Window.partitionBy(key).orderBy(F.col("cosine").desc(), F.col(other))
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("long"))
+        .filter(F.col("rn") <= k)
+    )
+
+
 @query(
     "q_cosine_topk",
     oracle=f"""
     WITH q AS (SELECT * FROM embeddings
-               WHERE vec_id < {_N_QUERIES} AND {_usable_norm_sql("embeddings")}),
+               WHERE vec_id < {_N_QUERIES} AND {usable_norm_sql("embeddings")}),
     scored AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-                   AS cosine
+               {COSINE_SQL} AS cosine
         FROM q a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE {_usable_norm_sql("b")}
+        WHERE {usable_norm_sql("b")}
     )
     SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn FROM (
         SELECT *, row_number() OVER (
@@ -71,22 +88,10 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            roundn(
-                _dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_norm") * F.col("norm")),
-                6,
-                # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-                guard=False,
-            ).alias("cosine"),
+            cosine("q_emb", "embedding", "q_norm", "norm").alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _TOP_K)
-    )
+    return _top_k(scored, "query_id", "neighbor_id", _TOP_K)
 
 
 _N_PLANES = 8
@@ -106,7 +111,7 @@ def _bucket(vec: Column, planes: list[list[float]]) -> Column:
     bucket = F.lit(0).cast("long")
     for p, plane in enumerate(planes):
         lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec, lit_plane) >= 0, F.lit(2**p).cast("long")).otherwise(
+        bit = F.when(dot(vec, lit_plane) >= 0, F.lit(2**p).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         bucket = bucket + bit
@@ -138,21 +143,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        roundn(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm")),
-            6,
-            # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-            guard=False,
-        ).alias("cosine"),
+        cosine("q_emb", "embedding", "q_norm", "norm").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _TOP_K)
-    )
+    return _top_k(scored, "query_id", "neighbor_id", _TOP_K)
 
 
 _N_CELLS = 16
@@ -181,12 +174,8 @@ def ivf_centroids(spark: SparkSession, emb: DataFrame) -> DataFrame:
 
 
 # Deterministic-quantizer dot against the centroid relation — the same
-# left-fold double arithmetic as Spark's _dot (see ivf_centroids /
+# left-fold double arithmetic as vectors.dot (see ivf_centroids /
 # q_cluster_keywords_ivf for the IEEE parity argument).
-_IVF_CENT_NORM = (
-    "sqrt(list_reduce(list_transform(CAST(e.embedding AS DOUBLE[]), "
-    "u -> u * u), (x, y) -> x + y))"
-)
 _IVF_CELL_DOT = (
     "list_reduce(list_transform(generate_series(1, len(a.embedding)), "
     "i -> CAST(a.embedding[i] AS DOUBLE) * b.c_emb[i]), (x, y) -> x + y)"
@@ -196,15 +185,15 @@ _ANN_IVF_ORACLE = f"""
     WITH cents AS MATERIALIZED (
         SELECT row_number() OVER (ORDER BY e.vec_id) - 1 AS cell,
                list_transform(CAST(e.embedding AS DOUBLE[]),
-                              v -> v / {_IVF_CENT_NORM}) AS c_emb
+                              v -> v / {norm_sql('e')}) AS c_emb
         FROM (SELECT vec_id, embedding FROM embeddings e
-              WHERE {_usable_norm_sql('e')}
+              WHERE {usable_norm_sql('e')}
               ORDER BY vec_id LIMIT {_N_CELLS}) e
     ),
     scored_cells AS MATERIALIZED (
         SELECT a.vec_id, b.cell, {_IVF_CELL_DOT} AS sim
         FROM embeddings a, cents b
-        WHERE {_usable_norm_sql('a')}
+        WHERE {usable_norm_sql('a')}
     ),
     asgn AS MATERIALIZED (
         SELECT vec_id, cell FROM (
@@ -229,8 +218,7 @@ _ANN_IVF_ORACLE = f"""
     ),
     scored AS (
         SELECT c.query_id, c.neighbor_id,
-               {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-                   AS cosine
+               {COSINE_SQL} AS cosine
         FROM cand c
         JOIN embeddings a ON a.vec_id = c.query_id
         JOIN embeddings b ON b.vec_id = c.neighbor_id
@@ -280,7 +268,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = ivf_centroids(spark, emb)
 
     scored_cells = emb.crossJoin(F.broadcast(cents)).withColumn(
-        "sim", _dot(F.col("embedding"), F.col("c_emb"))
+        "sim", dot(F.col("embedding"), F.col("c_emb"))
     )
     corpus = (
         scored_cells.groupBy("vec_id")
@@ -324,21 +312,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        roundn(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm")),
-            6,
-            # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-            guard=False,
-        ).alias("cosine"),
+        cosine("q_emb", "embedding", "q_norm", "norm").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _TOP_K)
-    )
+    return _top_k(scored, "query_id", "neighbor_id", _TOP_K)
 
 
 @query(
@@ -507,13 +483,12 @@ _KNN_MOD = 50  # query side: vec_id % 50 == 0 (a 2% sample of the corpus)
     "q_knn_join",
     oracle=f"""
     WITH a AS (SELECT * FROM embeddings
-               WHERE vec_id % {_KNN_MOD} = 0 AND {_usable_norm_sql("embeddings")}),
+               WHERE vec_id % {_KNN_MOD} = 0 AND {usable_norm_sql("embeddings")}),
     b AS (SELECT * FROM embeddings
-          WHERE vec_id % {_KNN_MOD} <> 0 AND {_usable_norm_sql("embeddings")}),
+          WHERE vec_id % {_KNN_MOD} <> 0 AND {usable_norm_sql("embeddings")}),
     scored AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-                   AS cosine
+               {COSINE_SQL} AS cosine
         FROM a JOIN b ON true
     )
     SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn FROM (
@@ -544,21 +519,9 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = b.join(F.broadcast(a)).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        roundn(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm")),
-            6,
-            # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-            guard=False,
-        ).alias("cosine"),
+        cosine("q_emb", "embedding", "q_norm", "norm").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _KNN_K)
-    )
+    return _top_k(scored, "query_id", "neighbor_id", _KNN_K)
 
 
 _KNN_TABLES = 4  # OR-amplification: 4 independent 6-plane hash tables
@@ -576,45 +539,13 @@ def _knn_plane_matrix() -> "np.ndarray":
     return np.concatenate(blocks, axis=0)
 
 
-def _knn_bucket_udf():
-    """Arrow-batched bucket assignment: one numpy matmul per batch
-    computes all 4 tables' sign buckets at once. This replaces a
-    24-dot-product higher-order-function expression whose ~1500-literal
-    tree falls out of whole-stage codegen and evaluates interpreted —
-    the one place in the ANN family where a vectorized pandas UDF beats
-    the built-in expression path by an order of magnitude."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = _knn_plane_matrix()  # (T*P, 64)
-    weights = (2 ** np.arange(_KNN_PLANES)).astype(np.int64)
-
-    @pandas_udf("array<long>")
-    def buckets(emb):  # pd.Series of list<float> -> pd.Series of list<long>
-        V = np.array(emb.tolist(), dtype=np.float64)  # (n, 64)
-        bits = (V @ planes.T >= 0).astype(np.int64)  # (n, T*P)
-        per_table = bits.reshape(len(V), _KNN_TABLES, _KNN_PLANES)
-        out = per_table @ weights  # (n, T)
-        return __import__("pandas").Series(list(out))
-
-    return buckets
-
-
 @query("q_knn_join_lsh")  # rows-only: LSH recall is checked vs q_knn_join
 def q_knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked k-NN join — the shippable corpus-vs-corpus shape: both
     sides hash into 4 independent 6-plane sign-bucket tables (OR
     amplification); candidates are the equi-join on (table, bucket) over
     NARROW id rows; exact cosine re-ranks only the survivors after the
-    vectors are re-attached by key.
-
-    Plan doctrine (also why this beats the naive "carry the vectors
-    through the bucket join" shape): the bucket relation is (id, table,
-    bucket) — 12 bytes of payload — so the candidate join shuffles
-    O(n·tables) slim rows and the cross-table duplicate collapse is a
-    distinct on two longs. Vectors rejoin ONCE per side afterwards: the
-    query side (2% sample) by broadcast, the neighbor side by a single
-    corpus-keyed equi-join that AQE sizes. At 100 TB the candidate pair
-    relation is the only growing intermediate, and it is two-long rows.
+    vectors are re-attached by key (_lsh_scored).
 
     Recall math at the design point (semantic corpora, neighbor cosine
     ≥0.9): per-plane collision 1-θ/π ≈ 0.856, per-table 0.856^6 ≈ 0.394,
@@ -622,17 +553,46 @@ def q_knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     isotropic fixture (neighbor cosine ≈0.34) the same config gives
     ≈0.19 — the planted-cluster test pins the former, a recall-floor
     assertion the latter."""
-    # normed load: drops zero-norm vectors before bucketing so neither
-    # the candidate join nor the cosine re-rank ever divides by zero
+    return _knn_lsh_top_k(
+        spark, sf_dir, sign_bucket_udf(_knn_plane_matrix(), _KNN_PLANES)
+    )
+
+
+def _knn_lsh_top_k(spark: SparkSession, sf_dir: str, bucket_of) -> DataFrame:
+    scored = _lsh_scored(spark, sf_dir, bucket_of, "query_id", "neighbor_id")
+    return _top_k(
+        scored.select("query_id", "neighbor_id", "cosine"),
+        "query_id",
+        "neighbor_id",
+        _KNN_K,
+    )
+
+
+def _lsh_scored(
+    spark: SparkSession, sf_dir: str, bucket_of, q_id: str, n_id: str
+) -> DataFrame:
+    """The blocked-candidate skeleton of the sign-bucket family
+    (q_knn_join_lsh and its md5 twin, q_hard_negatives_lsh,
+    q_bitext_mine_lsh): bucket explode → narrow (table, bucket) id
+    equi-join → vector re-attach → exact rounded cosine. The query side
+    is the vec_id % 50 == 0 sample. Returns (q_id, n_id, q_label,
+    n_label, cosine); each query adds its own tail.
+
+    Plan doctrine (also why this beats the naive "carry the vectors
+    through the bucket join" shape): the bucket relation is (id, table,
+    bucket) — 12 bytes of payload — so the candidate join shuffles
+    O(n·tables) slim rows and the cross-table duplicate collapse is a
+    distinct on two longs. Vectors rejoin ONCE per side afterwards by
+    key. The query side is 2% of the corpus — data-proportional — so no
+    join strategy is forced: AQE broadcasts it while it is under the
+    threshold and shuffles it past that. At 100 TB the candidate pair
+    relation is the only growing intermediate, and it is two-long rows.
+
+    The normed load drops zero-norm and non-finite vectors before
+    bucketing, so neither the candidate join nor the cosine re-rank
+    ever divides by zero."""
     emb = normed_embeddings(spark, sf_dir)
-    return _knn_lsh_pairs(emb, _knn_bucket_udf())
 
-
-def _knn_lsh_pairs(emb: DataFrame, bucket_of) -> DataFrame:
-    """The shared blocked-kNN skeleton (bucket explode → narrow
-    candidate equi-join → vector re-attach → exact cosine top-k),
-    parametrized on the bucket UDF so the md5-quantized oracle twin
-    (q_knn_join_lsh_md5) runs the IDENTICAL plan."""
     def bucketed(df, idcol):
         return df.select(
             F.col("vec_id").alias(idcol),
@@ -640,151 +600,54 @@ def _knn_lsh_pairs(emb: DataFrame, bucket_of) -> DataFrame:
                 f"{idcol}_t", f"{idcol}_bkt"
             ),
         )
+
+    def vectors(df, p):
+        return df.select(
+            F.col("vec_id").alias(f"{p}_id"),
+            F.col("embedding").alias(f"{p}_emb"),
+            F.col("norm").alias(f"{p}_norm"),
+            F.col("label").alias(f"{p}_label"),
+        )
+
     q_side = emb.filter(F.col("vec_id") % _KNN_MOD == 0)
     n_side = emb.filter(F.col("vec_id") % _KNN_MOD != 0)
     cand = (
-        bucketed(q_side, "query_id")
+        bucketed(q_side, q_id)
         .join(
-            bucketed(n_side, "neighbor_id"),
-            (F.col("query_id_t") == F.col("neighbor_id_t"))
-            & (F.col("query_id_bkt") == F.col("neighbor_id_bkt")),
+            bucketed(n_side, n_id),
+            (F.col(f"{q_id}_t") == F.col(f"{n_id}_t"))
+            & (F.col(f"{q_id}_bkt") == F.col(f"{n_id}_bkt")),
         )
-        .select("query_id", "neighbor_id")
+        .select(q_id, n_id)
         .distinct()
     )
-    qv = q_side.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),  # reuse the normed-load column
-    )
-    nv = n_side.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),  # reuse the normed-load column
-    )
-    scored = (
-        cand.join(F.broadcast(qv), cand.query_id == qv.q_id)
-        .join(nv, cand.neighbor_id == nv.n_id)
-        .select(
-            "query_id",
-            "neighbor_id",
-            roundn(
-                _dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                6,
-                # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-                guard=False,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
+    qv = vectors(q_side, "q")
+    nv = vectors(n_side, "n")
     return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _KNN_K)
+        cand.join(qv, cand[q_id] == qv.q_id)
+        .join(nv, cand[n_id] == nv.n_id)
+        .select(
+            q_id,
+            n_id,
+            "q_label",
+            "n_label",
+            cosine("q_emb", "n_emb", "q_norm", "n_norm").alias("cosine"),
+        )
     )
 
 
-# Embedding quantization scale for the md5-plane twin: one double
-# multiply + floor per element — IEEE-identical in numpy and DuckDB —
-# then ALL downstream bucket arithmetic is exact int64 (max |dot| ~
-# 64 dims * 1e6 * 128 ≈ 8.2e9, five orders under the int64 edge).
-_KNN_Q_SCALE = 1_000_000.0
-
-
-def _knn_plane_ints() -> list[list[int]]:
-    """(tables*planes) integer hyperplanes derived from md5 bytes
-    (first byte of md5('knnplane|t|p|d') - 128 ∈ [-128, 127]) —
-    engine-portable by CONSTRUCTION: the values are Python-computed
-    constants embedded as literals in both the UDF closure and the
-    DuckDB oracle text, so neither engine hashes anything at runtime."""
-    import hashlib
-
-    return [
-        [
-            hashlib.md5(f"knnplane|{t}|{p}|{d}".encode()).digest()[0] - 128
-            for d in range(64)
-        ]
-        for t in range(_KNN_TABLES)
-        for p in range(_KNN_PLANES)
-    ]
-
-
-def _knn_bucket_udf_md5():
-    """The md5-plane twin of _knn_bucket_udf — SAME Arrow-batched numpy
-    matmul plan, but over exact int64 arithmetic: embeddings quantized
-    to floor(v * 1e6) int64, planes small ints, so the (n, 24) dot
-    matrix is order-independent integer math, bit-identical to the
-    oracle's per-element list_reduce fold. This is what converts the
-    float-order sign-bucket family's verdict (BLAS summation order)
-    into a full value hash WITHOUT leaving the production plan shape."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array(_knn_plane_ints(), dtype=np.int64)  # (T*P, 64)
-    weights = (2 ** np.arange(_KNN_PLANES)).astype(np.int64)
-
-    @pandas_udf("array<long>")
-    def buckets(emb):  # pd.Series of list<float> -> pd.Series of list<long>
-        V = np.array(emb.tolist(), dtype=np.float64)  # (n, 64)
-        X = V * _KNN_Q_SCALE
-        # floor_long doctrine (functions/numeric._FLOOR_SAFE): a scaled
-        # component at or past 2^63 cannot quantize — numpy's int64
-        # cast is UB there and DuckDB's CAST raises — so it contributes
-        # 0 to the bucket dots, IDENTICALLY in both engines (NaN/Inf
-        # compare not-less-than the bound on both sides, so the one
-        # predicate masks them too; found by the adversarial
-        # differential sweep's huge-component embedding row).
-        ok = np.abs(X) < _KNN_FLOOR_SAFE  # False for NaN/Inf/overflow
-        Q = np.floor(np.where(ok, X, 0.0)).astype(np.int64)
-        bits = (Q @ planes.T >= 0).astype(np.int64)  # exact int64 dots
-        per_table = bits.reshape(len(V), _KNN_TABLES, _KNN_PLANES)
-        out = per_table @ weights  # (n, T)
-        return __import__("pandas").Series(list(out))
-
-    return buckets
-
-
-_KNN_FLOOR_SAFE = float(2**63)
-
-
-def _knn_md5_bucket_sql(t: int) -> str:
-    """DuckDB bucket expression for hash table `t` over the quantized
-    vector column `q`: sum of 2^p sign bits of exact int64 plane dots."""
-    planes = _knn_plane_ints()
-    terms = []
-    for p in range(_KNN_PLANES):
-        w = planes[t * _KNN_PLANES + p]
-        lit = "[" + ", ".join(str(x) for x in w) + "]"
-        dot = (
-            "list_reduce(list_transform(generate_series(1, len(q)), "
-            f"i -> q[i] * ({lit})[i]), (x, y) -> x + y)"
-        )
-        terms.append(f"(CASE WHEN {dot} >= 0 THEN {2 ** p} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
+_KNN_MD5_PLANES = md5_planes("knnplane", _KNN_TABLES, _KNN_PLANES)
 
 _KNN_MD5_ORACLE = f"""
 WITH base AS (
     SELECT e.vec_id, e.embedding FROM embeddings e
-    WHERE {_usable_norm_sql('e')}
+    WHERE {usable_norm_sql('e')}
 ),
-qv AS (
-    -- floor_long doctrine: scaled components at/past 2^63 (incl.
-    -- NaN/Inf, which compare not-less-than the bound) quantize to 0 —
-    -- matching the UDF's mask exactly; an unguarded CAST raises here
-    SELECT vec_id,
-           list_transform(CAST(embedding AS DOUBLE[]),
-                          v -> CASE WHEN abs(v * {_KNN_Q_SCALE!r})
-                                        < 9223372036854775808.0
-                                    THEN CAST(floor(v * {_KNN_Q_SCALE!r})
-                                              AS BIGINT)
-                                    ELSE 0 END) AS q
-    FROM base
-),
+qv AS (SELECT vec_id, {quantize_sql(MD5_Q_SCALE)} AS q FROM base),
 bk AS (
     {' UNION ALL '.join(
-        f"SELECT vec_id, {t} AS tbl, {{BKT{t}}} AS bkt FROM qv"
+        f"SELECT vec_id, {t} AS tbl, "
+        f"{md5_bucket_sql(_KNN_MD5_PLANES, _KNN_PLANES, t)} AS bkt FROM qv"
         for t in range(_KNN_TABLES)
     )}
 ),
@@ -794,9 +657,7 @@ cand AS (
     WHERE a.vec_id % {_KNN_MOD} = 0 AND b.vec_id % {_KNN_MOD} <> 0
 ),
 scored AS (
-    SELECT c.query_id, c.neighbor_id,
-           {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-               AS cosine
+    SELECT c.query_id, c.neighbor_id, {COSINE_SQL} AS cosine
     FROM cand c
     JOIN embeddings a ON a.vec_id = c.query_id
     JOIN embeddings b ON b.vec_id = c.neighbor_id
@@ -806,29 +667,28 @@ SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn FROM (
         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
     FROM scored
 ) WHERE rn <= {_KNN_K}
-""".format(**{
-    f"BKT{t}": _knn_md5_bucket_sql(t) for t in range(_KNN_TABLES)
-})
+"""
 
 
 @query("q_knn_join_lsh_md5", oracle=_KNN_MD5_ORACLE)
 def q_knn_join_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-hashed blocked-kNN twin (r12 VERDICT item 4): the exact
     bucket-explode / candidate-join / re-rank skeleton of
-    q_knn_join_lsh (_knn_lsh_pairs — same UDF shape, same narrow
-    two-long candidate relation, same broadcast re-attach), with the
-    float-order verdict eliminated: planes are md5-derived small ints,
-    embeddings quantize to floor(v·1e6) int64, and every bucket dot is
-    EXACT integer arithmetic — numpy's batched int64 matmul and
-    DuckDB's per-element list_reduce fold cannot disagree, so bucket
-    assignment, candidate generation, and the decimal-rounded cosine
-    re-rank all sit under one full value hash. This puts the shared
-    skeleton of the whole sign-bucket family (q_ann_lsh,
-    q_hard_negatives_lsh, q_bitext_mine_lsh, q_dedup_embed_cosine_lsh)
-    under a value-hashed receipt; the float-plane variants stay the
-    production path (no quantization pass on the hot scan)."""
-    emb = normed_embeddings(spark, sf_dir)
-    return _knn_lsh_pairs(emb, _knn_bucket_udf_md5())
+    q_knn_join_lsh (_lsh_scored — same UDF shape, same narrow two-long
+    candidate relation, same re-attach), with the float-order verdict
+    eliminated: planes are md5-derived small ints, embeddings quantize
+    to floor(v·1e6) int64, and every bucket dot is EXACT integer
+    arithmetic — numpy's batched int64 matmul and DuckDB's per-element
+    list_reduce fold cannot disagree, so bucket assignment, candidate
+    generation, and the decimal-rounded cosine re-rank all sit under
+    one full value hash. This puts the shared skeleton of the blocked
+    sign-bucket family (q_knn_join_lsh, q_hard_negatives_lsh,
+    q_bitext_mine_lsh) under a value-hashed receipt; the float-plane
+    variants stay the production path (no quantization pass on the hot
+    scan)."""
+    return _knn_lsh_top_k(
+        spark, sf_dir, sign_bucket_udf(_KNN_MD5_PLANES, _KNN_PLANES, MD5_Q_SCALE)
+    )
 
 
 _HN_K = 3  # hard negatives per anchor
@@ -838,14 +698,13 @@ _HN_K = 3  # hard negatives per anchor
     "q_hard_negatives",
     oracle=f"""
     WITH a AS (SELECT * FROM embeddings
-               WHERE vec_id % {_KNN_MOD} = 0 AND {_usable_norm_sql("embeddings")}),
+               WHERE vec_id % {_KNN_MOD} = 0 AND {usable_norm_sql("embeddings")}),
     b AS (SELECT * FROM embeddings
-          WHERE vec_id % {_KNN_MOD} <> 0 AND {_usable_norm_sql("embeddings")}),
+          WHERE vec_id % {_KNN_MOD} <> 0 AND {usable_norm_sql("embeddings")}),
     scored AS (
         SELECT a.vec_id AS anchor_id, b.vec_id AS negative_id,
                b.label AS negative_label,
-               {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-                   AS cosine
+               {COSINE_SQL} AS cosine
         FROM a JOIN b ON a.label IS DISTINCT FROM b.label
     )
     SELECT anchor_id, negative_id, negative_label, cosine,
@@ -888,21 +747,9 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor_id",
         F.col("vec_id").alias("negative_id"),
         F.col("label").alias("negative_label"),
-        roundn(
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("norm")),
-            6,
-            # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-            guard=False,
-        ).alias("cosine"),
+        cosine("q_emb", "embedding", "q_norm", "norm").alias("cosine"),
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _HN_K)
-    )
+    return _top_k(scored, "anchor_id", "negative_id", _HN_K)
 
 
 # The label-inequality predicate applied at re-rank time, module-level
@@ -928,64 +775,23 @@ def q_hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-twin is rejected while the cross-label nearest vector
     survives, and the recall floor is asserted against the exact
     twin."""
-    emb = normed_embeddings(spark, sf_dir)
-    bucket_of = _knn_bucket_udf()
-
-    def bucketed(df, idcol):
-        return df.select(
-            F.col("vec_id").alias(idcol),
-            F.posexplode(bucket_of(F.col("embedding"))).alias(
-                f"{idcol}_t", f"{idcol}_bkt"
-            ),
-        )
-
-    a_side = emb.filter(F.col("vec_id") % _KNN_MOD == 0)
-    n_side = emb.filter(F.col("vec_id") % _KNN_MOD != 0)
-    cand = (
-        bucketed(a_side, "anchor_id")
-        .join(
-            bucketed(n_side, "negative_id"),
-            (F.col("anchor_id_t") == F.col("negative_id_t"))
-            & (F.col("anchor_id_bkt") == F.col("negative_id_bkt")),
-        )
-        .select("anchor_id", "negative_id")
-        .distinct()
+    scored = _lsh_scored(
+        spark,
+        sf_dir,
+        sign_bucket_udf(_knn_plane_matrix(), _KNN_PLANES),
+        "anchor_id",
+        "negative_id",
     )
-    qv = a_side.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        F.col("label").alias("q_label"),
-    )
-    nv = n_side.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-        F.col("label").alias("n_label"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), cand.anchor_id == qv.q_id)
-        .join(nv, cand.negative_id == nv.n_id)
-        .filter(_hn_label_keep(F.col("q_label"), F.col("n_label")))
-        .select(
+    return _top_k(
+        scored.filter(_hn_label_keep(F.col("q_label"), F.col("n_label"))).select(
             "anchor_id",
-            F.col("n_id").alias("negative_id"),
+            "negative_id",
             F.col("n_label").alias("negative_label"),
-            roundn(
-                _dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                6,
-                # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-                guard=False,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _HN_K)
+            "cosine",
+        ),
+        "anchor_id",
+        "negative_id",
+        _HN_K,
     )
 
 
@@ -1013,13 +819,12 @@ _BT_AVG_SQL = """
     "q_bitext_mine",
     oracle=f"""
     WITH s AS (SELECT * FROM embeddings
-               WHERE vec_id % {_KNN_MOD} = 0 AND {_usable_norm_sql("embeddings")}),
+               WHERE vec_id % {_KNN_MOD} = 0 AND {usable_norm_sql("embeddings")}),
     t AS (SELECT * FROM embeddings
-          WHERE vec_id % {_KNN_MOD} <> 0 AND {_usable_norm_sql("embeddings")}),
+          WHERE vec_id % {_KNN_MOD} <> 0 AND {usable_norm_sql("embeddings")}),
     scored AS (
         SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
-               {roundn_sql(f'{_DOT_SQL} / ({_norm_sql("a")} * {_norm_sql("b")})', 6)}
-                   AS cosine
+               {COSINE_SQL} AS cosine
         FROM s a JOIN t b ON true
     ),
     ranked AS (
@@ -1089,13 +894,7 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = t.join(F.broadcast(s)).select(
         "src_id",
         F.col("vec_id").alias("tgt_id"),
-        roundn(
-            _dot(F.col("s_emb"), F.col("embedding"))
-            / (F.col("s_norm") * F.col("norm")),
-            6,
-            # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-            guard=False,
-        ).alias("cosine"),
+        cosine("s_emb", "embedding", "s_norm", "norm").alias("cosine"),
     )
     return _margin_rank(scored)
 
@@ -1177,52 +976,11 @@ def q_bitext_mine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood mass to renormalize against, which real corpora always
     provide (the sf fixture yields non-empty output; the real-fixture
     test pins that)."""
-    emb = normed_embeddings(spark, sf_dir)
-    bucket_of = _knn_bucket_udf()
-
-    def bucketed(df, idcol):
-        return df.select(
-            F.col("vec_id").alias(idcol),
-            F.posexplode(bucket_of(F.col("embedding"))).alias(
-                f"{idcol}_t", f"{idcol}_bkt"
-            ),
-        )
-
-    s_side = emb.filter(F.col("vec_id") % _KNN_MOD == 0)
-    t_side = emb.filter(F.col("vec_id") % _KNN_MOD != 0)
-    cand = (
-        bucketed(s_side, "src_id")
-        .join(
-            bucketed(t_side, "tgt_id"),
-            (F.col("src_id_t") == F.col("tgt_id_t"))
-            & (F.col("src_id_bkt") == F.col("tgt_id_bkt")),
-        )
-        .select("src_id", "tgt_id")
-        .distinct()
+    scored = _lsh_scored(
+        spark,
+        sf_dir,
+        sign_bucket_udf(_knn_plane_matrix(), _KNN_PLANES),
+        "src_id",
+        "tgt_id",
     )
-    sv = s_side.select(
-        F.col("vec_id").alias("s_id"),
-        F.col("embedding").alias("s_emb"),
-        F.col("norm").alias("s_norm"),
-    )
-    tv = t_side.select(
-        F.col("vec_id").alias("t_id"),
-        F.col("embedding").alias("t_emb"),
-        F.col("norm").alias("t_norm"),
-    )
-    scored = (
-        cand.join(F.broadcast(sv), cand.src_id == sv.s_id)
-        .join(tv, cand.tgt_id == tv.t_id)
-        .select(
-            "src_id",
-            "tgt_id",
-            roundn(
-                _dot(F.col("s_emb"), F.col("t_emb"))
-                / (F.col("s_norm") * F.col("t_norm")),
-                6,
-                # zero-norm-filtered inputs: cosine finite in [-1,1] -> single-eval
-                guard=False,
-            ).alias("cosine"),
-        )
-    )
-    return _margin_rank(scored)
+    return _margin_rank(scored.select("src_id", "tgt_id", "cosine"))

@@ -27,6 +27,7 @@ from bitcoinminingetl_spark.functions.numeric import (
     roundn,
     roundn_sql,
 )
+from bitcoinminingetl_spark.functions.vectors import dot, usable_norm_sql
 from bitcoinminingetl_spark.registry import query
 
 
@@ -1880,19 +1881,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RRF_K = 60
 _RRF_POOL = 200  # per-system candidate pool; 1/(60+200) is already negligible
 _RRF_TOP = 20
-def _rrf_norm_sql(col: str) -> str:
-    """L2 norm of an embedding column (oracle side), for mirroring
-    normed_embeddings' corrupt-vector exclusion into the retrieval
-    pools — a zero/NaN-norm query vector otherwise fills the oracle's
-    semantic pool with NaN cosines that DuckDB ranks FIRST (NaN sorts
-    greatest), while Spark's load path excluded the vector entirely
-    (r8 adversarial sweep)."""
-    return (
-        f"sqrt(list_reduce(list_transform(CAST({col} AS DOUBLE[]), "
-        "v -> v * v), (x, y) -> x + y))"
-    )
-
-
 _RRF_QVEC_ID = 0  # the semantic query: embedding of id 0
 
 
@@ -1930,8 +1918,7 @@ _RRF_QVEC_ID = 0  # the semantic query: embedding of id 0
     ), qv AS (
         SELECT embedding AS q FROM embeddings
         WHERE vec_id = {_RRF_QVEC_ID}
-          AND isfinite({_rrf_norm_sql('embedding')})
-          AND {_rrf_norm_sql('embedding')} > 0
+          AND {usable_norm_sql('embeddings')}
     ), sem_pool AS (
         SELECT b.vec_id AS doc_id,
                list_reduce(list_transform(generate_series(1, len(qv.q)),
@@ -1943,8 +1930,7 @@ _RRF_QVEC_ID = 0  # the semantic query: embedding of id 0
                       v -> v * v), (x, y) -> x + y))) AS cosine
         FROM embeddings b CROSS JOIN qv
         WHERE b.vec_id <> {_RRF_QVEC_ID}
-          AND isfinite({_rrf_norm_sql('b.embedding')})
-          AND {_rrf_norm_sql('b.embedding')} > 0
+          AND {usable_norm_sql('b')}
         ORDER BY cosine DESC, b.vec_id LIMIT {_RRF_POOL}
     ), sem AS (
         SELECT doc_id,
@@ -1988,13 +1974,13 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.row_number().over(w_lex).cast("long").alias("lex_rank")
     )
 
-    from bitcoinminingetl_spark.operators.dedup import _dot, normed_embeddings
+    from bitcoinminingetl_spark.operators.dedup import normed_embeddings
 
     # normed load: zero-norm corpus vectors can't join the semantic pool
     # (cosine undefined; ANSI division would kill the job)
     emb = normed_embeddings(spark, sf_dir)
     # reuse the norm column the normed load already attaches — an inline
-    # _norm() would re-run the 64-dim HOF fold per row (numeric.py caveat)
+    # norm() would re-run the 64-dim HOF fold per row (numeric.py caveat)
     qv = emb.filter(F.col("vec_id") == _RRF_QVEC_ID).select(
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
@@ -2005,7 +1991,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("doc_id"),
             (
-                _dot(F.col("embedding"), F.col("q_emb"))
+                dot(F.col("embedding"), F.col("q_emb"))
                 / (F.col("norm") * F.col("q_norm"))
             ).alias("cosine"),
         )
@@ -2179,8 +2165,7 @@ _DISC_SQL = (
     ), qv AS (
         SELECT embedding AS q FROM embeddings
         WHERE vec_id = {_RRF_QVEC_ID}
-          AND isfinite({_rrf_norm_sql('embedding')})
-          AND {_rrf_norm_sql('embedding')} > 0
+          AND {usable_norm_sql('embeddings')}
     ), sem_pool AS (
         SELECT b.vec_id AS doc_id,
                list_reduce(list_transform(generate_series(1, len(qv.q)),
@@ -2192,8 +2177,7 @@ _DISC_SQL = (
                       v -> v * v), (x, y) -> x + y))) AS cosine
         FROM embeddings b CROSS JOIN qv
         WHERE b.vec_id <> {_RRF_QVEC_ID}
-          AND isfinite({_rrf_norm_sql('b.embedding')})
-          AND {_rrf_norm_sql('b.embedding')} > 0
+          AND {usable_norm_sql('b')}
         ORDER BY cosine DESC, b.vec_id LIMIT {_EVAL_K}
     ), sem AS (
         SELECT doc_id,
@@ -2235,7 +2219,7 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both rankers are TakeOrdered top-{_EVAL_K} pools (the
     corpus never shuffles — q_bm25_rank / q_hybrid_rrf plan doctrine);
     every metric computes on a ≤{_EVAL_K}-row relation."""
-    from bitcoinminingetl_spark.operators.dedup import _dot, normed_embeddings
+    from bitcoinminingetl_spark.operators.dedup import normed_embeddings
 
     lex_pool = (
         _bm25_scored(spark, sf_dir)
@@ -2257,7 +2241,7 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("doc_id"),
             (
-                _dot(F.col("embedding"), F.col("q_emb"))
+                dot(F.col("embedding"), F.col("q_emb"))
                 / (F.col("norm") * F.col("q_norm"))
             ).alias("cosine"),
         )

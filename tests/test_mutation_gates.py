@@ -224,7 +224,7 @@ def test_knn_join_lsh_gate_goes_red_on_bucket_kernel_break(
         test_knn_join_lsh_planted_clusters_and_recall as gate,
     )
 
-    def broken_bucket_udf():
+    def broken_bucket_udf(planes, bits, q_scale=None):
         from pyspark.sql.functions import pandas_udf
 
         @pandas_udf("array<long>")
@@ -237,7 +237,7 @@ def test_knn_join_lsh_gate_goes_red_on_bucket_kernel_break(
 
     red = tmp_path / "red"
     red.mkdir()
-    with _mutated(sim_mod, "_knn_bucket_udf", broken_bucket_udf):
+    with _mutated(sim_mod, "sign_bucket_udf", broken_bucket_udf):
         with pytest.raises(AssertionError):
             gate(spark, sf_dir, red)
     green = tmp_path / "green"

@@ -610,6 +610,22 @@ def test_hard_negatives_lsh_narrow_candidates(spark, sf_dir):
     assert "HashJoin" in plan  # bucket join is hash-based, never nested-loop
 
 
+def test_blocked_lsh_family_forces_no_broadcast(spark, sf_dir):
+    """The blocked-LSH skeleton's query side is the vec_id % 50 sample —
+    data-proportional, so no join strategy may be forced on it: the
+    analyzed plans carry no broadcast hint. AQE still picks a broadcast
+    hash join at runtime while the side is under its threshold."""
+    for name in (
+        "q_knn_join_lsh",
+        "q_knn_join_lsh_md5",
+        "q_hard_negatives_lsh",
+        "q_bitext_mine_lsh",
+    ):
+        df = REGISTRY[name].fn(spark, sf_dir)
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert "strategy=broadcast" not in analyzed, name
+
+
 def test_bitext_mine_lsh_margin_is_windows_not_joins(spark, sf_dir):
     """The margin machinery must compile to windows over the candidate
     relation (rank + avg legs share the src/tgt partitionings), not
