@@ -1,11 +1,11 @@
 """Streaming operators surfaced in the driver contract (rows-only — a
 stateful stream over a checkpoint can't be expressed as one DuckDB SQL).
 
-The callable materializes the full streaming lifecycle: land the events
-table as JSON files (the R1 ingestion shape) -> file-stream source with
-declared schema -> watermark + 5-min tumbling aggregate (R11) ->
-foreachBatch parquet append (R6) with AvailableNow (R2's gate, drained) ->
-read the sink back and keep each window's final emission. The returned
+Each callable materializes a full streaming lifecycle (_land_and_drain):
+land one week of events as JSON files (the R1 ingestion shape) ->
+file-stream source with declared schema -> a stateful stream (R11
+windows, sessions, interval joins) -> parquet sink (R6) with AvailableNow
+(R2's gate), drained and checked -> read the sink back. The returned
 batch DataFrame is what a downstream consumer of avg_info would read."""
 
 from __future__ import annotations
@@ -19,12 +19,33 @@ from bitcoinminingetl_spark.catalog import events_in_range
 from bitcoinminingetl_spark.functions.state import workdir
 from bitcoinminingetl_spark.registry import query
 from bitcoinminingetl_spark.streaming.pipeline import (
+    drain,
     read_event_stream,
     run_to_parquet,
     session_windows,
+    start_file_sink,
     stream_stream_interval_join,
     windowed_metric_averages,
 )
+
+
+def _land_and_drain(spark: SparkSession, sf_dir: str, prefix: str, start) -> str:
+    """Land one week of events as JSON, stream it at 2 files per trigger
+    through ``start(stream, out_dir, checkpoint_dir)``, drain the query
+    and return the output dir. One week because the lifecycle under test
+    (multi-batch drain, watermarked state, re-emission) is
+    volume-independent, and the pushed-down ns-range scan keeps the
+    landing write proportional to the slice, not the table."""
+    work = workdir(prefix)
+    landing, out, ckpt = f"{work}/landing", f"{work}/out", f"{work}/ckpt"
+    (
+        events_in_range(spark, sf_dir, "2024-01-05 00:00:00", "2024-01-12 00:00:00")
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(4)
+        .write.json(landing)
+    )
+    drain(start(read_event_stream(spark, landing, max_files_per_trigger=2), out, ckpt))
+    return out
 
 
 @query("q_streaming_window_avg")  # rows-only: stateful streaming lifecycle
@@ -33,22 +54,12 @@ def q_streaming_window_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained with AvailableNow; see module docstring. Output: one row per
     (window, event_type) with its final average — the streaming twin of
     q_window_join's batch result."""
-    work = workdir("bmetl_stream_")
-    landing, out, ckpt = f"{work}/landing", f"{work}/out", f"{work}/ckpt"
-    (
-        # one week of events: the lifecycle under test (multi-batch drain,
-        # watermarked state, re-emission) is volume-independent, and the
-        # pushed-down ns-range scan keeps the landing write proportional
-        # to the slice, not the table
-        events_in_range(spark, sf_dir, "2024-01-05 00:00:00", "2024-01-12 00:00:00")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(4)
-        .write.json(landing)
+    out = _land_and_drain(
+        spark,
+        sf_dir,
+        "bmetl_stream_",
+        lambda stream, out, ckpt: run_to_parquet(windowed_metric_averages(stream), out, ckpt),
     )
-    stream = read_event_stream(spark, landing, max_files_per_trigger=2)
-    q = run_to_parquet(windowed_metric_averages(stream), out, ckpt)
-    q.awaitTermination(300)
-
     emitted = spark.read.parquet(out)
     w = Window.partitionBy("win", "event_type").orderBy(F.col("batch_id").desc())
     return (
@@ -80,22 +91,16 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: maxFilesPerTrigger fixes the batch boundaries, so the
     final watermark — and therefore WHICH sessions are finalized — is
-    the same every run; sessions within the lateness horizon of the last
+    the same every run; sessions within the watermark delay of the last
     event stay open and unemitted by design."""
-    work = workdir("bmetl_sess_")
-    landing, out, ckpt = f"{work}/landing", f"{work}/out", f"{work}/ckpt"
-    (
-        events_in_range(spark, sf_dir, "2024-01-05 00:00:00", "2024-01-12 00:00:00")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(4)
-        .write.json(landing)
+    out = _land_and_drain(
+        spark,
+        sf_dir,
+        "bmetl_sess_",
+        lambda stream, out, ckpt: run_to_parquet(
+            session_windows(stream), out, ckpt, output_mode="append"
+        ),
     )
-    stream = read_event_stream(spark, landing, max_files_per_trigger=2)
-    q = run_to_parquet(
-        session_windows(stream), out, ckpt, output_mode="append"
-    )
-    q.awaitTermination(300)
-
     emitted = spark.read.parquet(out)
     # append mode emits each finalized session exactly once — no
     # per-window last-emission dedup needed (that is the update-mode
@@ -131,30 +136,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     — checkpointed state, watermark-driven state expiry, cross-restart
     exactly-once (test_interval_join_exactly_once_across_restart) — is
     not one DuckDB SQL statement."""
-    work = workdir("bmetl_sjoin_")
-    landing, out, ckpt = f"{work}/landing", f"{work}/out", f"{work}/ckpt"
-    (
-        events_in_range(spark, sf_dir, "2024-01-05 00:00:00", "2024-01-12 00:00:00")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(4)
-        .write.json(landing)
-    )
-    stream = read_event_stream(spark, landing, max_files_per_trigger=2)
-    clicks = stream.filter(F.col("event_type") == "click")
-    views = stream.filter(F.col("event_type") == "view")
-    q = (
-        stream_stream_interval_join(clicks, views)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.read.parquet(out).select(
-        "click_id", "view_id", "user_id", "click_ts", "view_ts"
-    )
+    return _interval_join(spark, sf_dir, "bmetl_sjoin_", "inner")
 
 
 @query("q_streaming_interval_join_outer")  # rows-only: stateful streaming lifecycle
@@ -177,27 +159,19 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     region) is pinned by
     test_stream_stream_left_outer_join_emits_unmatched, and the
     registered lifecycle by test_interval_join_outer_lifecycle."""
-    work = workdir("bmetl_sjoin_outer_")
-    landing, out, ckpt = f"{work}/landing", f"{work}/out", f"{work}/ckpt"
-    (
-        events_in_range(spark, sf_dir, "2024-01-05 00:00:00", "2024-01-12 00:00:00")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(4)
-        .write.json(landing)
-    )
-    stream = read_event_stream(spark, landing, max_files_per_trigger=2)
-    clicks = stream.filter(F.col("event_type") == "click")
-    views = stream.filter(F.col("event_type") == "view")
-    q = (
-        stream_stream_interval_join(clicks, views, how="left_outer")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    return _interval_join(spark, sf_dir, "bmetl_sjoin_outer_", "left_outer")
+
+
+def _interval_join(spark: SparkSession, sf_dir: str, prefix: str, how: str) -> DataFrame:
+    """Shared body of the two interval-join lifecycles, which differ
+    only in ``how``."""
+
+    def start(stream, out, ckpt):
+        clicks = stream.filter(F.col("event_type") == "click")
+        views = stream.filter(F.col("event_type") == "view")
+        return start_file_sink(stream_stream_interval_join(clicks, views, how=how), out, ckpt)
+
+    out = _land_and_drain(spark, sf_dir, prefix, start)
     return spark.read.parquet(out).select(
         "click_id", "view_id", "user_id", "click_ts", "view_ts"
     )
@@ -268,15 +242,16 @@ def q_streaming_incremental_dedup(
         .write.json(landing)
     )
     t2 = time.perf_counter()
-    q = run_incremental_dedup(
-        spark,
-        read_doc_stream(spark, landing),
-        index_dir,
-        out,
-        ckpt,
-        stage_times=stage_times,
+    drain(
+        run_incremental_dedup(
+            spark,
+            read_doc_stream(spark, landing),
+            index_dir,
+            out,
+            ckpt,
+            stage_times=stage_times,
+        )
     )
-    q.awaitTermination(300)
     t3 = time.perf_counter()
     result = accepted_docs(spark, out).select("doc_id", "batch_id")
     if stage_times is not None:

@@ -35,10 +35,6 @@ def append_events_by_day(df: DataFrame, path: str) -> None:
     )
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def compact_small_files(
     spark: SparkSession,
     path: str,

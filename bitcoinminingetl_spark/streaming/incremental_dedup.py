@@ -9,7 +9,7 @@ Shape:
   landed doc JSON -> file stream
     -> withWatermark + dropDuplicatesWithinWatermark(content_hash)
        (R13 streaming-native: re-deliveries of the same bytes within the
-       lateness horizon die in streaming state, before any index I/O)
+       watermark delay die in streaming state, before any index I/O)
     -> foreachBatch:
          1. exact stage: anti-join batch content hashes against the
             PERSISTED hash index (cross-batch + cross-restart byte dups),
@@ -47,6 +47,7 @@ from bitcoinminingetl_spark.operators.dedup import (
     _verify_candidates,
     minhash_bands,
 )
+from bitcoinminingetl_spark.streaming.pipeline import WATERMARK_DELAY
 
 DOC_STREAM_SCHEMA = "doc_id long, ts timestamp, text string"
 
@@ -104,8 +105,6 @@ def run_incremental_dedup(
     index_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    lateness: str = "10 minutes",
-    available_now: bool = True,
     stage_times: dict | None = None,
 ):
     """Start the incremental-dedup stream (see module docstring).
@@ -123,7 +122,7 @@ def run_incremental_dedup(
     import time
 
     hashed = stream.withColumn("content_hash", F.md5("text"))
-    deduped = hashed.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(
+    deduped = hashed.withWatermark("ts", WATERMARK_DELAY).dropDuplicatesWithinWatermark(
         ["content_hash"]
     )
 
@@ -232,13 +231,10 @@ def run_incremental_dedup(
                 }
             )
 
-    writer = (
+    return (
         deduped.writeStream.outputMode("update")
         .foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 seconds")
-    return writer.start()

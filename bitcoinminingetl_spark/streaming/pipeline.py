@@ -5,11 +5,12 @@ ticks (reference main.py:18-21) with a 300 s materialization cadence
 (main.py:21,154-157) and a previous-window fallback for late/missing data
 (load.py:16-25). Structured Streaming expresses each piece natively:
 
-- interval gate (R2)            -> Trigger.ProcessingTime / AvailableNow
-- append sink (R6)              -> writeStream.foreachBatch -> parquet
+- interval gate (R2)            -> AvailableNow, checked by drain()
+- append sink (R6)              -> foreachBatch -> parquet (update mode)
+                                   or the parquet file sink (append mode)
 - 5-min tumbling materialize    -> groupBy(window(ts, "5 minutes"))
   (R11)                            + withWatermark (state eviction)
-- late data / fallback (R10)    -> watermark allowed-lateness; windows
+- late data / fallback (R10)    -> watermark delay; windows
                                    keep accepting rows until the
                                    watermark passes, so the batch-world
                                    "retry previous window" becomes
@@ -52,9 +53,14 @@ def read_event_stream(
 _TUMBLE_WINDOW = "5 minutes"
 _SESSION_GAP = "30 minutes"
 _JOIN_TOLERANCE = "5 minutes"
+# How late a row may arrive: the watermark delay of every watermarked stream
+# except the interval join (_JOIN_WATERMARK below).
+WATERMARK_DELAY = "10 minutes"
+# How long drain() waits for an AvailableNow query to finish.
+DRAIN_TIMEOUT_S = 300
 
 
-def windowed_metric_averages(events: DataFrame, lateness: str = "10 minutes") -> DataFrame:
+def windowed_metric_averages(events: DataFrame) -> DataFrame:
     """R11 streaming: per-(window, metric) running averages with watermark.
 
     One keyed aggregation instead of the batch full-outer join: in
@@ -62,41 +68,28 @@ def windowed_metric_averages(events: DataFrame, lateness: str = "10 minutes") ->
     watermarks to align; grouping by (window, event_type) gives the same
     wide row after a pivot in the sink, with half the state."""
     return (
-        events.withWatermark("ts", lateness)
+        events.withWatermark("ts", WATERMARK_DELAY)
         .groupBy(F.window("ts", _TUMBLE_WINDOW).alias("win"), "event_type")
         .agg(round2(F.avg("value")).alias("avg_value"), F.count(F.lit(1)).alias("n"))
     )
 
 
-def sliding_window_averages(events: DataFrame, lateness: str = "10 minutes") -> DataFrame:
-    """Sliding windows (10 min length / 5 min hop): each event lands in 2
-    windows; state doubles accordingly — the watermark is what keeps it
-    bounded."""
-    return (
-        events.withWatermark("ts", lateness)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"), "event_type")
-        .agg(round2(F.avg("value")).alias("avg_value"))
-    )
-
-
-def session_windows(events: DataFrame, gap: str | None = None) -> DataFrame:
-    """Session windows per user: a session closes after `gap` of
-    inactivity (default _SESSION_GAP, read at call time so the gate can
-    mutate it) — dynamic-length windows the batch reference can't
+def session_windows(events: DataFrame) -> DataFrame:
+    """Session windows per user: a session closes after _SESSION_GAP of
+    inactivity — dynamic-length windows the batch reference can't
     express."""
-    gap = gap if gap is not None else _SESSION_GAP
     return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
+        events.withWatermark("ts", WATERMARK_DELAY)
+        .groupBy(F.session_window("ts", _SESSION_GAP).alias("sess"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), round2(F.avg("value")).alias("avg_value"))
     )
 
 
-def streaming_dedup(events: DataFrame, lateness: str = "10 minutes") -> DataFrame:
+def streaming_dedup(events: DataFrame) -> DataFrame:
     """R13 streaming: drop re-deliveries of the same identity key while
     its watermark window is open. State = one entry per key in the
     horizon, evicted as the watermark advances."""
-    return events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK_DELAY).dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
 
@@ -105,14 +98,12 @@ def run_to_parquet(
     agg: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     output_mode: str = "update",
 ):
-    """R6's append sink: foreachBatch -> parquet append. foreachBatch (not
-    a direct parquet sink) because update-mode windowed aggregates re-emit
-    windows; the batch function owns idempotence via overwrite-by-window
-    at scale. AvailableNow drains everything then stops — the test/backfill
-    trigger; production uses Trigger.ProcessingTime("300 seconds") (R2)."""
+    """R6's append sink: foreachBatch -> parquet append, drained with
+    AvailableNow. foreachBatch (not the file sink of start_file_sink)
+    because update-mode windowed aggregates re-emit windows; the batch
+    function owns idempotence via overwrite-by-window at scale."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -123,16 +114,38 @@ def run_to_parquet(
 
     # update mode for plain windowed aggs (re-emits as late data lands);
     # session windows only support append (finalized sessions).
-    writer = (
+    return (
         agg.writeStream.outputMode(output_mode)
         .foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 seconds")
-    return writer.start()
+
+
+def start_file_sink(df: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Append-mode parquet file sink, drained with AvailableNow. The
+    sink's metadata log makes it exactly-once across restarts; it takes
+    append-only results (stream-stream joins, finalized sessions)."""
+    return (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def drain(q):
+    """Wait for an AvailableNow query to finish and return it. A query
+    still running after DRAIN_TIMEOUT_S is stopped and raises, so no
+    caller reads a partial sink or leaves the stream running; a failed
+    query raises through awaitTermination."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"stream {q.id} did not drain within {DRAIN_TIMEOUT_S}s")
+    return q
 
 
 # ---------------------------------------------------------------------------
@@ -148,17 +161,16 @@ FALLBACK_OUTPUT_SCHEMA = (
 FALLBACK_STATE_SCHEMA = "prev_avg double"
 
 
-def _fallback_fn(key, pdf_iter, state):
-    """Per-key (event_type) stateful handler: aggregate each 5-min window
-    in the batch; when a window's average is NULL-or-zero (the reference's
-    falsy check, load.py:17), emit the previous window's average instead.
-    State carries the last non-falsy average across micro-batches."""
+def _fallback_windows(event_type, prev, frames):
+    """The R10 kernel for one event_type key: aggregate each 5-min window
+    in the micro-batch frames; when a window's average is NULL-or-zero
+    (the reference's falsy check, load.py:17), emit the previous
+    window's average instead. Returns the output frame and the last
+    non-falsy average, the state carried to the next micro-batch."""
     import pandas as pd  # executor-side import
 
-    (event_type,) = key
-    prev = state.get[0] if state.exists else None
     out = []
-    frames = [pdf for pdf in pdf_iter if len(pdf)]
+    frames = [pdf for pdf in frames if len(pdf)]
     if frames:
         rows = pd.concat(frames, ignore_index=True)
         rows["window_start"] = rows["ts"].dt.floor("5min")
@@ -166,21 +178,21 @@ def _fallback_fn(key, pdf_iter, state):
         for win, r in g.iterrows():
             avg = float(r["mean"]) if r["count"] else None
             falsy = avg is None or avg == 0.0
-            out.append(
-                {
-                    "event_type": event_type,
-                    "window_start": win,
-                    "avg_value": prev if falsy else avg,
-                    "n": int(r["count"]),
-                    "used_fallback": falsy,
-                }
-            )
+            out.append((event_type, win, prev if falsy else avg, int(r["count"]), falsy))
             if not falsy:
                 prev = avg
+    columns = ["event_type", "window_start", "avg_value", "n", "used_fallback"]
+    return pd.DataFrame(out, columns=columns), prev
+
+
+def _fallback_fn(key, pdf_iter, state):
+    """applyInPandasWithState handler: _fallback_windows with the last
+    average held in the group state."""
+    (event_type,) = key
+    prev = state.get[0] if state.exists else None
+    out, prev = _fallback_windows(event_type, prev, pdf_iter)
     state.update((prev,))
-    yield pd.DataFrame(out, columns=[
-        "event_type", "window_start", "avg_value", "n", "used_fallback"
-    ])
+    yield out
 
 
 def windowed_averages_with_fallback(events: DataFrame) -> DataFrame:
@@ -195,7 +207,7 @@ def windowed_averages_with_fallback(events: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        events.withWatermark("ts", "10 minutes")
+        events.withWatermark("ts", WATERMARK_DELAY)
         .groupBy("event_type")
         .applyInPandasWithState(
             _fallback_fn,
@@ -215,13 +227,10 @@ _JOIN_WATERMARK = "10 minutes"
 
 
 def stream_stream_interval_join(
-    clicks: DataFrame,
-    views: DataFrame,
-    tolerance: str | None = None,
-    how: str = "inner",
+    clicks: DataFrame, views: DataFrame, how: str = "inner"
 ) -> DataFrame:
     """Stream-stream time-interval join: each click pairs with the same
-    user's views within ±tolerance — the attribution-join shape (R11's
+    user's views within ±_JOIN_TOLERANCE — the attribution-join shape (R11's
     two-stream correlation as a true stream-stream join rather than the
     aggregate-then-join the batch path uses; Spark forbids joining two
     *aggregated* streams, so the join runs on raw events and any
@@ -241,7 +250,6 @@ def stream_stream_interval_join(
     than the final watermark stay in state, not in output — the drain
     leaves them pending, matching production semantics where the stream
     never "ends".)"""
-    tolerance = tolerance if tolerance is not None else _JOIN_TOLERANCE
     c = clicks.withWatermark("ts", _JOIN_WATERMARK).alias("c")
     v = views.withWatermark("ts", _JOIN_WATERMARK).alias("v")
     return c.join(
@@ -249,7 +257,7 @@ def stream_stream_interval_join(
         F.expr(
             f"""
             c.user_id = v.user_id AND
-            v.ts BETWEEN c.ts - INTERVAL {tolerance} AND c.ts + INTERVAL {tolerance}
+            v.ts BETWEEN c.ts - INTERVAL {_JOIN_TOLERANCE} AND c.ts + INTERVAL {_JOIN_TOLERANCE}
             """
         ),
         how,
@@ -272,10 +280,11 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     trigger) and, when it fits the broadcast threshold, ships it as a
     broadcast hash join — the streaming side never shuffles and carries
     no join state (unlike stream-stream joins, a static side needs no
-    watermark: rows can't be late). At 100 TB of stream-days this is the
-    only join shape whose state doesn't grow with the stream. Inner join
-    drops events with no dim row — use left for keep-and-null."""
-    return events.join(F.broadcast(dim), on="user_id")
+    watermark: rows can't be late). No broadcast is forced: a user-keyed
+    dimension grows with the user base, so the planner decides from its
+    size. Inner join drops events with no dim row — use left for
+    keep-and-null."""
+    return events.join(dim, on="user_id")
 
 
 class AlertingListener:
@@ -329,38 +338,16 @@ def format_failure_alert(query_name: str, run_id: str, exception: str) -> dict:
     }
 
 
-class CallbackAlertSink:
-    """Alert sink -> an in-process callable (tests; embedding apps)."""
-
-    def __init__(self, fn) -> None:
-        self._fn = fn
-
-    def send(self, alert: dict) -> None:
-        self._fn(alert)
-
-
-class LogAlertSink:
-    """Alert sink -> the process logger (always-on default; at minimum a
-    failure is never silent)."""
-
-    def __init__(self, logger=None) -> None:
-        import logging
-
-        self._log = logger or logging.getLogger("bitcoinminingetl_spark.alerts")
-
-    def send(self, alert: dict) -> None:
-        self._log.error("%s | %s", alert["subject"], alert["exception"])
-
-
 class FileAlertSink:
     """Alert sink -> a JSON-lines file (the durable, dependency-free shape:
     ship the file to any pager/email bridge). Appends one line per alert;
-    driver-side only, so a plain local append is safe."""
+    driver-side only, so a plain local append is safe. Any callable that
+    takes the alert dict is a sink; this is the one shipped."""
 
     def __init__(self, path: str) -> None:
         self._path = path
 
-    def send(self, alert: dict) -> None:
+    def __call__(self, alert: dict) -> None:
         import json
 
         with open(self._path, "a", encoding="utf-8") as fh:
@@ -370,13 +357,13 @@ class FileAlertSink:
 def failure_alerting_listener(*sinks):
     """The R14 production hook: a StreamingQueryListener that formats a
     failure alert (format_failure_alert) and fans it out to every
-    pluggable sink — but ONLY on failed termination; clean stops are
+    sink callable — but ONLY on failed termination; clean stops are
     silent, matching the reference's email-on-exception-only behavior.
     A sink that raises is isolated (best-effort fan-out): one broken
     notifier must not mask the original failure or starve other sinks.
 
     Use: `spark.streams.addListener(failure_alerting_listener(
-    LogAlertSink(), FileAlertSink('/var/alerts.jsonl')))`."""
+    FileAlertSink('/var/alerts.jsonl'), notify))`."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     class _FailureListener(StreamingQueryListener):
@@ -405,7 +392,7 @@ def failure_alerting_listener(*sinks):
             )
             for sink in sinks:
                 try:
-                    sink.send(alert)
+                    sink(alert)
                 except Exception:  # noqa: BLE001 — best-effort fan-out
                     pass
 
@@ -434,51 +421,17 @@ def windowed_averages_with_fallback_tws(events: DataFrame) -> DataFrame:
             self._prev = handle.getValueState("prev_avg", FALLBACK_STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd  # executor-side import
-
             (event_type,) = key
             prev = self._prev.get()[0] if self._prev.exists() else None
-            out = []
-            frames = [pdf for pdf in rows if len(pdf)]
-            if frames:
-                batch = pd.concat(frames, ignore_index=True)
-                batch["window_start"] = batch["ts"].dt.floor("5min")
-                g = (
-                    batch.groupby("window_start")["value"]
-                    .agg(["mean", "count"])
-                    .sort_index()
-                )
-                for win, r in g.iterrows():
-                    avg = float(r["mean"]) if r["count"] else None
-                    falsy = avg is None or avg == 0.0
-                    out.append(
-                        {
-                            "event_type": event_type,
-                            "window_start": win,
-                            "avg_value": prev if falsy else avg,
-                            "n": int(r["count"]),
-                            "used_fallback": falsy,
-                        }
-                    )
-                    if not falsy:
-                        prev = avg
+            out, prev = _fallback_windows(event_type, prev, rows)
             self._prev.update((prev,))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "event_type",
-                    "window_start",
-                    "avg_value",
-                    "n",
-                    "used_fallback",
-                ],
-            )
+            yield out
 
         def close(self) -> None:
             pass
 
     return (
-        events.withWatermark("ts", "10 minutes")
+        events.withWatermark("ts", WATERMARK_DELAY)
         .groupBy("event_type")
         .transformWithStateInPandas(
             statefulProcessor=_FallbackProcessor(),

@@ -14,9 +14,11 @@ from pyspark.sql.window import Window
 from bitcoinminingetl_spark.catalog import table
 from bitcoinminingetl_spark.functions.numeric import round2
 from bitcoinminingetl_spark.streaming.pipeline import (
+    drain,
     read_event_stream,
     run_to_parquet,
     session_windows,
+    start_file_sink,
     streaming_dedup,
     windowed_metric_averages,
 )
@@ -56,16 +58,12 @@ def land_event_json(spark, sf_dir, out):
     return str(out)
 
 
-def _drain(q):
-    q.awaitTermination(120)
-
-
 def test_windowed_averages_match_batch(spark, landed_events, tmp_path):
     stream = read_event_stream(spark, landed_events, max_files_per_trigger=1)
     agg = windowed_metric_averages(stream)
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    _drain(run_to_parquet(agg, out, ckpt))
+    drain(run_to_parquet(agg, out, ckpt))
 
     got = spark.read.parquet(out)
     # update mode re-emits windows across batches: last emission per key wins
@@ -111,7 +109,7 @@ def test_streaming_dedup_bounds_to_identity_keys(spark, landed_events, tmp_path)
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q)
+    drain(q)
     got = spark.read.parquet(out)
     n_keys = (
         spark.read.schema(
@@ -133,7 +131,7 @@ def test_session_windows_run(spark, landed_events, tmp_path):
     sess = session_windows(stream)
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    _drain(run_to_parquet(sess, out, ckpt, output_mode="append"))
+    drain(run_to_parquet(sess, out, ckpt, output_mode="append"))
     got = spark.read.parquet(out)
     assert got.count() > 0
     # session invariant: end - start >= 0 and every session has events
@@ -185,13 +183,14 @@ def test_stateful_fallback_operator(spark, tmp_path):
         mtime = _time.time() - 600 + i * 60
         _os.utime(landing / f"b{i}.json", (mtime, mtime))
     stream = read_event_stream(spark, str(landing), max_files_per_trigger=1)
-    q = run_to_parquet(
-        windowed_averages_with_fallback(stream),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        output_mode="append",
+    drain(
+        run_to_parquet(
+            windowed_averages_with_fallback(stream),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+            output_mode="append",
+        )
     )
-    q.awaitTermination(120)
     rows = {
         r.window_start.strftime("%H:%M"): r
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
@@ -213,16 +212,11 @@ def test_stream_stream_interval_join_matches_batch(spark, landed_events, tmp_pat
     clicks = stream.filter(F.col("event_type") == "click")
     views = stream.filter(F.col("event_type") == "view")
     out = str(tmp_path / "join_out")
-    q = (
-        stream_stream_interval_join(clicks, views)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "join_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        start_file_sink(
+            stream_stream_interval_join(clicks, views), out, str(tmp_path / "join_ckpt")
+        )
     )
-    q.awaitTermination(120)
     got = {
         (r.click_id, r.view_id)
         for r in spark.read.parquet(out).collect()
@@ -267,12 +261,13 @@ def test_alerting_listener_observes_lifecycle(spark, landed_events, tmp_path):
     listener = AlertingListener.build(events.append)
     spark.streams.addListener(listener)
     try:
-        q = run_to_parquet(
-            windowed_metric_averages(read_event_stream(spark, landed_events)),
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
+        drain(
+            run_to_parquet(
+                windowed_metric_averages(read_event_stream(spark, landed_events)),
+                str(tmp_path / "out"),
+                str(tmp_path / "ckpt"),
+            )
         )
-        q.awaitTermination(120)
         # listener callbacks are async; wait briefly for terminated event
         import time
 
@@ -298,7 +293,6 @@ def test_failure_alert_sinks_fire_on_failed_query(spark, landed_events, tmp_path
     import time
 
     from bitcoinminingetl_spark.streaming.pipeline import (
-        CallbackAlertSink,
         FileAlertSink,
         failure_alerting_listener,
         read_event_stream,
@@ -307,12 +301,11 @@ def test_failure_alert_sinks_fire_on_failed_query(spark, landed_events, tmp_path
     alerts_file = str(tmp_path / "alerts.jsonl")
     seen = []
 
-    class _BrokenSink:
-        def send(self, alert):
-            raise RuntimeError("notifier down")
+    def broken_sink(alert):
+        raise RuntimeError("notifier down")
 
     listener = failure_alerting_listener(
-        _BrokenSink(), FileAlertSink(alerts_file), CallbackAlertSink(seen.append)
+        broken_sink, FileAlertSink(alerts_file), seen.append
     )
     spark.streams.addListener(listener)
     try:
@@ -328,7 +321,7 @@ def test_failure_alert_sinks_fire_on_failed_query(spark, landed_events, tmp_path
             .start()
         )
         try:
-            q.awaitTermination(120)
+            drain(q)
         except Exception:  # noqa: BLE001 — the failure IS the fixture
             pass
         # listener delivery is async; poll for the alert
@@ -479,14 +472,14 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     q1 = run_to_parquet(
         windowed_metric_averages(read_event_stream(spark, landing)), out, ckpt
     )
-    _drain(q1)
+    drain(q1)
     batches_run1 = {r.batch_id for r in spark.read.parquet(out).collect()}
 
     land("second", rows[half:])
     q2 = run_to_parquet(
         windowed_metric_averages(read_event_stream(spark, landing)), out, ckpt
     )
-    _drain(q2)
+    drain(q2)
 
     emitted = spark.read.parquet(out)
     batches_run2 = {
@@ -519,7 +512,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
 
 
 def test_stream_static_enrich_matches_batch(spark, landed_events, tmp_path):
-    """Stream-static broadcast enrichment: every streamed event picks up
+    """Stream-static enrichment: every streamed event picks up
     its user's segment from a static dimension; result equals the same
     join run in batch, and events without a dim row are dropped (inner
     join semantics)."""
@@ -543,9 +536,11 @@ def test_stream_static_enrich_matches_batch(spark, landed_events, tmp_path):
 
     stream = read_event_stream(spark, landed_events, max_files_per_trigger=1)
     enriched = stream_static_enrich(stream, static_dim)
+    # a user-keyed dim grows with the user base: no broadcast is forced
+    assert "strategy=broadcast" not in enriched._jdf.queryExecution().analyzed().toString()
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    _drain(run_to_parquet(enriched, out, ckpt, output_mode="append"))
+    drain(run_to_parquet(enriched, out, ckpt, output_mode="append"))
 
     got = {
         (r.event_id, r.segment)
@@ -556,6 +551,18 @@ def test_stream_static_enrich_matches_batch(spark, landed_events, tmp_path):
         for r in batch.join(static_dim, "user_id").select("event_id", "segment").collect()
     }
     assert got == exp and got  # non-empty and exactly the batch join
+
+
+def test_unfinished_drain_stops_the_query_and_raises(spark, sf_dir, monkeypatch):
+    """A drain that outlives its timeout must not hand back a partial
+    sink: the lifecycle raises and leaves no stream running."""
+    import bitcoinminingetl_spark.streaming.pipeline as pipe_mod
+    from bitcoinminingetl_spark.registry import load_all
+
+    monkeypatch.setattr(pipe_mod, "DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        load_all()["q_streaming_window_avg"].fn(spark, sf_dir)
+    assert spark.streams.active == []
 
 
 def test_stateful_fallback_transform_with_state(spark, tmp_path):
@@ -613,13 +620,14 @@ def test_stateful_fallback_transform_with_state(spark, tmp_path):
     )
     try:
         stream = read_event_stream(spark, str(landing), max_files_per_trigger=1)
-        q = run_to_parquet(
-            windowed_averages_with_fallback_tws(stream),
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
-            output_mode="append",
+        drain(
+            run_to_parquet(
+                windowed_averages_with_fallback_tws(stream),
+                str(tmp_path / "out"),
+                str(tmp_path / "ckpt"),
+                output_mode="append",
+            )
         )
-        q.awaitTermination(120)
     finally:
         if old is None:
             spark.conf.unset(provider_key)
@@ -724,7 +732,7 @@ def test_incremental_dedup_drops_cross_batch_near_dup_across_restart(
     q1 = run_incremental_dedup(
         spark, read_doc_stream(spark, landing), index_dir, out, ckpt
     )
-    _drain(q1)
+    drain(q1)
     run1 = {r.doc_id: r.batch_id for r in accepted_docs(spark, out).collect()}
     assert set(run1) == {102}, f"run 1 accepted {set(run1)}"
 
@@ -742,7 +750,7 @@ def test_incremental_dedup_drops_cross_batch_near_dup_across_restart(
     q2 = run_incremental_dedup(
         spark, read_doc_stream(spark, landing), index_dir, out, ckpt
     )
-    _drain(q2)
+    drain(q2)
 
     final = [r for r in accepted_docs(spark, out).collect()]
     by_id = {}
@@ -774,16 +782,13 @@ def test_stream_stream_left_outer_join_emits_unmatched(
     clicks = stream.filter(F.col("event_type") == "click")
     views = stream.filter(F.col("event_type") == "view")
     out = str(tmp_path / "louter_out")
-    q = (
-        stream_stream_interval_join(clicks, views, how="left_outer")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "louter_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        start_file_sink(
+            stream_stream_interval_join(clicks, views, how="left_outer"),
+            out,
+            str(tmp_path / "louter_ckpt"),
+        )
     )
-    q.awaitTermination(120)
     got = spark.read.parquet(out)
     got_pairs = {
         (r.click_id, r.view_id)
@@ -878,19 +883,11 @@ def test_interval_join_exactly_once_across_restart(spark, tmp_path):
 
     def run():
         stream = read_event_stream(spark, landing)
-        q = (
-            stream_stream_interval_join(
-                stream.filter(F.col("event_type") == "click"),
-                stream.filter(F.col("event_type") == "view"),
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        joined = stream_stream_interval_join(
+            stream.filter(F.col("event_type") == "click"),
+            stream.filter(F.col("event_type") == "view"),
         )
-        _drain(q)
+        drain(start_file_sink(joined, out, ckpt))
         return [(r.click_id, r.view_id) for r in spark.read.parquet(out).collect()]
 
     land("first", first)
@@ -1013,19 +1010,14 @@ def test_interval_join_state_expires_with_watermark(
     stream = read_event_stream(spark, landed_events, max_files_per_trigger=1)
     clicks = stream.filter(F.col("event_type") == "click")
     views = stream.filter(F.col("event_type") == "view")
-    q = (
-        stream_stream_interval_join(clicks, views)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    q = start_file_sink(
+        stream_stream_interval_join(clicks, views),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
     )
     # the drain must FINISH — a timed-out query's timeline is partial
     # and its "final" reading meaningless (r11 review finding)
-    assert q.awaitTermination(120), "drain did not finish"
-    v = state_expiry_verdict(state_timeline(q))
+    v = state_expiry_verdict(state_timeline(drain(q)))
     assert v["batches"] >= 2, "drain produced too few stateful batches"
     assert v["rows_removed"] > 0, v
     assert v["final_state_rows"] < v["peak_state_rows"], v
@@ -1048,8 +1040,7 @@ def test_session_state_expires_with_watermark(spark, landed_events, tmp_path):
         str(tmp_path / "ckpt"),
         output_mode="append",
     )
-    assert q.awaitTermination(120), "drain did not finish"
-    v = state_expiry_verdict(state_timeline(q))
+    v = state_expiry_verdict(state_timeline(drain(q)))
     assert v["batches"] >= 2, "drain produced too few stateful batches"
     assert v["rows_removed"] > 0, v
     assert v["final_state_rows"] < v["peak_state_rows"], v
