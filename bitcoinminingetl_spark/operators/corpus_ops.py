@@ -28,6 +28,8 @@ from bitcoinminingetl_spark.functions.vectors import (
     usable_norm_sql,
 )
 from bitcoinminingetl_spark.operators.dedup import (
+    holdout_hits,
+    holdout_hits_sql,
     near_dup_pairs,
     NGRAM_PAIRS_ORACLE,
     pair_overlaps,
@@ -262,23 +264,7 @@ _DECON_N = 13  # the n-gram width The Pile/GPT-3-style decontamination uses
 
 @query(
     "q_decontaminate",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                generate_series(1, greatest(len(string_split(text, ' '))
-                    - {_DECON_N - 1}, 1)),
-                i -> array_to_string(
-                    string_split(text, ' ')[i:i+{_DECON_N - 1}], ' ')
-            ))) AS shingle
-        FROM documents
-    ),
-    ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0)
-    SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-    FROM sh s JOIN ev USING (shingle)
-    WHERE s.doc_id % 10 <> 0
-    GROUP BY s.doc_id
-    """,
+    oracle=holdout_hits_sql("doc_id % 10 = 0", "doc_id % 10 <> 0", _DECON_N),
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval decontamination: flag corpus documents sharing any
@@ -295,17 +281,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed-shingle key is the right call either way. 13-gram collisions
     under xxhash64 are ~n²/2⁶⁴ — immaterial, and a collision only
     over-flags one document (the safe direction for decontamination)."""
-    sh = shingle_index(spark, sf_dir, n=_DECON_N)
-    ev = (
-        sh.filter(F.col("doc_id") % 10 == 0)
-        .select("shingle")
-        .distinct()
-    )
-    return (
-        sh.filter(F.col("doc_id") % 10 != 0)
-        .join(ev, "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
+    return holdout_hits(
+        shingle_index(spark, sf_dir, n=_DECON_N),
+        F.col("doc_id") % 10 == 0,
+        F.col("doc_id") % 10 != 0,
     )
 
 
@@ -1714,19 +1693,10 @@ _FUNNEL_BUDGET = 2000  # tokens kept per source
                row_number() OVER (
                    PARTITION BY md5(text) ORDER BY doc_id) = 1 AS d_ok
         FROM quality
-    ), sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                generate_series(1, greatest(len(string_split(text, ' '))
-                    - {_DECON_N - 1}, 1)),
-                i -> array_to_string(
-                    string_split(text, ' ')[i:i+{_DECON_N - 1}], ' ')
-            ))) AS shingle
-        FROM documents
-    ), ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0),
-    contaminated AS (
-        SELECT DISTINCT s.doc_id FROM sh s JOIN ev USING (shingle)
-        WHERE s.doc_id % 10 <> 0
+    ), contaminated AS (
+        SELECT doc_id FROM ({holdout_hits_sql(
+            "doc_id % 10 = 0", "doc_id % 10 <> 0", _DECON_N
+        )})
     ), flagged AS (
         SELECT d.doc_id, d.source, d.n_tokens, d.q_ok, d.d_ok,
                (c.doc_id IS NULL) AS c_ok
@@ -2231,24 +2201,11 @@ def _split_prefix_sql(ref: str) -> str:
 
 @query(
     "q_split_decontaminate",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                generate_series(1, greatest(len(string_split(text, ' '))
-                    - {_DECON_N - 1}, 1)),
-                i -> array_to_string(
-                    string_split(text, ' ')[i:i+{_DECON_N - 1}], ' ')
-            ))) AS shingle
-        FROM documents
+    oracle=holdout_hits_sql(
+        f"{_split_prefix_sql('doc_id')} >= '{_SPLIT_TRAIN_LT}'",
+        f"{_split_prefix_sql('doc_id')} < '{_SPLIT_TRAIN_LT}'",
+        _DECON_N,
     ),
-    ev AS (SELECT DISTINCT shingle FROM sh
-           WHERE {_split_prefix_sql('doc_id')} >= '{_SPLIT_TRAIN_LT}')
-    SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-    FROM sh s JOIN ev USING (shingle)
-    WHERE {_split_prefix_sql('s.doc_id')} < '{_SPLIT_TRAIN_LT}'
-    GROUP BY s.doc_id
-    """,
 )
 def q_split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPLIT-AWARE decontamination — q_decontaminate against the REAL
@@ -2268,16 +2225,13 @@ def q_split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on 8-byte hashed shingles, one per-doc count. At 100 TB
     the holdout side is ~20% of shingles; broadcast when the split is
     eval-tiny, hash join otherwise — the planner's call either way."""
-    sh = shingle_index(spark, sf_dir, n=_DECON_N)
     prefix = F.substring(
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(_SPLIT_SALT))),
         1,
         2,
     )
-    ev = sh.filter(prefix >= _SPLIT_TRAIN_LT).select("shingle").distinct()
-    return (
-        sh.filter(prefix < _SPLIT_TRAIN_LT)
-        .join(ev, "shingle")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
+    return holdout_hits(
+        shingle_index(spark, sf_dir, n=_DECON_N),
+        prefix >= _SPLIT_TRAIN_LT,
+        prefix < _SPLIT_TRAIN_LT,
     )

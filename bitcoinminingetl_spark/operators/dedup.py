@@ -40,18 +40,29 @@ from bitcoinminingetl_spark.registry import query
 _NGRAM = 3
 _JACCARD_THRESHOLD = 0.3
 
-# The DuckDB-side twin of _shingled (kept adjacent so they evolve together).
-# The oracle keeps shingles as strings; Spark hashes them to int64 — all
-# downstream quantities are set cardinalities, which agree as long as
-# xxhash64 is collision-free on the corpus (see _shingled docstring).
-_SHINGLE_SQL = """
-    SELECT doc_id, unnest(list_distinct(
-        list_transform(
-            generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-            i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')
-        ))) AS shingle
-    FROM documents
-"""
+
+def ngram_list_sql(n: int) -> str:
+    """DuckDB twin of ngram_array over string_split(text, ' '): the
+    positional n-gram list (NOT deduplicated). Inputs shorter than n
+    yield one gram, the full text. NULL text yields [NULL], which
+    list_distinct drops (see shingle_sql)."""
+    return (
+        f"list_transform(generate_series(1, greatest(len(string_split(text, ' '))"
+        f" - {n - 1}, 1)), i -> array_to_string("
+        f"string_split(text, ' ')[i:i+{n - 1}], ' '))"
+    )
+
+
+def shingle_sql(n: int = _NGRAM) -> str:
+    """DuckDB twin of _shingle_strings: (doc_id, shingle) with the
+    distinct n-grams of each document. The oracle keeps shingles as
+    strings; Spark hashes them to int64 (_shingled) — every downstream
+    quantity is a set cardinality, which agrees as long as xxhash64 is
+    collision-free on the corpus."""
+    return (
+        f"SELECT doc_id, unnest(list_distinct({ngram_list_sql(n)})) AS shingle"
+        " FROM documents"
+    )
 
 
 def ngram_array(toks: Column, n: int) -> Column:
@@ -62,7 +73,8 @@ def ngram_array(toks: Column, n: int) -> Column:
     benched 2.5x slower for the full shingle pass at sf0.1 (same finding
     as q_bigram_logprob's pair construction; output verified identical
     row-for-row). Inputs shorter than n yield one gram: the full text
-    (the whole dedup family's short-doc convention)."""
+    (the whole dedup family's short-doc convention). DuckDB twin:
+    ngram_list_sql."""
     size = F.size(toks)
     width = size - (n - 1)
     sh = F.slice(toks, 1, width)
@@ -98,7 +110,7 @@ def _shingle_strings(docs: DataFrame, n: int = _NGRAM) -> DataFrame:
     UNHASHED — the engine-portable relation the md5 MinHash twin
     (q_dedup_minhash_md5) draws its min-hashes from; _shingled is this
     plus the xxhash64 projection every production-path consumer joins
-    on."""
+    on. DuckDB twin: shingle_sql."""
     shingles = F.array_distinct(ngram_array(F.split("text", " "), n))
     return (
         # NULL text contributes NO shingles (the doc has no content to
@@ -141,9 +153,8 @@ def shingle_sets(spark: SparkSession, sf_dir: str, n: int = _NGRAM) -> DataFrame
     queries run that verify stage (q_dedup_minhash_lsh, q_dedup_
     minhash_md5, q_dedup_minhash_mllib, q_corpus_dedup_lsh,
     q_corpus_dedup_lsh_md5), so one bench pass aggregated the shingle
-    index into sets TEN times. One persist-once build (timed in
-    bench.py's shared-infra phase, honestly dropped between reps)
-    serves all ten references."""
+    index into sets TEN times. One persist-once build serves all ten
+    references."""
     key = f"{spark.sparkContext.applicationId}:{sf_dir}:{n}:sets"
     return lru_persisted(
         _SHINGLE_SETS_CACHE,
@@ -198,9 +209,86 @@ def shingle_index(spark: SparkSession, sf_dir: str, n: int = _NGRAM) -> DataFram
     )
 
 
-def _jaccard_pairs(shingled: DataFrame, df_cap: int | None = None) -> DataFrame:
-    """All doc pairs sharing >=1 shingle, with exact Jaccard similarity.
-    |A∪B| = |A|+|B|-|A∩B|.
+def holdout_hits(sh: DataFrame, is_eval: Column, is_train: Column) -> DataFrame:
+    """(doc_id, n_hits): for every train doc, the number of its distinct
+    shingles also present in some eval doc — the decontamination overlap
+    over a (doc_id, shingle) relation. Both predicates are passed (not
+    one and its negation) so each caller states its split exactly.
+    DuckDB twin: holdout_hits_sql."""
+    ev = sh.filter(is_eval).select("shingle").distinct()
+    return (
+        sh.filter(is_train)
+        .join(ev, "shingle")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+
+
+def holdout_hits_sql(eval_pred: str, train_pred: str, n: int) -> str:
+    """DuckDB twin of holdout_hits over the n-gram shingles; both
+    predicates are SQL over doc_id."""
+    return f"""
+    WITH sh AS ({shingle_sql(n)}),
+    ev AS (SELECT DISTINCT shingle FROM sh WHERE {eval_pred})
+    SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hits
+    FROM sh s JOIN ev USING (shingle)
+    WHERE {train_pred}
+    GROUP BY s.doc_id
+    """
+
+
+def jaccard(
+    n_inter: Column | str = "n_inter", n_a: str = "n_a", n_b: str = "n_b"
+) -> Column:
+    """The raw Jaccard ratio |A∩B| / (|A|+|B|-|A∩B|) from set sizes.
+    DuckDB twin: jaccard_sql."""
+    i = F.col(n_inter) if isinstance(n_inter, str) else n_inter
+    return i * 1.0 / (F.col(n_a) + F.col(n_b) - i)
+
+
+def jaccard_sql(inter: str, na: str, nb: str) -> str:
+    """DuckDB twin of jaccard."""
+    return f"{inter} * 1.0 / ({na} + {nb} - {inter})"
+
+
+def _over_threshold(
+    pairs: DataFrame,
+    ratio: Column,
+    threshold: float,
+    name: str = "jaccard",
+    keys: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """(keys..., name) for the pairs whose RAW ratio is >= threshold,
+    the ratio reported rounded to 6 dp. The predicate matches every
+    oracle's WHERE on the unrounded expression. Filtering on the rounded
+    column admits pairs in [threshold - 5e-7, threshold) that the
+    oracles exclude; one such phantom edge perturbs degree-sensitive
+    consumers (PageRank degrees, CC components) far beyond its own
+    row."""
+    return pairs.filter(ratio >= threshold).select(
+        *keys, roundn(ratio, 6).alias(name)
+    )
+
+
+def _jaccard_from_overlaps(overlaps: DataFrame) -> DataFrame:
+    """Jaccard (rounded, unthresholded) as a projection of the shared
+    pair-overlap relation — no shuffle of its own."""
+    return overlaps.select("doc_a", "doc_b", roundn(jaccard(), 6).alias("jaccard"))
+
+
+def near_dup_pairs(overlaps: DataFrame) -> DataFrame:
+    """Thresholded near-dup pairs (doc_a, doc_b, jaccard) from an
+    overlap relation: raw-ratio predicate, rounded report
+    (_over_threshold)."""
+    return _over_threshold(overlaps, jaccard(), _JACCARD_THRESHOLD)
+
+
+def _pair_overlaps(shingled: DataFrame, df_cap: int | None = None) -> DataFrame:
+    """The shared pair-overlap skeleton: (doc_a, doc_b, n_inter, n_a,
+    n_b) for all doc pairs sharing >=1 (kept) shingle — the relation
+    every set-similarity metric (Jaccard, containment, overlap
+    coefficient) is a one-line projection of. DuckDB twin:
+    overlap_ctes_sql.
 
     Intersection counts come from ONE groupBy(shingle) + in-group pair
     generation, not a self-join: the self-join shuffles the shingle
@@ -216,54 +304,11 @@ def _jaccard_pairs(shingled: DataFrame, df_cap: int | None = None) -> DataFrame:
     docs emits 5*10^11 pairs from a single task. With a cap, shingles
     with document frequency > df_cap are dropped BEFORE pair generation —
     a free filter on the already-grouped relation (no extra shuffle) that
-    bounds per-shingle fan-out at df_cap(df_cap-1)/2. Jaccard is then
-    computed over the pruned shingle universe (per-doc sizes recounted
-    from the kept shingles), keeping the metric internally consistent —
-    mirrored exactly by the DuckDB oracle's HAVING count(*) <= cap.
-    df_cap=None keeps unpruned semantics (the oracle ground truth)."""
-    return _jaccard_from_overlaps(_pair_overlaps(shingled, df_cap))
-
-
-def _jaccard_from_overlaps(overlaps: DataFrame) -> DataFrame:
-    """Jaccard = |A∩B| / (|A|+|B|-|A∩B|) as a projection of the shared
-    pair-overlap relation — no shuffle of its own."""
-    return overlaps.select(
-        "doc_a",
-        "doc_b",
-        roundn(
-            F.col("n_inter")
-            * 1.0
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-            6,
-        ).alias("jaccard"),
-    )
-
-
-def near_dup_pairs(overlaps: DataFrame) -> DataFrame:
-    """Thresholded near-dup pairs (doc_a, doc_b, jaccard) from an
-    overlap relation. The selection predicate runs on the RAW
-    intersection ratio — matching every oracle's WHERE on the unrounded
-    expression — and only the REPORTED metric is rounded to 6 dp.
-    Filtering on the rounded column (the pre-r6 form) admitted pairs in
-    [threshold - 5e-7, threshold) that the oracles exclude; one such
-    phantom edge perturbs degree-sensitive consumers (PageRank degrees,
-    CC components) far beyond its own row."""
-    raw = (
-        F.col("n_inter")
-        * 1.0
-        / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    )
-    return _jaccard_from_overlaps(
-        overlaps.filter(raw >= _JACCARD_THRESHOLD)
-    )
-
-
-def _pair_overlaps(shingled: DataFrame, df_cap: int | None = None) -> DataFrame:
-    """The shared pair-overlap skeleton: (doc_a, doc_b, n_inter, n_a,
-    n_b) for all doc pairs sharing >=1 (kept) shingle — the relation
-    every set-similarity metric (Jaccard, containment, overlap
-    coefficient) is a one-line projection of. See _jaccard_pairs for the
-    one-groupBy design and the df_cap stop-shingle guard."""
+    bounds per-shingle fan-out at df_cap(df_cap-1)/2. Set sizes are then
+    recounted from the kept shingles, keeping every metric internally
+    consistent over the pruned universe — mirrored exactly by the
+    oracle's `kept` CTE (overlap_ctes_sql). df_cap=None keeps unpruned
+    semantics (the oracle ground truth)."""
     # r13 (guide §4.1 — prefer codegen over interpreted HOFs): in-group
     # pair generation is two codegen'd Generate (explode) passes + an
     # a<b filter, replacing the flatten/transform/slice HOF explosion
@@ -344,10 +389,19 @@ def pair_overlaps(
     )
 
 
-# DuckDB-side exact near-dup pairs — the oracle for q_dedup_ngram_jaccard
-# and the edge set for q_dedup_clusters' oracle (corpus_ops.py).
-NGRAM_PAIRS_ORACLE = f"""
-    WITH sh AS ({_SHINGLE_SQL}),
+def overlap_ctes_sql(df_cap: int | None = None) -> str:
+    """DuckDB twin of _pair_overlaps: the CTEs `sh` (doc_id, shingle),
+    pruned to shingles of document frequency <= df_cap when a cap is
+    given; `sizes` (doc_id, n) over the kept shingles; and `inter`
+    (doc_a, doc_b, n_inter) for every pair sharing a kept shingle."""
+    sh = f"sh AS ({shingle_sql()})"
+    if df_cap is not None:
+        sh = f"""sh0 AS ({shingle_sql()}),
+    kept AS (
+        SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {df_cap}
+    ),
+    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN kept USING (shingle))"""
+    return f"""{sh},
     sizes AS (
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
     ),
@@ -355,14 +409,27 @@ NGRAM_PAIRS_ORACLE = f"""
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           {roundn_sql('n_inter * 1.0 / (sa.n + sb.n - n_inter)', 6)} AS jaccard
+    )"""
+
+
+def jaccard_pairs_sql(df_cap: int | None = None) -> str:
+    """DuckDB twin of near_dup_pairs(_pair_overlaps(..., df_cap)):
+    (doc_a, doc_b, jaccard) above the threshold, raw-ratio predicate,
+    rounded report."""
+    j = jaccard_sql("n_inter", "sa.n", "sb.n")
+    return f"""
+    WITH {overlap_ctes_sql(df_cap)}
+    SELECT doc_a, doc_b, {roundn_sql(j, 6)} AS jaccard
     FROM inter
     JOIN sizes sa ON sa.doc_id = doc_a
     JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= {_JACCARD_THRESHOLD}
+    WHERE {j} >= {_JACCARD_THRESHOLD}
     """
+
+
+# DuckDB-side exact near-dup pairs — the oracle for q_dedup_ngram_jaccard
+# and the edge set for q_dedup_clusters' oracle (corpus_ops.py).
+NGRAM_PAIRS_ORACLE = jaccard_pairs_sql()
 
 
 @query("q_dedup_ngram_jaccard", oracle=NGRAM_PAIRS_ORACLE)
@@ -378,30 +445,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DF_CAP = 50
 
-NGRAM_PRUNED_ORACLE = f"""
-    WITH sh0 AS ({_SHINGLE_SQL}),
-    kept AS (
-        SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {_DF_CAP}
-    ),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN kept USING (shingle)),
-    sizes AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-    ),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           {roundn_sql('n_inter * 1.0 / (sa.n + sb.n - n_inter)', 6)} AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= {_JACCARD_THRESHOLD}
-    """
-
-
-@query("q_dedup_ngram_pruned", oracle=NGRAM_PRUNED_ORACLE)
+@query("q_dedup_ngram_pruned", oracle=jaccard_pairs_sql(_DF_CAP))
 def q_dedup_ngram_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard with stop-shingle document-frequency pruning
     (df_cap=50) — the skew guard the unpruned variant lacks: boilerplate
@@ -419,19 +463,7 @@ _CONTAINMENT_THRESHOLD = 0.8
 @query(
     "q_dedup_containment",
     oracle=f"""
-    WITH sh0 AS ({_SHINGLE_SQL}),
-    kept AS (
-        SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {_DF_CAP}
-    ),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN kept USING (shingle)),
-    sizes AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-    ),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {overlap_ctes_sql(_DF_CAP)}
     SELECT doc_a, doc_b,
            {roundn_sql('n_inter * 1.0 / least(sa.n, sb.n)', 6)} AS containment
     FROM inter
@@ -450,17 +482,12 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted pair_overlaps relation (one groupBy, df_cap
     stop-shingle guard) with the Jaccard family — the metric is a
     projection, not a new shuffle, and the pair generation is not even
-    recomputed."""
-    return (
-        pair_overlaps(spark, sf_dir, df_cap=_DF_CAP)
-        .select(
-            "doc_a",
-            "doc_b",
-            roundn(
-                F.col("n_inter") * 1.0 / F.least(F.col("n_a"), F.col("n_b")), 6
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= _CONTAINMENT_THRESHOLD)
+    recomputed. Raw-ratio predicate, rounded report (_over_threshold)."""
+    return _over_threshold(
+        pair_overlaps(spark, sf_dir, df_cap=_DF_CAP),
+        F.col("n_inter") * 1.0 / F.least(F.col("n_a"), F.col("n_b")),
+        _CONTAINMENT_THRESHOLD,
+        name="containment",
     )
 
 
@@ -477,14 +504,14 @@ def _candidate_pairs(
 ) -> DataFrame:
     """Distinct (doc_a < doc_b) candidate pairs from a (doc_id, band, sig)
     relation via ONE groupBy(band, sig) + in-group pair generation — the
-    same rewrite as _jaccard_pairs: the equi-self-join computes and
+    same rewrite as _pair_overlaps: the equi-self-join computes and
     shuffles the band relation twice (and for the MLlib variant "compute"
     means the whole HashingTF + model-hash pipeline), the groupBy does it
     once and emits identical pairs from the grouped doc list. Bucket
     fan-out is g(g-1)/2 either way; a doc appears at most once per
     (band, sig) so no self-pairs arise.
 
-    ``bucket_cap`` is the LSH twin of _jaccard_pairs' stop-shingle
+    ``bucket_cap`` is the LSH twin of _pair_overlaps' stop-shingle
     df_cap: a band signature shared by g documents fans out g(g-1)/2
     candidate pairs from one task, and a degenerate signature (e.g.
     boilerplate-dominated min-hashes) shared by 10^6 docs would emit
@@ -494,7 +521,7 @@ def _candidate_pairs(
     signature and is the exact-verify stage's job to reject anyway. At
     the default 5000 the cap never fires on healthy data (expected
     bucket size is a handful of near-dups); it exists to bound the
-    worst case."""
+    worst case. DuckDB twin: capped_candidates_sql."""
     # r13 (guide §4.1, the _pair_overlaps rewrite): two codegen'd
     # explodes + an a<b filter replace the interpreted flatten/
     # transform/slice HOF pair explosion (and the per-group sort_array,
@@ -519,6 +546,53 @@ def _candidate_pairs(
     )
 
 
+def capped_candidates_sql(
+    rel: str,
+    keys: tuple[str, ...] = ("band", "sig"),
+    id_col: str = "doc_id",
+    pair: tuple[str, str] = ("doc_a", "doc_b"),
+) -> str:
+    """DuckDB twin of _candidate_pairs: the CTEs `bsz` (bucket sizes
+    over ``keys`` of relation ``rel``) and `cand` (distinct id pairs
+    sharing a bucket of at most _LSH_BUCKET_CAP members)."""
+
+    def on(x: str, y: str) -> str:
+        return " AND ".join(f"{x}.{k} = {y}.{k}" for k in keys)
+
+    return f"""bsz AS (
+    SELECT {', '.join(keys)}, count(*) AS g FROM {rel} GROUP BY {', '.join(keys)}
+),
+cand AS (
+    SELECT DISTINCT a.{id_col} AS {pair[0]}, b.{id_col} AS {pair[1]}
+    FROM {rel} a
+    JOIN {rel} b ON {on('a', 'b')} AND a.{id_col} < b.{id_col}
+    JOIN bsz z ON {on('z', 'a')}
+    WHERE z.g <= {_LSH_BUCKET_CAP}
+)"""
+
+
+def band_explode(sig: DataFrame, lanes: list[Column], combine) -> DataFrame:
+    """(doc_id, band, sig) from a per-doc signature relation: the lanes
+    split into bands of _ROWS_PER_BAND, each band's signature is
+    ``combine(*its lanes)``, one row per band via one explode."""
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        combine(
+                            *lanes[b * _ROWS_PER_BAND : (b + 1) * _ROWS_PER_BAND]
+                        ).alias("sig"),
+                    )
+                    for b in range(len(lanes) // _ROWS_PER_BAND)
+                ]
+            )
+        ).alias("bs"),
+    ).select("doc_id", "bs.band", "bs.sig")
+
+
 def minhash_bands(sh: DataFrame) -> DataFrame:
     """(doc_id, band, sig) banded MinHash signatures from a (doc_id,
     shingle) relation: 16 min-hashes per doc (ONE hash aggregate;
@@ -531,25 +605,8 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
             for k in range(_MINHASH_K)
         ]
     )
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col(f"mh{b * _ROWS_PER_BAND + r}")
-                                for r in range(_ROWS_PER_BAND)
-                            ]
-                        ).alias("sig"),
-                    )
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
+    lanes = [F.col(f"mh{k}") for k in range(_MINHASH_K)]
+    return band_explode(sig, lanes, F.xxhash64)
 
 
 @query("q_dedup_minhash_lsh")  # rows-only: xxhash64 signatures are Spark-specific
@@ -599,68 +656,34 @@ def minhash_bands_md5(shs: DataFrame) -> DataFrame:
             for k in range(_MINHASH_K)
         ]
     )
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"mh{b * _ROWS_PER_BAND + r}")
-                                    for r in range(_ROWS_PER_BAND)
-                                ],
-                            )
-                        ).alias("sig"),
-                    )
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
+    lanes = [F.col(f"mh{k}") for k in range(_MINHASH_K)]
+    return band_explode(sig, lanes, lambda *ls: F.md5(F.concat_ws(",", *ls)))
 
 
-def _minhash_md5_salt_sql(k: int) -> str:
-    """DuckDB twin of one md5 min-hash lane column (see
-    minhash_bands_md5: 4 salted md5s × 4 hex lanes, string min)."""
-    return (
-        f"min(substr(md5(concat(shingle, '|{k // 4}')),"
-        f" {1 + 8 * (k % 4)}, 8)) AS mh{k}"
+def minhash_md5_pairs_sql(sh: str) -> str:
+    """DuckDB twin of _verify_candidates(_candidate_pairs(
+    minhash_bands_md5(...))) over the string-shingle relation ``sh``
+    (doc_id, shingle): the same 16 md5-lane min-hashes (4 salted md5s ×
+    4 hex lanes, string min), md5-of-comma-joined-lanes band signatures,
+    capped candidates and exact-Jaccard verify. Returns (doc_a, doc_b,
+    jaccard)."""
+    mh = ", ".join(
+        f"min(substr(md5(concat(shingle, '|{k // 4}')), {1 + 8 * (k % 4)}, 8))"
+        f" AS mh{k}"
+        for k in range(_MINHASH_K)
     )
-
-
-# DuckDB twin of q_dedup_minhash_md5: same 16 md5-lane min-hashes, same
-# md5-of-comma-joined-lanes band signatures, same bucket-cap'd candidate
-# generation, same exact-Jaccard verify — over the string shingles both
-# engines derive identically (_SHINGLE_SQL ↔ _shingle_strings).
-_MINHASH_MD5_ORACLE = f"""
-WITH sh AS ({_SHINGLE_SQL}),
-mh AS (
-    SELECT doc_id,
-           {', '.join(_minhash_md5_salt_sql(k) for k in range(_MINHASH_K))}
-    FROM sh GROUP BY doc_id
-),
-bands AS (
-    {' UNION ALL '.join(
-        "SELECT doc_id, " + str(b) + " AS band, md5(concat_ws(',', "
-        + ', '.join(
-            f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND)
-        )
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, md5(concat_ws(',', "
+        + ", ".join(f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND))
         + ")) AS sig FROM mh"
         for b in range(_BANDS)
-    )}
-),
-bsz AS (SELECT band, sig, count(*) AS g FROM bands GROUP BY 1, 2),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a
-    JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    JOIN bsz z ON z.band = a.band AND z.sig = a.sig
-    WHERE z.g <= {_LSH_BUCKET_CAP}
-),
+    )
+    j = jaccard_sql("n_inter", "sa.n", "sb.n")
+    return f"""
+WITH sh AS ({sh}),
+mh AS (SELECT doc_id, {mh} FROM sh GROUP BY doc_id),
+bands AS ({bands}),
+{capped_candidates_sql("bands")},
 sizes AS (
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
 ),
@@ -671,16 +694,15 @@ inter AS (
     JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
     GROUP BY 1, 2
 )
-SELECT doc_a, doc_b,
-       {roundn_sql('n_inter * 1.0 / (sa.n + sb.n - n_inter)', 6)} AS jaccard
+SELECT doc_a, doc_b, {roundn_sql(j, 6)} AS jaccard
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= {_JACCARD_THRESHOLD}
+WHERE {j} >= {_JACCARD_THRESHOLD}
 """
 
 
-@query("q_dedup_minhash_md5", oracle=_MINHASH_MD5_ORACLE)
+@query("q_dedup_minhash_md5", oracle=minhash_md5_pairs_sql(shingle_sql()))
 def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-hashed MinHash+LSH twin (r12 VERDICT item 1): the exact
     band/candidate/verify machinery of q_dedup_minhash_lsh — same
@@ -730,23 +752,12 @@ def _verify_candidates(
         F.col("n_shingles").alias("n_b"),
     )
     n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        candidates.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
-        # raw-ratio predicate, rounded report (see near_dup_pairs) —
-        # also keeps the LSH edge set a strict subset of the exact one
-        # at the threshold boundary
-        .filter(
-            n_inter * 1.0 / (F.col("n_a") + F.col("n_b") - n_inter)
-            >= _JACCARD_THRESHOLD
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            roundn(
-                n_inter * 1.0 / (F.col("n_a") + F.col("n_b") - n_inter), 6
-            ).alias("jaccard"),
-        )
+    # the raw-ratio predicate also keeps the LSH edge set a strict subset
+    # of the exact one at the threshold boundary
+    return _over_threshold(
+        candidates.join(sa, on="doc_a").join(sb, on="doc_b"),
+        jaccard(n_inter),
+        _JACCARD_THRESHOLD,
     )
 
 
@@ -1233,17 +1244,7 @@ bk AS (
         for t in range(_EMB_LSH_TABLES)
     )}
 ),
-bsz AS (
-    SELECT tbl, label, bkt, count(*) AS g FROM bk GROUP BY 1, 2, 3
-),
-cand AS (
-    SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-    FROM bk a
-    JOIN bk b ON a.tbl = b.tbl AND a.label = b.label AND a.bkt = b.bkt
-             AND a.vec_id < b.vec_id
-    JOIN bsz z ON z.tbl = a.tbl AND z.label = a.label AND z.bkt = a.bkt
-    WHERE z.g <= {_LSH_BUCKET_CAP}
-),
+{capped_candidates_sql("bk", ("tbl", "label", "bkt"), "vec_id", ("vec_a", "vec_b"))},
 scored AS (
     SELECT c.vec_a, c.vec_b, a.label, {COSINE_SQL} AS cosine
     FROM cand c
@@ -1282,37 +1283,37 @@ def q_dedup_embed_cosine_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def exact_survivors(docs: DataFrame) -> DataFrame:
+    """The exact dedup stage: (doc_id) keeping the lowest doc_id per
+    md5(text). A MIN aggregate, not a row_number window: the aggregate
+    partial-combines map-side and never sorts, where the window sorts
+    every hash partition (same survivor set — min doc_id ≡ rn=1 under
+    ORDER BY doc_id). DuckDB twin: EXACT_SURVIVORS_SQL."""
+    return (
+        docs.groupBy(F.md5("text").alias("h"))
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+
+
+EXACT_SURVIVORS_SQL = "SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)"
+
+
+def _drop_near_dups(survivors: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The keep policy: survivors minus the higher doc_id of every
+    near-dup pair."""
+    near_dups = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    return survivors.join(near_dups, on="doc_id", how="left_anti")
+
+
 @query(
     "q_corpus_dedup",
     oracle=f"""
-    WITH canon AS (
-        SELECT doc_id, md5(text) AS h,
-               row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-                   AS rn
-        FROM documents
-    ),
-    exact_survivors AS (SELECT doc_id FROM canon WHERE rn = 1),
-    sh0 AS ({_SHINGLE_SQL}),
-    kept AS (
-        SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {_DF_CAP}
-    ),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN kept USING (shingle)),
-    sizes AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-    ),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    WITH survivors AS ({EXACT_SURVIVORS_SQL}),
     near_dups AS (
-        SELECT DISTINCT doc_b AS doc_id
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= {_JACCARD_THRESHOLD}
+        SELECT DISTINCT doc_b AS doc_id FROM ({jaccard_pairs_sql(_DF_CAP)})
     )
-    SELECT doc_id FROM exact_survivors
+    SELECT doc_id FROM survivors
     WHERE doc_id NOT IN (SELECT doc_id FROM near_dups)
     """,
 )
@@ -1344,19 +1345,9 @@ def q_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage 2 swaps in the MinHash+LSH candidate generator
     (q_dedup_minhash_lsh) with identical keep-policy plumbing; the exact
     variant here is the DuckDB-checkable ground truth."""
-    docs = table(spark, sf_dir, "documents")
-    # keep-lowest per content hash as a MIN aggregate, not a row_number
-    # window: the aggregate partial-combines map-side and never sorts,
-    # where the window sorts every hash partition (same survivor set —
-    # min doc_id ≡ rn=1 under ORDER BY doc_id)
-    exact_survivors = (
-        docs.groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    survivors = exact_survivors(table(spark, sf_dir, "documents"))
     pairs = near_dup_pairs(pair_overlaps(spark, sf_dir, df_cap=_DF_CAP))
-    near_dups = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    return exact_survivors.join(near_dups, on="doc_id", how="left_anti")
+    return _drop_near_dups(survivors, pairs)
 
 
 @query("q_corpus_dedup_lsh")  # rows-only: LSH signatures are engine-specific
@@ -1376,88 +1367,34 @@ def q_corpus_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor set CONTAINS q_corpus_dedup's (LSH candidates are a subset
     of the exact pair set, so LSH can only drop fewer docs — the recall
     trade is one-sided and auditable)."""
-    docs = table(spark, sf_dir, "documents")
-    # min-aggregate keep-lowest (see q_corpus_dedup): no per-hash sort
-    exact_survivors = (
-        docs.groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    # NO broadcast hint: exact_survivors is corpus-cardinality (one row
-    # per distinct text) — forcing it to every executor OOMs at the
+    survivors = exact_survivors(table(spark, sf_dir, "documents"))
+    # NO broadcast hint: the survivors are corpus-cardinality (one row
+    # per distinct text) — forcing them to every executor OOMs at the
     # 100 TB design point this operator exists for. AQE picks the build
     # side; at fixture scale it still broadcasts on its own.
-    sh = shingle_index(spark, sf_dir).join(
-        exact_survivors.select("doc_id"), "doc_id", "semi"
-    )
+    sh = shingle_index(spark, sf_dir).join(survivors, "doc_id", "semi")
     # UNFILTERED persist-once set relation: _verify_candidates INNER-
     # joins sets to the candidate list, and candidates only ever name
     # exact-stage survivors (bands come from the filtered index), while
     # a surviving doc's own shingle set / count is unchanged by the
     # doc-level filter — so pre-filtering sets is a semantic no-op that
-    # would just re-run the exact_survivors aggregate twice more
+    # would just re-run the exact-stage aggregate twice more
     near_pairs = _verify_candidates(
-        sh,
-        _candidate_pairs(minhash_bands(sh)),
-        sets=shingle_sets(spark, sf_dir),
+        sh, _candidate_pairs(minhash_bands(sh)), sets=shingle_sets(spark, sf_dir)
     )
-    near_dups = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    return exact_survivors.select("doc_id").join(
-        near_dups, on="doc_id", how="left_anti"
-    )
+    return _drop_near_dups(survivors, near_pairs)
 
 
 # DuckDB twin of q_corpus_dedup_lsh_md5: the WHOLE shipped composition —
-# md5(text) exact stage, md5-lane banded MinHash over the survivor
-# shingles, bucket-cap'd candidates, exact-Jaccard verify, higher-id
-# drop — in one value-hashed query (same band CTEs as
-# _MINHASH_MD5_ORACLE, restricted to the exact-stage survivors).
+# md5(text) exact stage, the md5 MinHash pair body over the survivor
+# shingles, higher-id drop — in one value-hashed query.
 _CORPUS_DEDUP_LSH_MD5_ORACLE = f"""
-WITH canon AS (
-    SELECT md5(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1
-),
-survivors AS (SELECT doc_id FROM canon),
-sh0 AS ({_SHINGLE_SQL}),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN survivors USING (doc_id)),
-mh AS (
-    SELECT doc_id,
-           {', '.join(_minhash_md5_salt_sql(k) for k in range(_MINHASH_K))}
-    FROM sh GROUP BY doc_id
-),
-bands AS (
-    {' UNION ALL '.join(
-        "SELECT doc_id, " + str(b) + " AS band, md5(concat_ws(',', "
-        + ', '.join(
-            f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND)
-        )
-        + ")) AS sig FROM mh"
-        for b in range(_BANDS)
-    )}
-),
-bsz AS (SELECT band, sig, count(*) AS g FROM bands GROUP BY 1, 2),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a
-    JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    JOIN bsz z ON z.band = a.band AND z.sig = a.sig
-    WHERE z.g <= {_LSH_BUCKET_CAP}
-),
-sizes AS (
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-),
-inter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-    FROM cand c
-    JOIN sh a ON a.doc_id = c.doc_a
-    JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-    GROUP BY 1, 2
-),
+WITH survivors AS ({EXACT_SURVIVORS_SQL}),
 near_dups AS (
-    SELECT DISTINCT doc_b AS doc_id
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= {_JACCARD_THRESHOLD}
+    SELECT DISTINCT doc_b AS doc_id FROM ({minhash_md5_pairs_sql(
+        f"SELECT s.doc_id, s.shingle FROM ({shingle_sql()}) s"
+        " JOIN survivors USING (doc_id)"
+    )})
 )
 SELECT doc_id FROM survivors
 WHERE doc_id NOT IN (SELECT doc_id FROM near_dups)
@@ -1483,24 +1420,14 @@ def q_corpus_dedup_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     _verify_candidates on the hashed shingle index. md5-lane min-hashes
     (minhash_bands_md5) replace xxhash64 solely for engine portability;
     xxhash64 stays the production signature."""
-    docs = table(spark, sf_dir, "documents")
-    # min-aggregate keep-lowest (see q_corpus_dedup): no per-hash sort
-    exact_survivors = (
-        docs.groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    survivors = exact_survivors(table(spark, sf_dir, "documents"))
     # bands draw from the UNHASHED survivor shingles (md5 lanes must see
     # the same strings DuckDB does); verification joins the shared
-    # xxhash64 shingle index — set cardinalities agree (see _SHINGLE_SQL).
+    # xxhash64 shingle index — set cardinalities agree (see shingle_sql).
     # Both relations are the persist-once builds (r13: the string
     # shingles were an inline rebuild per twin).
-    shs = shingle_strings(spark, sf_dir).join(
-        exact_survivors.select("doc_id"), "doc_id", "semi"
-    )
-    sh = shingle_index(spark, sf_dir).join(
-        exact_survivors.select("doc_id"), "doc_id", "semi"
-    )
+    shs = shingle_strings(spark, sf_dir).join(survivors, "doc_id", "semi")
+    sh = shingle_index(spark, sf_dir).join(survivors, "doc_id", "semi")
     # UNFILTERED persist-once set relation (see q_corpus_dedup_lsh:
     # the candidate inner join already restricts to survivors, and
     # per-doc sets/counts are invariant to the doc-level filter)
@@ -1509,10 +1436,7 @@ def q_corpus_dedup_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         _candidate_pairs(minhash_bands_md5(shs)),
         sets=shingle_sets(spark, sf_dir),
     )
-    near_dups = near_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    return exact_survivors.select("doc_id").join(
-        near_dups, on="doc_id", how="left_anti"
-    )
+    return _drop_near_dups(survivors, near_pairs)
 
 
 _INCR_SPLIT_FRAC = 0.8  # stand-in: first 80% of doc_ids are "the corpus"
@@ -1522,7 +1446,7 @@ INCR_DEDUP_ORACLE = f"""
         SELECT CAST(floor(max(doc_id) * {_INCR_SPLIT_FRAC}) AS BIGINT) AS cut
         FROM documents
     ),
-    sh AS ({_SHINGLE_SQL}),
+    sh AS ({shingle_sql()}),
     sizes AS (
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
     ),
@@ -1533,11 +1457,11 @@ INCR_DEDUP_ORACLE = f"""
         GROUP BY 1, 2
     )
     SELECT new_doc, corpus_doc,
-           {roundn_sql('n_inter * 1.0 / (sn.n + sc.n - n_inter)', 6)} AS jaccard
+           {roundn_sql(jaccard_sql('n_inter', 'sn.n', 'sc.n'), 6)} AS jaccard
     FROM inter
     JOIN sizes sn ON sn.doc_id = new_doc
     JOIN sizes sc ON sc.doc_id = corpus_doc
-    WHERE n_inter * 1.0 / (sn.n + sc.n - n_inter) >= {_JACCARD_THRESHOLD}
+    WHERE {jaccard_sql('n_inter', 'sn.n', 'sc.n')} >= {_JACCARD_THRESHOLD}
     """
 
 
@@ -1574,57 +1498,26 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_doc", "corpus_doc")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return (
+    return _over_threshold(
         inter.join(
             sizes.select(F.col("doc_id").alias("new_doc"), F.col("n_sh").alias("n_n")),
             "new_doc",
-        )
-        .join(
+        ).join(
             sizes.select(
                 F.col("doc_id").alias("corpus_doc"), F.col("n_sh").alias("n_c")
             ),
             "corpus_doc",
-        )
-        # raw-ratio predicate, rounded report — see near_dup_pairs
-        .filter(
-            F.col("n_inter") * 1.0
-            / (F.col("n_n") + F.col("n_c") - F.col("n_inter"))
-            >= _JACCARD_THRESHOLD
-        )
-        .select(
-            "new_doc",
-            "corpus_doc",
-            roundn(
-                F.col("n_inter") * 1.0 / (F.col("n_n") + F.col("n_c") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
+        ),
+        jaccard("n_inter", "n_n", "n_c"),
+        _JACCARD_THRESHOLD,
+        keys=("new_doc", "corpus_doc"),
     )
 
 
 @query(
     "q_source_overlap_matrix",
     oracle=f"""
-    WITH sh0 AS ({_SHINGLE_SQL}),
-    kept AS (
-        SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {_DF_CAP}
-    ),
-    sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN kept USING (shingle)),
-    sizes AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
-    ),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= {_JACCARD_THRESHOLD}
-    )
+    WITH pairs AS ({jaccard_pairs_sql(_DF_CAP)})
     SELECT least(da.source, db.source) AS source_lo,
            greatest(da.source, db.source) AS source_hi,
            CAST(count(*) AS BIGINT) AS n_pairs

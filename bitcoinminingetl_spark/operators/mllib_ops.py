@@ -43,8 +43,11 @@ from bitcoinminingetl_spark.operators.dedup import (
     _NGRAM,
     _candidate_pairs,
     _verify_candidates,
+    band_explode,
+    ngram_array,
     normed_embeddings,
     shingle_index,
+    shingle_sets,
 )
 from bitcoinminingetl_spark.operators.similarity import (
     _IVF_CELL_DOT,
@@ -57,9 +60,7 @@ from bitcoinminingetl_spark.operators.similarity import (
 from bitcoinminingetl_spark.registry import query
 
 _TF_FEATURES = 1 << 18  # HashingTF bins; collisions ~ |shingles|²/2¹⁹ per doc
-_MLLIB_MINHASH_K = 16
-_MLLIB_BANDS = 4
-_MLLIB_ROWS = _MLLIB_MINHASH_K // _MLLIB_BANDS
+_MLLIB_MINHASH_K = 16  # banded 4x4 by dedup.band_explode
 _MLLIB_SEED = 42
 
 
@@ -100,8 +101,6 @@ def _shingle_array(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles: array<string>) — same 3-gram definition as
     dedup._shingled but kept as an array column for HashingTF input
     (shared codegen'd zip_with fold, dedup.ngram_array)."""
-    from bitcoinminingetl_spark.operators.dedup import ngram_array
-
     shingles = F.array_distinct(ngram_array(F.split("text", " "), _NGRAM))
     return docs.select("doc_id", shingles.alias("shingles"))
 
@@ -139,22 +138,7 @@ def q_dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
         vector_to_array(F.element_at("hashes", i + 1))[0]
         for i in range(_MLLIB_MINHASH_K)
     ]
-    bands_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*hv[b * _MLLIB_ROWS : (b + 1) * _MLLIB_ROWS]).alias("sig"),
-            )
-            for b in range(_MLLIB_BANDS)
-        ]
-    )
-    bands = (
-        model.transform(feat)
-        .select("doc_id", F.explode(bands_arr).alias("bs"))
-        .select("doc_id", "bs.band", "bs.sig")
-    )
-    from bitcoinminingetl_spark.operators.dedup import shingle_sets
-
+    bands = band_explode(model.transform(feat), hv, F.xxhash64)
     return _verify_candidates(
         shingle_index(spark, sf_dir),
         _candidate_pairs(bands),

@@ -28,6 +28,7 @@ from bitcoinminingetl_spark.functions.numeric import (
     roundn_sql,
 )
 from bitcoinminingetl_spark.functions.vectors import dot, usable_norm_sql
+from bitcoinminingetl_spark.operators.dedup import ngram_array, ngram_list_sql
 from bitcoinminingetl_spark.registry import query
 
 
@@ -442,10 +443,8 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH g AS (
         SELECT doc_id,
-               CASE WHEN text IS NULL THEN NULL ELSE list_transform(
-                   generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-                   i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')
-               ) END AS grams
+               CASE WHEN text IS NULL THEN NULL ELSE {ngram_list_sql(3)} END
+                   AS grams
         FROM documents
     )
     SELECT doc_id,
@@ -486,8 +485,6 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     producers), and apply the NULL mask to the cheap size() scalars in
     the second. NULL text still reads NULL everywhere — size() of the
     fallback '' gram is masked before any consumer sees it."""
-    from bitcoinminingetl_spark.operators.dedup import ngram_array
-
     raw = ngram_array(F.split("text", " "), 3)
     base = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1128,10 +1125,7 @@ _GOPHER_MAX_REP = 0.2
     oracle=f"""
     WITH g AS (
         SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-                   i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')
-               )) AS gram
+               unnest({ngram_list_sql(3)}) AS gram
         FROM documents WHERE text IS NOT NULL
     ), rep AS (
         SELECT doc_id,
@@ -1182,8 +1176,6 @@ def q_quality_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the oracle's NULL-gram COUNT(DISTINCT) scored it rep 1.0 and
     voted drop; see q_repetition_score). A doc with no text gets no
     verdict, not a confident one."""
-    from bitcoinminingetl_spark.operators.dedup import ngram_array
-
     toks = F.split("text", " ")
     grams = F.when(F.col("text").isNotNull(), ngram_array(toks, 3))
     n_tok = F.size(toks)

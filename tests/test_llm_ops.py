@@ -673,13 +673,13 @@ def test_dedup_pruned_drops_hot_shingle_pairs(spark, tmp_path):
     sh = dedup._shingled(dedup.table(spark, str(tmp_path), "documents"))
     unpruned = {
         (r.doc_a, r.doc_b)
-        for r in dedup._jaccard_pairs(sh)
+        for r in dedup._jaccard_from_overlaps(dedup._pair_overlaps(sh))
         .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
         .collect()
     }
     pruned = {
         (r.doc_a, r.doc_b)
-        for r in dedup._jaccard_pairs(sh, df_cap=dedup._DF_CAP)
+        for r in dedup._jaccard_from_overlaps(dedup._pair_overlaps(sh, df_cap=dedup._DF_CAP))
         .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
         .collect()
     }
@@ -690,7 +690,7 @@ def test_dedup_pruned_drops_hot_shingle_pairs(spark, tmp_path):
     # cap above every DF -> identical to unpruned semantics
     nop = {
         (r.doc_a, r.doc_b)
-        for r in dedup._jaccard_pairs(sh, df_cap=10_000)
+        for r in dedup._jaccard_from_overlaps(dedup._pair_overlaps(sh, df_cap=10_000))
         .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
         .collect()
     }

@@ -183,7 +183,9 @@ def test_pruned_jaccard_pairs_subset_of_cooccurrence(spark, cap):
         sh = dedup._shingled(
             dedup.table(spark, td, "documents")
         )
-        pairs = dedup._jaccard_pairs(sh, df_cap=cap).collect()
+        pairs = dedup._jaccard_from_overlaps(
+            dedup._pair_overlaps(sh, df_cap=cap)
+        ).collect()
     for r in pairs:
         assert 0.0 < r.jaccard <= 1.0
         assert r.doc_a < r.doc_b
