@@ -1762,17 +1762,17 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d_ok", F.row_number().over(w_dup) == 1
     )
     # contamination: train docs sharing any 13-gram with the eval split —
-    # via the SHARED persisted shingle index (8-byte hashed keys), the
-    # same relation q_decontaminate joins; an inline string-shingle
+    # q_decontaminate's holdout_hits stage over the SHARED persisted
+    # shingle index (8-byte hashed keys); an inline string-shingle
     # rebuild would re-run the scan+tokenize+explode and shuffle ~30-byte
     # strings where the family's doctrine shuffles longs
-    sh = shingle_index(spark, sf_dir, n=_DECON_N)
-    ev = sh.filter(F.col("doc_id") % 10 == 0).select("shingle").distinct()
     contaminated = (
-        sh.filter(F.col("doc_id") % 10 != 0)
-        .join(ev, "shingle", "semi")
+        holdout_hits(
+            shingle_index(spark, sf_dir, n=_DECON_N),
+            F.col("doc_id") % 10 == 0,
+            F.col("doc_id") % 10 != 0,
+        )
         .select("doc_id")
-        .distinct()
         .withColumn("contaminated", F.lit(True))
     )
     flagged = dedup.join(contaminated, "doc_id", "left").withColumn(
