@@ -31,13 +31,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry["q_window_join"].fn(spark, _SMOKE_SF_DIR)
 
 
-# The driver hash-checks the FIRST 50 entries of queries() (r13 VERDICT:
-# the verified window). Round 13's interrupted build added two md5 twins
-# whose names sort before q_dedup_exact, displacing the window's last two
-# queries — r13 VERDICT item 1 requires the first 50 to equal the round-12
-# window set again. No query is removed or renamed: the window names lead
-# (alphabetical among themselves, exactly the r12 set, frozen by
-# tests/test_round_hygiene.py), every other query follows alphabetically.
+# The driver hash-checks the FIRST 50 entries of queries(). The window is
+# frozen so that adding or deleting a query elsewhere in the registry
+# cannot shift which queries it covers: the window names lead
+# (alphabetical among themselves, frozen by tests/test_round_hygiene.py),
+# every other query follows alphabetically.
 DRIVER_WINDOW = (
     "q_agg_distinct", "q_agg_salted_distinct", "q_ann_brp_mllib",
     "q_ann_ivf", "q_ann_ivf_kmeans", "q_ann_lsh", "q_anomaly_zscore",
@@ -75,7 +73,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for every hash-checkable query; ops without an
-    entry here (streaming/state, LSH variants) get the rows-only check."""
+    entry here (streaming lifecycles, MLlib fits, sketches, xxhash64-based
+    LSH) get the rows-only check."""
     return {
         name: spec.oracle
         for name, spec in sorted(load_all().items())

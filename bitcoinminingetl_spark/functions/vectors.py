@@ -1,7 +1,7 @@
 """Vector math of the embedding family, in one place: the Spark column
 expressions (dot, norm, rounded cosine), their DuckDB twins, and the
-random-hyperplane sign-bucket kernel (Charikar, STOC'02) with its
-md5-plane integer variant.
+random-hyperplane sign-bucket kernel (Charikar, STOC'02) with its DuckDB
+twin.
 
 Cross-engine parity rests on evaluation order. ``dot`` is a left fold
 from 0.0 (zip_with + aggregate); DuckDB's ``list_reduce`` folds from
@@ -9,13 +9,11 @@ the first element, and 0.0 + x == x exactly in IEEE, so both engines
 produce bit-identical doubles before the 6-dp decimal rounding.
 
 Sign buckets: a vector's bucket in one table is the sum of 2^b over the
-planes b whose dot with it is >= 0. The float planes are the production
-path; their buckets depend on BLAS summation order, so queries built on
-them are checked rows-only. The md5 variant quantizes each component to
-floor(v * q_scale) int64 and uses small integer planes, so every bucket
-dot is exact integer arithmetic that DuckDB's fold reproduces — which
-lets the md5 twins run the production plan shape under a full value
-hash.
+planes b whose dot with it is >= 0. The kernel quantizes each component
+to floor(v * Q_SCALE) int64 and uses small integer planes (md5
+bytes), so every bucket dot is exact integer arithmetic: numpy's int64
+matmul and DuckDB's per-element fold cannot disagree on a sign, and
+every query of the LSH family carries a full value-hash oracle.
 """
 
 from __future__ import annotations
@@ -84,43 +82,40 @@ def usable_norm_sql(side: str) -> str:
 
 COSINE_SQL = roundn_sql(f"{DOT_SQL} / ({norm_sql('a')} * {norm_sql('b')})", 6)
 
-# Quantization scale of the md5 twins: one double multiply + floor per
-# component (IEEE-identical in numpy and DuckDB), after which every
-# bucket dot is exact int64 (max |dot| ~ 64 dims * 1e6 * 128 ≈ 8.2e9).
-MD5_Q_SCALE = 1_000_000.0
-# floor_long doctrine (functions/numeric._FLOOR_SAFE): a scaled
-# component at or past 2^63 cannot quantize — numpy's int64 cast is
-# undefined there and DuckDB's CAST raises — so it contributes 0,
-# identically in both engines. NaN/Inf compare not-less-than the bound
-# on both sides, so the one predicate masks them too.
-_FLOOR_SAFE = float(2**63)
+# Quantization scale of the sign-bucket kernel: one double multiply +
+# floor per component (IEEE-identical in numpy and DuckDB), after which
+# every bucket dot is exact int64 (max |dot| ~ 64 dims * 1e6 * 128 ≈ 8.2e9).
+Q_SCALE = 1_000_000.0
+# A scaled component quantizes only below 2^49, so that every plane dot
+# stays inside int64: 64 dims * |plane| <= 128 * 2^49 = 2^62. Past that
+# numpy's int64 arithmetic wraps silently while DuckDB's raises (and past
+# 2^63 numpy's cast is undefined while DuckDB's CAST raises), so such a
+# component contributes 0, identically in both engines. NaN/Inf compare
+# not-less-than the bound on both sides, so the one predicate masks them
+# too.
+_Q_SAFE = float(2**49)
 
 
-def sign_bucket_udf(planes, bits: int, q_scale: float | None = None):
+def sign_bucket_udf(planes, bits: int):
     """Arrow-batched sign-bucket kernel: embedding -> array<long> with one
-    bucket id per table. `planes` is (tables * bits, dims) or
-    (tables, bits, dims). All tables' plane dots are ONE numpy matmul per
-    Arrow batch; the higher-order-function form (one dot per plane) is a
+    bucket id per table. `planes` is the (tables * bits, dims) integer
+    matrix of md5_planes. All tables' plane dots are ONE numpy int64
+    matmul per Arrow batch over the floor(v * Q_SCALE) quantization;
+    the higher-order-function form (one dot per plane) is a
     ~1500-literal expression tree that falls out of whole-stage codegen
-    and evaluates interpreted, an order of magnitude slower.
-
-    q_scale=None: float planes over the double-cast vector. With a scale:
-    integer planes over the floor(v * q_scale) int64 quantization —
-    exact arithmetic that md5_bucket_sql reproduces in DuckDB."""
-    p = np.asarray(planes, dtype=np.float64 if q_scale is None else np.int64)
-    p = p.reshape(-1, p.shape[-1])
+    and evaluates interpreted, an order of magnitude slower. DuckDB
+    twin: bucket_rows_sql."""
+    p = np.asarray(planes, dtype=np.int64)
     tables = len(p) // bits
     weights = (2 ** np.arange(bits)).astype(np.int64)
 
     @pandas_udf("array<long>")
     def buckets(emb: pd.Series) -> pd.Series:
-        v = np.array(emb.tolist(), dtype=np.float64)  # (n, dims)
-        if q_scale is not None:
-            x = v * q_scale
-            ok = np.abs(x) < _FLOOR_SAFE  # False for NaN/Inf/overflow
-            v = np.floor(np.where(ok, x, 0.0)).astype(np.int64)
-        signs = (v @ p.T >= 0).astype(np.int64)  # (n, tables * bits)
-        return pd.Series(list(signs.reshape(len(v), tables, bits) @ weights))
+        x = np.array(emb.tolist(), dtype=np.float64) * Q_SCALE  # (n, dims)
+        ok = np.abs(x) < _Q_SAFE  # False for NaN/Inf/overflow
+        q = np.floor(np.where(ok, x, 0.0)).astype(np.int64)
+        signs = (q @ p.T >= 0).astype(np.int64)  # (n, tables * bits)
+        return pd.Series(list(signs.reshape(len(q), tables, bits) @ weights))
 
     return buckets
 
@@ -140,26 +135,36 @@ def md5_planes(tag: str, tables: int, bits: int) -> list[list[int]]:
     ]
 
 
-def quantize_sql(q_scale: float) -> str:
-    """DuckDB twin of sign_bucket_udf's quantization of `embedding`:
-    components at or past the int64 edge (NaN/Inf included) become 0,
-    matching the UDF's mask; an unguarded CAST would raise there."""
-    return (
-        "list_transform(CAST(embedding AS DOUBLE[]), "
-        f"v -> CASE WHEN abs(v * {q_scale!r}) < 9223372036854775808.0 "
-        f"THEN CAST(floor(v * {q_scale!r}) AS BIGINT) ELSE 0 END)"
+# DuckDB twin of sign_bucket_udf's quantization of `embedding`:
+# components at or past _Q_SAFE (NaN/Inf included) become 0, matching
+# the UDF's mask.
+_QUANTIZE_SQL = (
+    "list_transform(CAST(embedding AS DOUBLE[]), "
+    f"v -> CASE WHEN abs(v * {Q_SCALE!r}) < {_Q_SAFE!r} "
+    f"THEN CAST(floor(v * {Q_SCALE!r}) AS BIGINT) ELSE 0 END)"
+)
+
+
+def bucket_rows_sql(planes: list[list[int]], bits: int, rel: str, cols: str) -> str:
+    """DuckDB twin of posexplode(sign_bucket_udf(planes, bits)(embedding))
+    over relation `rel`: one (cols..., tbl, bkt) row per vector and table,
+    tables numbered from 0. A table's bucket is the sum of 2^b over its
+    planes b whose int64 dot with the quantized vector `q` is >= 0; each
+    plane literal is zipped onto `q` once per row."""
+
+    def bucket(t: int) -> str:
+        terms = []
+        for b in range(bits):
+            lit = "[" + ", ".join(str(x) for x in planes[t * bits + b]) + "]"
+            dot_q = (
+                f"list_reduce(list_transform(list_zip(q, {lit}), "
+                "p -> p[1] * p[2]), (x, y) -> x + y)"
+            )
+            terms.append(f"(CASE WHEN {dot_q} >= 0 THEN {2 ** b} ELSE 0 END)")
+        return "(" + " + ".join(terms) + ")"
+
+    qv = f"(SELECT {cols}, {_QUANTIZE_SQL} AS q FROM {rel})"
+    return " UNION ALL ".join(
+        f"SELECT {cols}, {t} AS tbl, {bucket(t)} AS bkt FROM {qv}"
+        for t in range(len(planes) // bits)
     )
-
-
-def md5_bucket_sql(planes: list[list[int]], bits: int, t: int) -> str:
-    """DuckDB bucket expression of table `t` over the quantized vector
-    column `q`: the sum of 2^b over planes with an int64 dot >= 0."""
-    terms = []
-    for b in range(bits):
-        lit = "[" + ", ".join(str(x) for x in planes[t * bits + b]) + "]"
-        dot_q = (
-            "list_reduce(list_transform(generate_series(1, len(q)), "
-            f"i -> q[i] * ({lit})[i]), (x, y) -> x + y)"
-        )
-        terms.append(f"(CASE WHEN {dot_q} >= 0 THEN {2 ** b} ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"

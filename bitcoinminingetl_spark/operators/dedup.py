@@ -26,12 +26,10 @@ from bitcoinminingetl_spark.functions.cache import lru_persisted
 from bitcoinminingetl_spark.functions.numeric import roundn, roundn_sql
 from bitcoinminingetl_spark.functions.vectors import (
     COSINE_SQL,
-    MD5_Q_SCALE,
+    bucket_rows_sql,
     cosine,
-    md5_bucket_sql,
     md5_planes,
     norm,
-    quantize_sql,
     sign_bucket_udf,
     usable_norm_sql,
 )
@@ -268,12 +266,6 @@ def _over_threshold(
     return pairs.filter(ratio >= threshold).select(
         *keys, roundn(ratio, 6).alias(name)
     )
-
-
-def _jaccard_from_overlaps(overlaps: DataFrame) -> DataFrame:
-    """Jaccard (rounded, unthresholded) as a projection of the shared
-    pair-overlap relation — no shuffle of its own."""
-    return overlaps.select("doc_a", "doc_b", roundn(jaccard(), 6).alias("jaccard"))
 
 
 def near_dup_pairs(overlaps: DataFrame) -> DataFrame:
@@ -554,10 +546,12 @@ def capped_candidates_sql(
 ) -> str:
     """DuckDB twin of _candidate_pairs: the CTEs `bsz` (bucket sizes
     over ``keys`` of relation ``rel``) and `cand` (distinct id pairs
-    sharing a bucket of at most _LSH_BUCKET_CAP members)."""
+    sharing a bucket of at most _LSH_BUCKET_CAP members). Keys join
+    null-safely, as Spark's groupBy groups NULLs: a NULL key field (the
+    embedding dedup's unlabeled block) is one bucket, not none."""
 
     def on(x: str, y: str) -> str:
-        return " AND ".join(f"{x}.{k} = {y}.{k}" for k in keys)
+        return " AND ".join(f"{x}.{k} IS NOT DISTINCT FROM {y}.{k}" for k in keys)
 
     return f"""bsz AS (
     SELECT {', '.join(keys)}, count(*) AS g FROM {rel} GROUP BY {', '.join(keys)}
@@ -1053,17 +1047,7 @@ def normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EMB_LSH_TABLES = 6
 _EMB_LSH_BITS = 4
-_EMB_LSH_SEED = 11
-
-
-def _emb_planes(dims: int = 64):
-    """Deterministic hyperplanes for the near-dup sub-buckets: TABLES
-    independent tables of BITS sign planes each (seeded numpy), shipped
-    in the bucket UDF's closure so they broadcast by construction."""
-    import numpy as np
-
-    rng = np.random.default_rng(_EMB_LSH_SEED)
-    return rng.standard_normal((_EMB_LSH_TABLES, _EMB_LSH_BITS, dims)).tolist()
+_EMB_LSH_PLANES = md5_planes("embplane", _EMB_LSH_TABLES, _EMB_LSH_BITS)
 
 
 @query(
@@ -1122,8 +1106,6 @@ def dedup_embed_cosine_lsh(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = _COSINE_LSH_THRESHOLD,
-    bucket_udf=None,
-    require_label: bool = False,
 ) -> DataFrame:
     """The 100 TB embedding near-dup path: label blocks sub-bucketed by
     multi-table sign-bit LSH, then EXACT cosine verification on
@@ -1146,26 +1128,16 @@ def dedup_embed_cosine_lsh(
     with p = 1-θ/180 ≈ 0.857, so it collides in one 4-bit table with
     p⁴ ≈ 0.54 and the 6-table OR misses it with (1-0.54)⁶ ≈ 1e-2 —
     one-sided error (candidates are a subset of the label-block pairs,
-    every candidate exactly verified). Checked rows-only by design: the
-    recall contract is probabilistic, so oracle-hash agreement against
-    the exact pair set is not guaranteed; the planted-fixture test
-    (test_embed_cosine_lsh_finds_planted_near_dups) pins recall on
-    deterministic seeded planes, and a subset-of-exact test pins the
-    one-sided error direction.
+    every candidate exactly verified). The planted-fixture test
+    (test_embed_cosine_lsh_finds_planted_near_dups) pins recall on the
+    fixed md5 planes, and a subset-of-exact test pins the one-sided
+    error direction.
 
-    ``bucket_udf`` swaps the sign-plane assignment (default: the seeded
-    float planes of _emb_planes) so the md5-quantized oracle twin
-    (q_dedup_embed_cosine_lsh_md5) runs the IDENTICAL plan.
-    ``require_label`` drops NULL-label vectors up front: struct-grouping
-    puts NULL labels in ONE sub-bucketed block (production behavior —
-    unlabeled vectors still dedup against each other), but the
-    oracle-hashed twins join blocks with SQL equality where NULL ≠ NULL,
-    so the twin excludes them to keep both engines on the exact twin's
-    equality semantics."""
+    Struct-grouping puts NULL labels in ONE sub-bucketed block:
+    unlabeled vectors still dedup against each other. The DuckDB twin
+    (_EMB_LSH_ORACLE) joins bucket keys null-safely to match."""
     emb = normed_embeddings(spark, sf_dir)
-    if require_label:
-        emb = emb.filter(F.col("label").isNotNull())
-    bucket_of = bucket_udf or sign_bucket_udf(_emb_planes(), _EMB_LSH_BITS)
+    bucket_of = sign_bucket_udf(_EMB_LSH_PLANES, _EMB_LSH_BITS)
 
     bands = (
         emb.select(
@@ -1202,48 +1174,12 @@ def dedup_embed_cosine_lsh(
     )
 
 
-@query("q_dedup_embed_cosine_lsh")  # rows-only: recall-bounded approximate plan
-def q_dedup_embed_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_embed_cosine_lsh REGISTERED at the exact twin's demo
-    threshold (0.35, _COSINE_THRESHOLD) instead of the production 0.9
-    (r7 VERDICT item 1): the synthetic corpus tops out at cosine ~0.51,
-    so at 0.9 the driver's rows-only gate saw 0 rows and proved
-    nothing. At the demo threshold the registered query emits a real
-    pair set at sf0.01 AND becomes directly subset-comparable to
-    q_dedup_embed_cosine on the driver fixtures (one-sided error: LSH
-    can only miss, never invent — pinned by
-    test_embed_cosine_lsh_subset_on_sf_fixture). The production-
-    threshold behavior stays pinned by the planted-fixture recall test
-    calling dedup_embed_cosine_lsh at its 0.9 default. Still rows-only
-    by design: recall at the demo threshold (cos 0.35 -> per-plane
-    agreement p=0.61, per-table p^4=0.14, 6-table OR ~0.60) is
-    probabilistic, so oracle-hash agreement with the exact pair set is
-    not guaranteed."""
-    return dedup_embed_cosine_lsh(spark, sf_dir, threshold=_COSINE_THRESHOLD)
-
-
-# --- md5-quantized twin of the sub-bucket machinery ----------------------
-
-_EMB_MD5_PLANES = md5_planes("embplane", _EMB_LSH_TABLES, _EMB_LSH_BITS)
-
-# DuckDB twin of q_dedup_embed_cosine_lsh_md5: quantize -> per-table
-# sign buckets -> candidates sharing (table, label, bucket) under the
-# bucket cap -> exact decimal-rounded cosine verify at the demo
-# threshold. Label blocks join with SQL equality (NULL labels excluded
-# on both sides — see dedup_embed_cosine_lsh's require_label note).
-_EMB_LSH_MD5_ORACLE = f"""
-WITH base AS (
-    SELECT e.vec_id, e.label, e.embedding FROM embeddings e
-    WHERE {usable_norm_sql('e')} AND e.label IS NOT NULL
-),
-qv AS (SELECT vec_id, label, {quantize_sql(MD5_Q_SCALE)} AS q FROM base),
-bk AS (
-    {' UNION ALL '.join(
-        f"SELECT vec_id, label, {t} AS tbl, "
-        f"{md5_bucket_sql(_EMB_MD5_PLANES, _EMB_LSH_BITS, t)} AS bkt FROM qv"
-        for t in range(_EMB_LSH_TABLES)
-    )}
-),
+# DuckDB twin of dedup_embed_cosine_lsh at the demo threshold: quantize
+# -> per-table sign buckets -> candidates sharing (table, label, bucket)
+# under the bucket cap -> exact decimal-rounded cosine verify.
+_EMB_LSH_ORACLE = f"""
+WITH base AS (SELECT * FROM embeddings e WHERE {usable_norm_sql('e')}),
+bk AS ({bucket_rows_sql(_EMB_LSH_PLANES, _EMB_LSH_BITS, "base", "vec_id, label")}),
 {capped_candidates_sql("bk", ("tbl", "label", "bkt"), "vec_id", ("vec_a", "vec_b"))},
 scored AS (
     SELECT c.vec_a, c.vec_b, a.label, {COSINE_SQL} AS cosine
@@ -1256,31 +1192,22 @@ WHERE cosine >= {_COSINE_THRESHOLD}
 """
 
 
-@query("q_dedup_embed_cosine_lsh_md5", oracle=_EMB_LSH_MD5_ORACLE)
-def q_dedup_embed_cosine_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-hashed twin of the embedding near-dup sub-bucket machinery:
-    the EXACT label-block × multi-table sign-bucket × exact-verify
-    composition of q_dedup_embed_cosine_lsh (same dedup_embed_cosine_lsh
-    body, same _candidate_pairs groupBy skeleton, same bucket cap, same
-    decimal-rounded cosine verify), with the float-order verdict
-    eliminated the q_knn_join_lsh_md5 way: md5-derived integer planes ×
-    floor(v·1e6)-quantized int64 embeddings make every bucket dot exact
-    integer arithmetic, bit-identical to the DuckDB oracle's list_reduce
-    fold. q_knn_join_lsh_md5 value-hashes the family's plane-bucket +
-    re-rank skeleton; this twin value-hashes the machinery UNIQUE to the
-    dedup member — the (label, bucket) struct sub-blocking and the
-    candidate-pair verify against the label-quadratic exact twin's
-    semantics. The seeded float planes stay the production path (no
-    quantization pass on the hot scan); NULL-label vectors are excluded
-    here to match the exact twin's SQL-equality block semantics (the
-    production path keeps them in one block — require_label note)."""
-    return dedup_embed_cosine_lsh(
-        spark,
-        sf_dir,
-        threshold=_COSINE_THRESHOLD,
-        bucket_udf=sign_bucket_udf(_EMB_MD5_PLANES, _EMB_LSH_BITS, MD5_Q_SCALE),
-        require_label=True,
-    )
+@query("q_dedup_embed_cosine_lsh", oracle=_EMB_LSH_ORACLE)
+def q_dedup_embed_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dedup_embed_cosine_lsh REGISTERED at the exact twin's demo
+    threshold (0.35, _COSINE_THRESHOLD) instead of the production 0.9:
+    the synthetic corpus tops out at cosine ~0.51, so at 0.9 the query
+    would emit 0 rows and its check would prove nothing. At the demo
+    threshold it emits a real pair set at sf0.01 AND is directly
+    subset-comparable to q_dedup_embed_cosine on the driver fixtures
+    (one-sided error: LSH can only miss, never invent — pinned by
+    test_embed_cosine_lsh_subset_on_sf_fixture). The production-
+    threshold behavior stays pinned by the planted-fixture recall test
+    calling dedup_embed_cosine_lsh at its 0.9 default. Recall at the
+    demo threshold (cos 0.35 -> per-plane agreement p=0.61, per-table
+    p^4=0.14, 6-table OR ~0.60) is probabilistic; the value-hash oracle
+    checks the exact candidate set the fixed planes produce."""
+    return dedup_embed_cosine_lsh(spark, sf_dir, threshold=_COSINE_THRESHOLD)
 
 
 def exact_survivors(docs: DataFrame) -> DataFrame:

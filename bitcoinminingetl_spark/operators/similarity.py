@@ -12,7 +12,6 @@ side to the planner.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -26,13 +25,11 @@ from bitcoinminingetl_spark.functions.numeric import (
 )
 from bitcoinminingetl_spark.functions.vectors import (
     COSINE_SQL,
-    MD5_Q_SCALE,
+    bucket_rows_sql,
     cosine,
     dot,
-    md5_bucket_sql,
     md5_planes,
     norm_sql,
-    quantize_sql,
     sign_bucket_udf,
     usable_norm_sql,
 )
@@ -53,6 +50,17 @@ def _top_k(scored: DataFrame, key: str, other: str, k: int) -> DataFrame:
     )
 
 
+def _top_k_sql(scored: str, key: str, other: str, k: int, cols: str) -> str:
+    """DuckDB twin of _top_k over the relation `scored`, projecting
+    `cols` plus the BIGINT rank `rn`."""
+    return f"""
+    SELECT {cols}, CAST(rn AS BIGINT) AS rn FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY {key} ORDER BY cosine DESC, {other}) AS rn
+        FROM {scored}
+    ) WHERE rn <= {k}"""
+
+
 @query(
     "q_cosine_topk",
     oracle=f"""
@@ -64,11 +72,7 @@ def _top_k(scored: DataFrame, key: str, other: str, k: int) -> DataFrame:
         FROM q a JOIN embeddings b ON a.vec_id <> b.vec_id
         WHERE {usable_norm_sql("b")}
     )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM scored
-    ) WHERE rn <= {_TOP_K}
+    {_top_k_sql("scored", "query_id", "neighbor_id", _TOP_K, "query_id, neighbor_id, cosine")}
     """,
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,41 +98,37 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _top_k(scored, "query_id", "neighbor_id", _TOP_K)
 
 
-_N_PLANES = 8
-_LSH_SEED = 7
+_ANN_BITS = 8  # one table of 8 sign planes: 256 buckets
+_ANN_PLANES = md5_planes("annplane", 1, _ANN_BITS)
 
 
-def _hyperplanes(dims: int = 64) -> list[list[float]]:
-    """Deterministic random hyperplanes (seeded numpy), embedded into the
-    plan as literal arrays — broadcast by construction."""
-    rng = np.random.default_rng(_LSH_SEED)
-    return rng.standard_normal((_N_PLANES, dims)).tolist()
-
-
-def _bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit p = sign(v · plane_p). 8 planes -> 256
-    buckets; collisions preserve cosine locality."""
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(vec, lit_plane) >= 0, F.lit(2**p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket + bit
-    return bucket
-
-
-@query("q_ann_lsh")  # rows-only: bucket assignment is an engine-side artifact
+@query(
+    "q_ann_lsh",
+    oracle=f"""
+    WITH base AS (SELECT * FROM embeddings e WHERE {usable_norm_sql("e")}),
+    bk AS ({bucket_rows_sql(_ANN_PLANES, _ANN_BITS, "base", "vec_id")}),
+    scored AS (
+        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+               {COSINE_SQL} AS cosine
+        FROM bk qb
+        JOIN bk nb ON qb.bkt = nb.bkt AND qb.vec_id <> nb.vec_id
+        JOIN embeddings a ON a.vec_id = qb.vec_id
+        JOIN embeddings b ON b.vec_id = nb.vec_id
+        WHERE qb.vec_id < {_N_QUERIES}
+    )
+    {_top_k_sql("scored", "query_id", "neighbor_id", _TOP_K, "query_id, neighbor_id, cosine")}
+    """,
+)
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbors via random-hyperplane LSH: corpus and
-    queries get a 8-bit sign bucket; candidates are an equi-join on the
-    bucket id (shuffle ~ O(n), not O(n·q)); exact cosine re-ranks only
-    candidates. Recall < 1 by construction — the unit test checks every
-    returned neighbor also appears in the exact q_cosine_topk ranking
-    prefix for its query."""
-    planes = _hyperplanes()
+    queries get an 8-bit sign bucket (one table of the sign-bucket
+    kernel); candidates are an equi-join on the bucket id (shuffle
+    ~ O(n), not O(n·q)); exact cosine re-ranks only candidates. Recall
+    < 1 by construction — the unit test checks every returned neighbor
+    agrees with the exact q_cosine_topk scoring for its query."""
+    bucket_of = sign_bucket_udf(_ANN_PLANES, _ANN_BITS)
     emb = normed_embeddings(spark, sf_dir).withColumn(
-        "bucket", _bucket(F.col("embedding"), planes)
+        "bucket", bucket_of(F.col("embedding"))[0]
     )
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -491,11 +491,7 @@ _KNN_MOD = 50  # query side: vec_id % 50 == 0 (a 2% sample of the corpus)
                {COSINE_SQL} AS cosine
         FROM a JOIN b ON true
     )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM scored
-    ) WHERE rn <= {_KNN_K}
+    {_top_k_sql("scored", "query_id", "neighbor_id", _KNN_K, "query_id, neighbor_id, cosine")}
     """,
 )
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,58 +521,17 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KNN_TABLES = 4  # OR-amplification: 4 independent 6-plane hash tables
-_KNN_PLANES = 6
+_KNN_BITS = 6
+_KNN_PLANES = md5_planes("knnplane", _KNN_TABLES, _KNN_BITS)
 
 
-def _knn_plane_matrix() -> "np.ndarray":
-    """(tables*planes, 64) hyperplane matrix, seeded per table so the 4
-    tables are independent. Shipped to executors inside the UDF closure
-    (a few KB — broadcast by construction)."""
-    blocks = []
-    for t in range(_KNN_TABLES):
-        rng = np.random.default_rng(_LSH_SEED + 100 + t)
-        blocks.append(rng.standard_normal((_KNN_PLANES, 64)))
-    return np.concatenate(blocks, axis=0)
-
-
-@query("q_knn_join_lsh")  # rows-only: LSH recall is checked vs q_knn_join
-def q_knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked k-NN join — the shippable corpus-vs-corpus shape: both
-    sides hash into 4 independent 6-plane sign-bucket tables (OR
-    amplification); candidates are the equi-join on (table, bucket) over
-    NARROW id rows; exact cosine re-ranks only the survivors after the
-    vectors are re-attached by key (_lsh_scored).
-
-    Recall math at the design point (semantic corpora, neighbor cosine
-    ≥0.9): per-plane collision 1-θ/π ≈ 0.856, per-table 0.856^6 ≈ 0.394,
-    across 4 OR'd tables 1-(1-0.394)^4 ≈ 0.87 per true pair. On the
-    isotropic fixture (neighbor cosine ≈0.34) the same config gives
-    ≈0.19 — the planted-cluster test pins the former, a recall-floor
-    assertion the latter."""
-    return _knn_lsh_top_k(
-        spark, sf_dir, sign_bucket_udf(_knn_plane_matrix(), _KNN_PLANES)
-    )
-
-
-def _knn_lsh_top_k(spark: SparkSession, sf_dir: str, bucket_of) -> DataFrame:
-    scored = _lsh_scored(spark, sf_dir, bucket_of, "query_id", "neighbor_id")
-    return _top_k(
-        scored.select("query_id", "neighbor_id", "cosine"),
-        "query_id",
-        "neighbor_id",
-        _KNN_K,
-    )
-
-
-def _lsh_scored(
-    spark: SparkSession, sf_dir: str, bucket_of, q_id: str, n_id: str
-) -> DataFrame:
+def _lsh_scored(spark: SparkSession, sf_dir: str, q_id: str, n_id: str) -> DataFrame:
     """The blocked-candidate skeleton of the sign-bucket family
-    (q_knn_join_lsh and its md5 twin, q_hard_negatives_lsh,
-    q_bitext_mine_lsh): bucket explode → narrow (table, bucket) id
-    equi-join → vector re-attach → exact rounded cosine. The query side
-    is the vec_id % 50 == 0 sample. Returns (q_id, n_id, q_label,
-    n_label, cosine); each query adds its own tail.
+    (q_knn_join_lsh, q_hard_negatives_lsh, q_bitext_mine_lsh): bucket
+    explode → narrow (table, bucket) id equi-join → vector re-attach →
+    exact rounded cosine. The query side is the vec_id % 50 == 0
+    sample. Returns (q_id, n_id, q_label, n_label, cosine); each query
+    adds its own tail. DuckDB twin: _lsh_scored_sql.
 
     Plan doctrine (also why this beats the naive "carry the vectors
     through the bucket join" shape): the bucket relation is (id, table,
@@ -592,6 +547,7 @@ def _lsh_scored(
     bucketing, so neither the candidate join nor the cosine re-rank
     ever divides by zero."""
     emb = normed_embeddings(spark, sf_dir)
+    bucket_of = sign_bucket_udf(_KNN_PLANES, _KNN_BITS)
 
     def bucketed(df, idcol):
         return df.select(
@@ -636,58 +592,56 @@ def _lsh_scored(
     )
 
 
-_KNN_MD5_PLANES = md5_planes("knnplane", _KNN_TABLES, _KNN_PLANES)
+def _lsh_scored_sql(q_id: str, n_id: str) -> str:
+    """DuckDB twin of _lsh_scored: the CTEs `base`, `bk`, `cand` and
+    `scored` (q_id, n_id, q_label, n_label, cosine). `scored` is
+    materialized: inlined, a caller's label predicate moves into the
+    vector re-attach and DuckDB joins the two embeddings scans on it
+    before the candidates (3 s instead of 0.3 s at sf0.1)."""
+    return f"""base AS (
+        SELECT * FROM embeddings e WHERE {usable_norm_sql("e")}
+    ),
+    bk AS ({bucket_rows_sql(_KNN_PLANES, _KNN_BITS, "base", "vec_id")}),
+    cand AS (
+        SELECT DISTINCT a.vec_id AS {q_id}, b.vec_id AS {n_id}
+        FROM bk a JOIN bk b ON a.tbl = b.tbl AND a.bkt = b.bkt
+        WHERE a.vec_id % {_KNN_MOD} = 0 AND b.vec_id % {_KNN_MOD} <> 0
+    ),
+    scored AS MATERIALIZED (
+        SELECT c.{q_id}, c.{n_id}, a.label AS q_label, b.label AS n_label,
+               {COSINE_SQL} AS cosine
+        FROM cand c
+        JOIN embeddings a ON a.vec_id = c.{q_id}
+        JOIN embeddings b ON b.vec_id = c.{n_id}
+    )"""
 
-_KNN_MD5_ORACLE = f"""
-WITH base AS (
-    SELECT e.vec_id, e.embedding FROM embeddings e
-    WHERE {usable_norm_sql('e')}
-),
-qv AS (SELECT vec_id, {quantize_sql(MD5_Q_SCALE)} AS q FROM base),
-bk AS (
-    {' UNION ALL '.join(
-        f"SELECT vec_id, {t} AS tbl, "
-        f"{md5_bucket_sql(_KNN_MD5_PLANES, _KNN_PLANES, t)} AS bkt FROM qv"
-        for t in range(_KNN_TABLES)
-    )}
-),
-cand AS (
-    SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-    FROM bk a JOIN bk b ON a.tbl = b.tbl AND a.bkt = b.bkt
-    WHERE a.vec_id % {_KNN_MOD} = 0 AND b.vec_id % {_KNN_MOD} <> 0
-),
-scored AS (
-    SELECT c.query_id, c.neighbor_id, {COSINE_SQL} AS cosine
-    FROM cand c
-    JOIN embeddings a ON a.vec_id = c.query_id
-    JOIN embeddings b ON b.vec_id = c.neighbor_id
+
+@query(
+    "q_knn_join_lsh",
+    oracle=f"""
+    WITH {_lsh_scored_sql("query_id", "neighbor_id")}
+    {_top_k_sql("scored", "query_id", "neighbor_id", _KNN_K, "query_id, neighbor_id, cosine")}
+    """,
 )
-SELECT query_id, neighbor_id, cosine, CAST(rn AS BIGINT) AS rn FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-    FROM scored
-) WHERE rn <= {_KNN_K}
-"""
+def q_knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked k-NN join — the shippable corpus-vs-corpus shape: both
+    sides hash into 4 independent 6-plane sign-bucket tables (OR
+    amplification); candidates are the equi-join on (table, bucket) over
+    NARROW id rows; exact cosine re-ranks only the survivors after the
+    vectors are re-attached by key (_lsh_scored).
 
-
-@query("q_knn_join_lsh_md5", oracle=_KNN_MD5_ORACLE)
-def q_knn_join_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-hashed blocked-kNN twin (r12 VERDICT item 4): the exact
-    bucket-explode / candidate-join / re-rank skeleton of
-    q_knn_join_lsh (_lsh_scored — same UDF shape, same narrow two-long
-    candidate relation, same re-attach), with the float-order verdict
-    eliminated: planes are md5-derived small ints, embeddings quantize
-    to floor(v·1e6) int64, and every bucket dot is EXACT integer
-    arithmetic — numpy's batched int64 matmul and DuckDB's per-element
-    list_reduce fold cannot disagree, so bucket assignment, candidate
-    generation, and the decimal-rounded cosine re-rank all sit under
-    one full value hash. This puts the shared skeleton of the blocked
-    sign-bucket family (q_knn_join_lsh, q_hard_negatives_lsh,
-    q_bitext_mine_lsh) under a value-hashed receipt; the float-plane
-    variants stay the production path (no quantization pass on the hot
-    scan)."""
-    return _knn_lsh_top_k(
-        spark, sf_dir, sign_bucket_udf(_KNN_MD5_PLANES, _KNN_PLANES, MD5_Q_SCALE)
+    Recall math at the design point (semantic corpora, neighbor cosine
+    ≥0.9): per-plane collision 1-θ/π ≈ 0.856, per-table 0.856^6 ≈ 0.394,
+    across 4 OR'd tables 1-(1-0.394)^4 ≈ 0.87 per true pair. On the
+    isotropic fixture (neighbor cosine ≈0.34) the same config gives
+    ≈0.19 — the planted-cluster test pins the former, a recall-floor
+    assertion the latter."""
+    scored = _lsh_scored(spark, sf_dir, "query_id", "neighbor_id")
+    return _top_k(
+        scored.select("query_id", "neighbor_id", "cosine"),
+        "query_id",
+        "neighbor_id",
+        _KNN_K,
     )
 
 
@@ -707,13 +661,8 @@ _HN_K = 3  # hard negatives per anchor
                {COSINE_SQL} AS cosine
         FROM a JOIN b ON a.label IS DISTINCT FROM b.label
     )
-    SELECT anchor_id, negative_id, negative_label, cosine,
-           CAST(rn AS BIGINT) AS rn
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY anchor_id ORDER BY cosine DESC, negative_id) AS rn
-        FROM scored
-    ) WHERE rn <= {_HN_K}
+    {_top_k_sql("scored", "anchor_id", "negative_id", _HN_K,
+                "anchor_id, negative_id, negative_label, cosine")}
     """,
 )
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,7 +709,18 @@ def _hn_label_keep(q_label: Column, n_label: Column) -> Column:
     return ~q_label.eqNullSafe(n_label)
 
 
-@query("q_hard_negatives_lsh")  # rows-only: LSH recall is checked vs the exact twin
+@query(
+    "q_hard_negatives_lsh",
+    oracle=f"""
+    WITH {_lsh_scored_sql("anchor_id", "negative_id")},
+    negs AS (
+        SELECT anchor_id, negative_id, n_label AS negative_label, cosine
+        FROM scored WHERE q_label IS DISTINCT FROM n_label
+    )
+    {_top_k_sql("negs", "anchor_id", "negative_id", _HN_K,
+                "anchor_id, negative_id, negative_label, cosine")}
+    """,
+)
 def q_hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining at corpus scale: q_knn_join_lsh's blocked
     candidate generator (4 OR'd 6-plane sign-bucket tables, narrow
@@ -775,13 +735,7 @@ def q_hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-twin is rejected while the cross-label nearest vector
     survives, and the recall floor is asserted against the exact
     twin."""
-    scored = _lsh_scored(
-        spark,
-        sf_dir,
-        sign_bucket_udf(_knn_plane_matrix(), _KNN_PLANES),
-        "anchor_id",
-        "negative_id",
-    )
+    scored = _lsh_scored(spark, sf_dir, "anchor_id", "negative_id")
     return _top_k(
         scored.filter(_hn_label_keep(F.col("q_label"), F.col("n_label"))).select(
             "anchor_id",
@@ -815,25 +769,17 @@ _BT_AVG_SQL = """
 """
 
 
-@query(
-    "q_bitext_mine",
-    oracle=f"""
-    WITH s AS (SELECT * FROM embeddings
-               WHERE vec_id % {_KNN_MOD} = 0 AND {usable_norm_sql("embeddings")}),
-    t AS (SELECT * FROM embeddings
-          WHERE vec_id % {_KNN_MOD} <> 0 AND {usable_norm_sql("embeddings")}),
-    scored AS (
-        SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
-               {COSINE_SQL} AS cosine
-        FROM s a JOIN t b ON true
-    ),
-    ranked AS (
+def _margin_rank_sql(scored: str) -> str:
+    """DuckDB twin of _margin_rank over the (src_id, tgt_id, cosine, ...)
+    relation `scored`: the CTEs `ranked`, `avgd`, `margins` and the
+    final best-per-source select."""
+    return f"""ranked AS (
         SELECT *,
             row_number() OVER (
                 PARTITION BY src_id ORDER BY cosine DESC, tgt_id) AS fwd_rn,
             row_number() OVER (
                 PARTITION BY tgt_id ORDER BY cosine DESC, src_id) AS bwd_rn
-        FROM scored
+        FROM {scored}
     ),
     avgd AS (
         SELECT *,
@@ -852,7 +798,22 @@ _BT_AVG_SQL = """
         SELECT *, row_number() OVER (
             PARTITION BY src_id ORDER BY margin DESC, tgt_id) AS rn
         FROM margins WHERE margin IS NOT NULL
-    ) WHERE rn = 1 AND margin >= {_BT_MARGIN}
+    ) WHERE rn = 1 AND margin >= {_BT_MARGIN}"""
+
+
+@query(
+    "q_bitext_mine",
+    oracle=f"""
+    WITH s AS (SELECT * FROM embeddings
+               WHERE vec_id % {_KNN_MOD} = 0 AND {usable_norm_sql("embeddings")}),
+    t AS (SELECT * FROM embeddings
+          WHERE vec_id % {_KNN_MOD} <> 0 AND {usable_norm_sql("embeddings")}),
+    scored AS (
+        SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
+               {COSINE_SQL} AS cosine
+        FROM s a JOIN t b ON true
+    ),
+    {_margin_rank_sql("scored")}
     """,
 )
 def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -905,7 +866,7 @@ def _margin_rank(scored: DataFrame) -> DataFrame:
     margin, best-per-source cut. Works unchanged on the exact all-pairs
     relation and on the LSH candidate relation (where the neighborhoods
     are the candidate sets — exactly how FAISS-backed production miners
-    approximate the denominator)."""
+    approximate the denominator). DuckDB twin: _margin_rank_sql."""
     w_fwd = Window.partitionBy("src_id").orderBy(
         F.col("cosine").desc(), F.col("tgt_id")
     )
@@ -957,7 +918,13 @@ def _margin_rank(scored: DataFrame) -> DataFrame:
     )
 
 
-@query("q_bitext_mine_lsh")  # rows-only: candidate sets are engine-side
+@query(
+    "q_bitext_mine_lsh",
+    oracle=f"""
+    WITH {_lsh_scored_sql("src_id", "tgt_id")},
+    {_margin_rank_sql("scored")}
+    """,
+)
 def q_bitext_mine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitext mining at corpus scale: q_knn_join_lsh's blocked candidate
     generator (4 OR'd 6-plane sign-bucket tables, narrow id-only
@@ -976,11 +943,5 @@ def q_bitext_mine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood mass to renormalize against, which real corpora always
     provide (the sf fixture yields non-empty output; the real-fixture
     test pins that)."""
-    scored = _lsh_scored(
-        spark,
-        sf_dir,
-        sign_bucket_udf(_knn_plane_matrix(), _KNN_PLANES),
-        "src_id",
-        "tgt_id",
-    )
+    scored = _lsh_scored(spark, sf_dir, "src_id", "tgt_id")
     return _margin_rank(scored.select("src_id", "tgt_id", "cosine"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+from pathlib import Path
 
 from bitcoinminingetl_spark.catalog import TABLES
 from bitcoinminingetl_spark.runner import run_query
@@ -44,11 +45,17 @@ def canon(v):
 
 
 def duck_connect(sf_dir: str):
+    """DuckDB connection with one view per table file present in
+    ``sf_dir``: a single parquet file, or a directory of part files as
+    Spark writes it."""
     import duckdb
 
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        p = Path(sf_dir) / f"{t}.parquet"
+        if p.exists():
+            src = f"{p}/*.parquet" if p.is_dir() else str(p)
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     return con
 
 

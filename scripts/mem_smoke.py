@@ -58,10 +58,8 @@ GUARDED = [
     "q_corpus_dedup_lsh_md5",    # oracle twin: same composition (r13)
     "q_dedup_simhash",           # chunk blocking
     "q_dedup_embed_cosine_lsh",  # sign-bit sub-buckets inside the block
-    "q_dedup_embed_cosine_lsh_md5",  # oracle twin: same sub-buckets (r13)
     "q_semdedup",                # cluster-size cap
     "q_knn_join_lsh",            # narrow-id candidate relation
-    "q_knn_join_lsh_md5",        # oracle twin: same narrow-id relation (r13)
 ]
 UNGUARDED = "q_dedup_ngram_jaccard"  # unpruned exact twin: must die here
 ARM_TIMEOUT_S = 600

@@ -133,7 +133,6 @@ AUDIT = [
     ("q_corpus_dedup_lsh_md5", LINEAR_BAND, "oracle twin: same composition plan, md5-lane band signatures"),
     ("q_cosine_topk", LINEAR_BAND, "broadcast query side, corpus never shuffles"),
     ("q_knn_join_lsh", LINEAR_BAND, "blocked ANN join, narrow candidates"),
-    ("q_knn_join_lsh_md5", LINEAR_BAND, "oracle twin: same blocked plan, exact-int quantized planes"),
     ("q_dup_span_stats", LINEAR_BAND, "gram agg + skew-aware flag join"),
     ("q_tokenize_to_ids", LINEAR_BAND, "vocab broadcast + one doc shuffle"),
     ("q_unigram_logprob", LINEAR_BAND, "tf agg + token join"),
@@ -230,7 +229,6 @@ AUDIT = [
     # r8 widening (r7 VERDICT item 5): every query with driver plan cost
     # > 1.0 s in the round's BENCH_FULL joins the audit
     ("q_dedup_embed_cosine_lsh", LINEAR_BAND, "sign-bit sub-bucket candidates (one numpy-matmul UDF) + exact re-rank"),
-    ("q_dedup_embed_cosine_lsh_md5", LINEAR_BAND, "oracle twin: same sub-bucket plan, exact-int quantized planes"),
     ("q_dedup_minhash_mllib", LINEAR_BAND, "MLlib MinHashLSH twin: O(docs x bands) shuffle"),
     ("q_cogroup_pandas", LINEAR_BAND, "cogrouped Arrow kernel, one exchange per side"),
     ("q_ann_ivf", LINEAR_BAND, "IVF cells: probe-cell equi-join candidates, exact re-rank"),
@@ -356,9 +354,7 @@ DECADE_AUDIT = [
     ("q_dedup_simhash", 2.2, "FIXED-granularity blocker: 8-bit chunks pigeonhole ~n^2/256 candidates on a decorrelated corpus; production widens chunks with corpus size (config, not plan) — measured against the declared pigeonhole bound"),
     ("q_dedup_simhash_md5", 2.2, "oracle twin of the row above: identical vote/chunk/Hamming plan over md5 bits, same declared pigeonhole bound"),
     ("q_knn_join_lsh", 2.2, "FIXED-granularity blocker: 6-plane buckets pigeonhole ~|q||n|/64 per table on isotropic data; production adds planes with corpus size — measured against the declared bound"),
-    ("q_knn_join_lsh_md5", 2.2, "oracle twin of the row above: identical blocked plan over exact-int quantized planes, same declared pigeonhole bound"),
     ("q_dedup_embed_cosine_lsh", 1.35, "label blocks grow in count not size; sign sub-buckets bound within-block pairs -> linear"),
-    ("q_dedup_embed_cosine_lsh_md5", 1.35, "oracle twin of the row above: identical sub-bucket plan over exact-int quantized planes, same linearity claim"),
     # r10 VERDICT item 4: the three most expensive bench queries whose
     # scale claims had only lower-decade fits — pin their exponents
     # where fixed cost is amortized.

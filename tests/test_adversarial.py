@@ -27,6 +27,7 @@ import shutil
 
 import pytest
 
+from bitcoinminingetl_spark.oracle_check import canon, compare
 from bitcoinminingetl_spark.registry import load_all
 from tests.conftest import SF_DIR
 
@@ -237,8 +238,6 @@ def test_embed_centroids_null_token_parity_with_oracle(spark, adv_dir):
     exercises the exact-or-NULL rendering path."""
     import duckdb
 
-    from tests.test_oracle import _canon_rows
-
     spec = REGISTRY["q_embed_centroids"]
     sdf = spec.fn(spark, adv_dir)
     s_cols = [c.lower() for c in sdf.columns]
@@ -260,9 +259,7 @@ def test_embed_centroids_null_token_parity_with_oracle(spark, adv_dir):
 
     assert sorted(s_cols) == sorted(o_cols)
     assert len(s_rows) == len(o_rows)
-    assert _canon_rows(s_cols, [tuple(r) for r in s_rows]) == _canon_rows(
-        o_cols, o_rows
-    )
+    assert compare(s_cols, s_rows, o_cols, o_rows)["status"] == "match"
 
     # non-vacuity: the poisoned dimension really rendered as a "null"
     # token at position 0 and ONLY there (no positional shift)
@@ -409,8 +406,6 @@ def test_privacy_trio_value_band_parity_with_oracle(spark, adv_dir, name):
     This differential check is what keeps the _value_band mask pinned."""
     import duckdb
 
-    from tests.test_oracle import _canon_rows
-
     spec = REGISTRY[name]
     sdf = spec.fn(spark, adv_dir)
     s_cols = [c.lower() for c in sdf.columns]
@@ -429,7 +424,7 @@ def test_privacy_trio_value_band_parity_with_oracle(spark, adv_dir, name):
         con.close()
 
     assert sorted(s_cols) == sorted(o_cols)
-    assert _canon_rows(s_cols, s_rows) == _canon_rows(o_cols, o_rows)
+    assert compare(s_cols, s_rows, o_cols, o_rows)["status"] == "match"
 
     # non-vacuity: probe the projection directly on the nanv/infv rows —
     # every non-finite value reads a NULL band (its own class), every
@@ -501,14 +496,13 @@ ADV_DIFF_TOLERANT = {
 
 
 def _canon_sig(cols, rows):
-    """_canon_rows with floats reduced to 12 significant digits —
-    relative, not decimal-place, rounding, so a last-ulp delta at 1e12
-    magnitude canonicalizes away while any real divergence (>1e-12
-    relative) still fails."""
-    from tests.test_oracle import _canon_cell
+    """compare's canonical rows with floats reduced to 12 significant
+    digits — relative, not decimal-place, rounding, so a last-ulp delta
+    at 1e12 magnitude canonicalizes away while any real divergence
+    (>1e-12 relative) still fails."""
 
     def cell(v):
-        c = _canon_cell(v)
+        c = canon(v)
         if isinstance(c, float):
             return float(f"{c:.12g}")
         if isinstance(c, tuple):
@@ -539,8 +533,6 @@ def test_full_differential_sweep_on_adversarial_corpus(spark, adv_dir):
     import glob
 
     import duckdb
-
-    from tests.test_oracle import _canon_rows
 
     con = duckdb.connect()
     try:
@@ -574,7 +566,7 @@ def test_full_differential_sweep_on_adversarial_corpus(spark, adv_dir):
                     ), f"{name} diverges past the sub-ulp tolerance"
                     matched += 1
                     continue
-                elif _canon_rows(s_cols, s_rows) != _canon_rows(o_cols, o_rows):
+                elif compare(s_cols, s_rows, o_cols, o_rows)["status"] != "match":
                     verdict = "values"
                 else:
                     matched += 1

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bitcoinminingetl_spark.functions.numeric import roundn
 from bitcoinminingetl_spark.registry import load_all
 
 REGISTRY = load_all()
@@ -418,7 +419,7 @@ def test_corpus_dedup_lsh_composition(spark, sf_dir, tmp_path):
 
 def test_embed_cosine_lsh_finds_planted_near_dups(spark, tmp_path):
     """The multi-table sign-LSH sub-buckets must recover planted
-    high-cosine pairs (the seeded planes make recall deterministic),
+    high-cosine pairs (the fixed md5 planes make recall deterministic),
     keep pairs within their label block, and reject sub-threshold and
     cross-label pairs — every emitted pair is exactly verified. The LSH
     pair set must also be a SUBSET of the exact label-block pair set
@@ -479,20 +480,50 @@ def test_embed_cosine_lsh_subset_on_sf_fixture(spark, sf_dir):
     fixture (the production 0.9 matched zero pairs at sf0.01, so the
     driver's rows-only gate proved nothing), and that set must be a
     subset of the exact twin's — one-sided error on the very data the
-    driver hashes. Covers the float-plane production path AND the
-    md5-quantized oracle twin (q_dedup_embed_cosine_lsh_md5, r13) —
-    the subset + non-vacuity properties are plane-independent."""
+    driver hashes."""
     exact = {
         (r.vec_a, r.vec_b)
         for r in REGISTRY["q_dedup_embed_cosine"].fn(spark, sf_dir).collect()
     }
-    for name in ("q_dedup_embed_cosine_lsh", "q_dedup_embed_cosine_lsh_md5"):
-        lsh = {
-            (r.vec_a, r.vec_b)
-            for r in REGISTRY[name].fn(spark, sf_dir).collect()
-        }
-        assert lsh, f"{name}: registered threshold must fire on the fixture"
-        assert lsh <= exact, name
+    lsh = {
+        (r.vec_a, r.vec_b)
+        for r in REGISTRY["q_dedup_embed_cosine_lsh"].fn(spark, sf_dir).collect()
+    }
+    assert lsh, "registered threshold must fire on the fixture"
+    assert lsh <= exact
+
+
+def test_embed_cosine_lsh_keeps_null_label_block(spark, tmp_path):
+    """Unlabeled vectors dedup against each other: the two near-identical
+    NULL-label vectors are one pair of the NULL-label block, the
+    labelled copy pairs with neither, and the DuckDB oracle, whose
+    bucket keys join null-safely, returns the same rows."""
+    import numpy as np
+
+    from bitcoinminingetl_spark.oracle_check import compare, duck_connect
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal(64)
+    rows = [
+        (vid, [float(x) for x in base + 0.01 * rng.standard_normal(64)], label)
+        for vid, label in ((1, None), (2, None), (3, 1))
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    spec = REGISTRY["q_dedup_embed_cosine_lsh"]
+    sdf = spec.fn(spark, str(tmp_path))
+    got = sdf.collect()
+    assert [(r.vec_a, r.vec_b, r.label) for r in got] == [(1, 2, None)]
+
+    con = duck_connect(str(tmp_path))
+    try:
+        res = con.execute(spec.oracle)
+        o_cols = [d[0].lower() for d in res.description]
+        rec = compare(sdf.columns, got, o_cols, res.fetchall())
+    finally:
+        con.close()
+    assert rec["status"] == "match", rec
 
 
 def test_dedup_clusters_chain_convergence(spark, tmp_path):
@@ -671,30 +702,24 @@ def test_dedup_pruned_drops_hot_shingle_pairs(spark, tmp_path):
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
     sh = dedup._shingled(dedup.table(spark, str(tmp_path), "documents"))
-    unpruned = {
-        (r.doc_a, r.doc_b)
-        for r in dedup._jaccard_from_overlaps(dedup._pair_overlaps(sh))
-        .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
-        .collect()
-    }
-    pruned = {
-        (r.doc_a, r.doc_b)
-        for r in dedup._jaccard_from_overlaps(dedup._pair_overlaps(sh, df_cap=dedup._DF_CAP))
-        .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
-        .collect()
-    }
+
+    def pairs(df_cap=None):
+        return {
+            (r.doc_a, r.doc_b)
+            for r in dedup._pair_overlaps(sh, df_cap=df_cap)
+            .select("doc_a", "doc_b", roundn(dedup.jaccard(), 6).alias("jaccard"))
+            .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
+            .collect()
+        }
+
+    unpruned = pairs()
+    pruned = pairs(dedup._DF_CAP)
     # (1,2) share 4 rare shingles -> survives pruning; boilerplate-only
     # pairs (e.g. (3,4)) existed unpruned but are gone after
     assert (1, 2) in pruned
     assert (3, 4) in unpruned and (3, 4) not in pruned
     # cap above every DF -> identical to unpruned semantics
-    nop = {
-        (r.doc_a, r.doc_b)
-        for r in dedup._jaccard_from_overlaps(dedup._pair_overlaps(sh, df_cap=10_000))
-        .filter(F.col("jaccard") >= dedup._JACCARD_THRESHOLD)
-        .collect()
-    }
-    assert nop == unpruned
+    assert pairs(10_000) == unpruned
 
 
 def test_ann_ivf_kmeans_scores_exact_and_recall_floor(spark, sf_dir):
@@ -976,7 +1001,7 @@ def test_knn_join_lsh_planted_clusters_and_recall(spark, sf_dir, tmp_path):
     """The blocked k-NN join must (a) recover planted tight clusters —
     the regime it is built for (semantic corpora, neighbor cosine ≥0.9,
     where the 4×6-plane config gives ~87% per-pair recall and the
-    seeded planes make the outcome deterministic); (b) never invent a
+    fixed md5 planes make the outcome deterministic); (b) never invent a
     neighbor: every (query, neighbor, cosine) row must agree exactly
     with the exact twin's scoring; (c) keep a non-degenerate recall on
     the isotropic fixture corpus (whose top-3 neighbors sit near cosine
@@ -999,26 +1024,21 @@ def test_knn_join_lsh_planted_clusters_and_recall(spark, sf_dir, tmp_path):
     exact = REGISTRY["q_knn_join"].fn(spark, str(tmp_path)).collect()
     exact_pairs = {(r.query_id, r.neighbor_id) for r in exact}
     exact_scores = {(r.query_id, r.neighbor_id): r.cosine for r in exact}
-    # ... for the float-plane production path AND the md5-quantized
-    # oracle twin (q_knn_join_lsh_md5, r12 VERDICT item 4): planted
-    # near-identical clusters collide under ANY sign-LSH plane family,
-    # so both variants must satisfy (a) and (b).
-    for name in ("q_knn_join_lsh", "q_knn_join_lsh_md5"):
-        got = REGISTRY[name].fn(spark, str(tmp_path)).collect()
-        # (a) planted recall: each query's exact top-3 are its cluster
-        # mates (cosine ~0.999); the LSH join must find most of them.
-        got_pairs = {(r.query_id, r.neighbor_id) for r in got}
-        recall = len(exact_pairs & got_pairs) / len(exact_pairs)
-        assert recall >= 0.8, f"{name} planted-cluster recall {recall}"
-        # (b) scores agree exactly with the exact twin where pairs overlap
-        for r in got:
-            k = (r.query_id, r.neighbor_id)
-            if k in exact_scores:
-                assert abs(r.cosine - exact_scores[k]) < 1e-9, name
-        # per-query cap respected
-        from collections import Counter
-        per_q = Counter(q for q, _ in got_pairs)
-        assert all(v <= 3 for v in per_q.values()), name
+    got = REGISTRY["q_knn_join_lsh"].fn(spark, str(tmp_path)).collect()
+    # (a) planted recall: each query's exact top-3 are its cluster
+    # mates (cosine ~0.999); the LSH join must find most of them.
+    got_pairs = {(r.query_id, r.neighbor_id) for r in got}
+    recall = len(exact_pairs & got_pairs) / len(exact_pairs)
+    assert recall >= 0.8, f"planted-cluster recall {recall}"
+    # (b) scores agree exactly with the exact twin where pairs overlap
+    for r in got:
+        k = (r.query_id, r.neighbor_id)
+        if k in exact_scores:
+            assert abs(r.cosine - exact_scores[k]) < 1e-9
+    # per-query cap respected
+    from collections import Counter
+    per_q = Counter(q for q, _ in got_pairs)
+    assert all(v <= 3 for v in per_q.values())
 
     # (c) isotropic-fixture floor: weak neighbors, weak recall — but not zero
     ex = {(r.query_id, r.neighbor_id)
@@ -1925,7 +1945,7 @@ def test_bitext_mine_hub_demotion(spark, tmp_path):
     assert all(r.margin >= 1.45 for r in out.values())
     assert all(r.tgt_id != 56 for r in out.values())
 
-    # the LSH twin (deterministic seeded planes, fixed vectors): the same
+    # the LSH twin (fixed md5 planes, fixed vectors): the same
     # margin machinery over bucket candidates must never mine the hub for
     # src 100. On THIS thin fixture the candidate-set denominators
     # degenerate (margin -> ~1 with 1-2 candidates) so the threshold may
@@ -1941,12 +1961,22 @@ def test_bitext_mine_lsh_real_fixture(spark, sf_dir):
     """On the real fixture the LSH miner produces non-empty output whose
     every row obeys the contract: source side is the 2% vec_id sample,
     target side is the rest, margins clear the threshold, and the pair's
-    cosine is consistent with the exact twin's scoring (same rounding)."""
+    cosine is the 6-dp cosine of its two stored vectors."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
     out = REGISTRY["q_bitext_mine_lsh"].fn(spark, sf_dir).collect()
     assert len(out) > 0
     assert all(r.src_id % 50 == 0 and r.tgt_id % 50 != 0 for r in out)
-    assert all(r.margin >= 1.45 for r in out)
+    assert all(r.margin >= 1.35 for r in out)
     assert all(-1.0 <= r.cosine <= 1.0 for r in out)
+    emb = pq.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    ).to_pydict()
+    vec = {i: np.asarray(e, dtype=np.float64) for i, e in zip(emb["vec_id"], emb["embedding"])}
+    for r in out:
+        a, b = vec[r.src_id], vec[r.tgt_id]
+        assert abs(r.cosine - a @ b / (np.linalg.norm(a) * np.linalg.norm(b))) < 1e-6
     # one mined pair per source at most (best-by-margin cut)
     assert len({r.src_id for r in out}) == len(out)
 

@@ -55,6 +55,19 @@ def _mutated(module, name, value):
     return cm()
 
 
+def _broken_bucket_udf(planes, bits):
+    """A sign-bucket kernel that hashes the raw vector bytes: bucketing
+    stops grouping SIMILAR vectors and only groups identical ones."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("array<long>")
+    def buckets(emb):
+        return pd.Series([[hash(tuple(v)) % (1 << 62)] for v in emb.tolist()])
+
+    return buckets
+
+
 def test_k_anonymity_gate_goes_red_on_threshold_flip(spark, tmp_path):
     """Flip _K_ANON to 1: with the strict < comparison nothing can
     violate, so the planted release's 2 violating classes read 0 and
@@ -217,27 +230,14 @@ def test_knn_join_lsh_gate_goes_red_on_bucket_kernel_break(
     vectors and only groups identical ones). Planted cluster mates
     differ by noise, so candidates vanish and the planted-cluster
     recall gate must fail. Restored, it must pass."""
-    import pandas as pd
-
     import bitcoinminingetl_spark.operators.similarity as sim_mod
     from tests.test_llm_ops import (
         test_knn_join_lsh_planted_clusters_and_recall as gate,
     )
 
-    def broken_bucket_udf(planes, bits, q_scale=None):
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<long>")
-        def buckets(emb):
-            return pd.Series(
-                [[hash(tuple(v)) % (1 << 62)] for v in emb.tolist()]
-            )
-
-        return buckets
-
     red = tmp_path / "red"
     red.mkdir()
-    with _mutated(sim_mod, "sign_bucket_udf", broken_bucket_udf):
+    with _mutated(sim_mod, "sign_bucket_udf", _broken_bucket_udf):
         with pytest.raises(AssertionError):
             gate(spark, sf_dir, red)
     green = tmp_path / "green"
@@ -512,15 +512,10 @@ def test_ann_lsh_gate_goes_red_on_bucket_kernel_break(spark, sf_dir):
     grouping SIMILAR vectors and only groups identical ones). No query
     shares a bucket with any distinct vector, the neighbor set empties,
     and the subset-of-exact gate's non-empty assertion must fail."""
-    import pyspark.sql.functions as SF
-
     import bitcoinminingetl_spark.operators.similarity as sim_mod
     from tests.test_llm_ops import test_ann_lsh_is_subset_of_exact_ranking as gate
 
-    def identity_bucket(vec, planes):
-        return SF.crc32(vec.cast("string")).cast("long")
-
-    with _mutated(sim_mod, "_bucket", identity_bucket):
+    with _mutated(sim_mod, "sign_bucket_udf", _broken_bucket_udf):
         with pytest.raises(AssertionError):
             gate(spark, sf_dir)
     gate(spark, sf_dir)

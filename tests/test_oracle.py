@@ -1,15 +1,17 @@
 """In-repo mirror of the driver's differential correctness gate: run every
 registered query on Spark and its DuckDB oracle on the same parquet, then
-compare row count, column names, and order-insensitive values."""
+compare row count, column names, and order-insensitive values with
+oracle_check.compare, the one compare contract."""
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import math
-
 import pytest
 
+from bitcoinminingetl_spark.oracle_check import (
+    compare,
+    fetch_oracle,
+    shared_oracle_memo,
+)
 from bitcoinminingetl_spark.registry import load_all
 
 REGISTRY = load_all()
@@ -20,50 +22,16 @@ ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 # closure behind both CC queries); run each SHARED oracle once per session
 # instead of once per twin (r5 VERDICT stretch 8). Same policy as
 # oracle_check.shared_oracle_memo — only duplicated strings are retained.
-from bitcoinminingetl_spark.oracle_check import fetch_oracle, shared_oracle_memo
-
 _ORACLE_MEMO = shared_oracle_memo(REGISTRY)
-
-
-def _canon_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return None
-        return round(v, 9)
-    if isinstance(v, decimal.Decimal):
-        return round(float(v), 9)
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon_cell(x) for x in v)
-    return v
-
-
-def _canon_rows(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_canon_cell(r[i]) for i in idx) for r in rows]
-    out.sort(key=repr)
-    return out
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, duck, sf_dir, name):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, sf_dir)
-    s_cols = [c.lower() for c in sdf.columns]
-    s_rows = [tuple(r) for r in sdf.collect()]
-
     o_cols, o_rows = fetch_oracle(duck, spec.oracle, _ORACLE_MEMO)
-
-    assert sorted(s_cols) == sorted(o_cols), f"{name}: column mismatch"
-    assert len(s_rows) == len(o_rows), f"{name}: row count {len(s_rows)} != {len(o_rows)}"
-    assert _canon_rows(s_cols, s_rows) == _canon_rows(o_cols, o_rows), (
-        f"{name}: value mismatch"
-    )
+    rec = compare(sdf.columns, sdf.collect(), o_cols, o_rows)
+    assert rec["status"] == "match", f"{name}: {rec}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)

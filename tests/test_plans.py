@@ -617,7 +617,6 @@ def test_blocked_lsh_family_forces_no_broadcast(spark, sf_dir):
     hash join at runtime while the side is under its threshold."""
     for name in (
         "q_knn_join_lsh",
-        "q_knn_join_lsh_md5",
         "q_hard_negatives_lsh",
         "q_bitext_mine_lsh",
     ):

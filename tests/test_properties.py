@@ -165,6 +165,7 @@ def test_pruned_jaccard_pairs_subset_of_cooccurrence(spark, cap):
     """For any df_cap, pruned pairs only relate docs that co-occur on a
     kept shingle (df <= cap), and each pair's Jaccard stays in (0, 1] —
     internal consistency of the pruned universe."""
+    from bitcoinminingetl_spark.functions.numeric import roundn
     from bitcoinminingetl_spark.operators import dedup
 
     rows = [
@@ -183,9 +184,11 @@ def test_pruned_jaccard_pairs_subset_of_cooccurrence(spark, cap):
         sh = dedup._shingled(
             dedup.table(spark, td, "documents")
         )
-        pairs = dedup._jaccard_from_overlaps(
+        pairs = (
             dedup._pair_overlaps(sh, df_cap=cap)
-        ).collect()
+            .select("doc_a", "doc_b", roundn(dedup.jaccard(), 6).alias("jaccard"))
+            .collect()
+        )
     for r in pairs:
         assert 0.0 < r.jaccard <= 1.0
         assert r.doc_a < r.doc_b

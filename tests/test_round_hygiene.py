@@ -161,6 +161,9 @@ def test_every_expensive_query_is_scaling_audited():
     spec.loader.exec_module(sc)
     audited = {name for name, _bound, _why in sc.AUDIT}
 
+    from bitcoinminingetl_spark.registry import load_all
+
+    registered = set(load_all())
     bench = json.loads((REPO / "BENCH_FULL.json").read_text())
     lifecycle = set(bench.get("lifecycle_queries", {}))
     # HYSTERESIS: a single bench pass swings 40%+ on a shared host, so
@@ -173,7 +176,10 @@ def test_every_expensive_query_is_scaling_audited():
     expensive = {
         n
         for n, t in bench["queries"].items()
-        if n not in lifecycle and t > 1.0 and prev.get(n, 99.0) > prev_band
+        if n in registered  # a deleted query needs no audit
+        and n not in lifecycle
+        and t > 1.0
+        and prev.get(n, 99.0) > prev_band
     }
     unaudited = sorted(expensive - audited)
     assert not unaudited, (

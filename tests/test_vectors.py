@@ -1,7 +1,7 @@
 """Unit tests of functions/vectors.py, the embedding family's shared
-vector math: the md5 sign-bucket kernel must agree with its DuckDB twin
-on hostile inputs, the float kernel with a per-plane numpy reference,
-and the Spark cosine with the DuckDB rounded-cosine SQL."""
+vector math: the sign-bucket kernel must agree with its DuckDB twin on
+hostile inputs, and the Spark cosine with the DuckDB rounded-cosine
+SQL."""
 
 from __future__ import annotations
 
@@ -11,26 +11,26 @@ from pyspark.sql import functions as F
 
 from bitcoinminingetl_spark.functions.vectors import (
     COSINE_SQL,
-    MD5_Q_SCALE,
+    Q_SCALE,
+    bucket_rows_sql,
     cosine,
-    md5_bucket_sql,
     norm,
-    quantize_sql,
     sign_bucket_udf,
 )
-from bitcoinminingetl_spark.operators.dedup import (
-    _EMB_LSH_BITS,
-    _EMB_MD5_PLANES,
-    _emb_planes,
-)
+from bitcoinminingetl_spark.operators.dedup import _EMB_LSH_BITS, _EMB_LSH_PLANES
 from bitcoinminingetl_spark.operators.similarity import (
-    _KNN_MD5_PLANES,
+    _ANN_BITS,
+    _ANN_PLANES,
+    _KNN_BITS,
     _KNN_PLANES,
-    _knn_plane_matrix,
 )
 
-# (planes, bits) of both md5 plane families
-MD5_FAMILIES = [(_KNN_MD5_PLANES, _KNN_PLANES), (_EMB_MD5_PLANES, _EMB_LSH_BITS)]
+# (planes, bits) of the three md5 plane families
+MD5_FAMILIES = [
+    (_ANN_PLANES, _ANN_BITS),
+    (_KNN_PLANES, _KNN_BITS),
+    (_EMB_LSH_PLANES, _EMB_LSH_BITS),
+]
 
 
 def _spark_buckets(spark, vectors, udf) -> dict[int, list[int]]:
@@ -61,9 +61,11 @@ def test_md5_bucket_kernel_matches_duckdb_on_hostile_vectors(spark):
             float("nan"),
             float("inf"),
             float("-inf"),
-            float(2**63) / MD5_Q_SCALE,  # scaled value reaches the int64 edge
+            float(2**63) / Q_SCALE,  # scaled value reaches the int64 edge
             1e13,
             -1e13,
+            1e11,  # quantizes inside int64, but its plane dots would not
+            -1e11,
         ):
             v = rng.standard_normal(64).tolist()
             finite.append(list(v))
@@ -74,27 +76,22 @@ def test_md5_bucket_kernel_matches_duckdb_on_hostile_vectors(spark):
         vectors = normal + hostile + finite + [zero_dot, [0.0] * 64]
 
         # the zero-dot case really is exercised: exact int dot of 0
-        q = np.floor(np.array(zero_dot) * MD5_Q_SCALE).astype(np.int64)
+        q = np.floor(np.array(zero_dot) * Q_SCALE).astype(np.int64)
         assert int(q @ np.array(planes[0], dtype=np.int64)) == 0
         assert q.any()
 
-        got = _spark_buckets(
-            spark, vectors, sign_bucket_udf(planes, bits, MD5_Q_SCALE)
-        )
+        got = _spark_buckets(spark, vectors, sign_bucket_udf(planes, bits))
 
         con = duckdb.connect()
         con.execute("CREATE TABLE vecs (id BIGINT, embedding DOUBLE[])")
         con.executemany(
             "INSERT INTO vecs VALUES (?, ?)", list(enumerate(vectors))
         )
-        buckets = ", ".join(
-            md5_bucket_sql(planes, bits, t) for t in range(tables)
-        )
         want = {
             i: list(b)
             for i, b in con.execute(
-                f"SELECT id, [{buckets}] FROM "
-                f"(SELECT id, {quantize_sql(MD5_Q_SCALE)} AS q FROM vecs)"
+                "SELECT id, list(bkt ORDER BY tbl) FROM ("
+                f"{bucket_rows_sql(planes, bits, 'vecs', 'id')}) GROUP BY id"
             ).fetchall()
         }
         con.close()
@@ -108,30 +105,6 @@ def test_md5_bucket_kernel_matches_duckdb_on_hostile_vectors(spark):
         # hostile vector buckets like its finite part alone
         for k in range(len(hostile)):
             assert got[len(normal) + k] == got[len(normal) + len(hostile) + k]
-
-
-def test_float_bucket_kernel_matches_numpy_reference(spark):
-    rng = np.random.default_rng(9)
-    vectors = [rng.standard_normal(64).tolist() for _ in range(200)]
-    for planes, bits in (
-        (_knn_plane_matrix(), _KNN_PLANES),
-        (_emb_planes(), _EMB_LSH_BITS),
-    ):
-        flat = np.asarray(planes, dtype=np.float64).reshape(-1, 64)
-        tables = len(flat) // bits
-        want = {
-            i: [
-                sum(
-                    2**b
-                    for b in range(bits)
-                    if float(np.dot(np.array(v), flat[t * bits + b])) >= 0
-                )
-                for t in range(tables)
-            ]
-            for i, v in enumerate(vectors)
-        }
-        got = _spark_buckets(spark, vectors, sign_bucket_udf(planes, bits))
-        assert got == want
 
 
 def test_cosine_matches_duckdb_cosine_sql(spark):
