@@ -87,19 +87,10 @@ SHARED_INFRA = (
         lambda s, d: _dedup.shingle_index(s, d, n=_corpus._DECON_N),
     ),
     ("pair_overlaps_uncapped", _dedup.pair_overlaps),
-    # per-doc shingle-set relation shared by the five LSH verify
+    # per-doc shingle-set relation shared by the three LSH verify
     # consumers (r13: _verify_candidates aggregated the shingle index
-    # into sets twice per query, ten times per bench pass across the
-    # family)
+    # into sets twice per query)
     ("shingle_sets", _dedup.shingle_sets),
-    # (doc_id, token) distinct-token relation shared by the SimHash twin
-    # pair (r12 VERDICT item 6) — one corpus scan + tokenize + distinct
-    # explode, previously paid twice
-    ("simhash_tokens", _dedup.simhash_tokens),
-    # UNHASHED (doc_id, shingle-string) relation shared by the md5
-    # MinHash twin pair (r13: one corpus scan + tokenize + shingle
-    # explode, previously paid by each twin inline)
-    ("shingle_strings", _dedup.shingle_strings),
     # positional word-5-gram span index + its multi-doc gram set, shared
     # by the span family (r13: q_dup_span_stats and q_dedup_span_removal
     # each re-ran the scan + posexplode + hash and its groupBy(gram_h)

@@ -30,10 +30,12 @@ from bitcoinminingetl_spark.functions.vectors import (
 from bitcoinminingetl_spark.operators.dedup import (
     holdout_hits,
     holdout_hits_sql,
+    minhash_pairs_sql,
     near_dup_pairs,
     NGRAM_PAIRS_ORACLE,
     pair_overlaps,
     shingle_index,
+    shingle_sql,
 )
 from bitcoinminingetl_spark.registry import query
 
@@ -390,9 +392,14 @@ def _pr_step_sql(prev: str) -> str:
     """
 
 
-_PAGERANK_ORACLE = f"""
-    WITH pairs AS (
-        SELECT doc_a, doc_b FROM ({NGRAM_PAIRS_ORACLE})
+def pagerank_sql(pairs: str) -> str:
+    """DuckDB twin of _pagerank_ranks(pagerank_graph(...)) over the
+    near-dup pair SQL ``pairs`` (doc_a, doc_b, ...). The pairs are
+    materialized: `edges` reads them twice, and DuckDB would otherwise
+    re-run the pair query at each reference."""
+    return f"""
+    WITH pairs AS MATERIALIZED (
+        SELECT doc_a, doc_b FROM ({pairs})
     ),
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -486,7 +493,7 @@ def pagerank_graph(
     return ewd, _PR_NODES_CACHE[key]
 
 
-@query("q_dedup_pagerank", oracle=_PAGERANK_ORACLE)
+@query("q_dedup_pagerank", oracle=pagerank_sql(NGRAM_PAIRS_ORACLE))
 def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Template-HUB centrality: PageRank over the exact-Jaccard near-dup
     graph (the same edges as q_dedup_clusters). Where components answer
@@ -571,7 +578,9 @@ def _pagerank_ranks(
     return ranks
 
 
-@query("q_dedup_pagerank_lsh")  # rows-only: MinHash signatures are engine-specific
+@query(
+    "q_dedup_pagerank_lsh", oracle=pagerank_sql(minhash_pairs_sql(shingle_sql()))
+)
 def q_dedup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_dedup_pagerank with its edge generator swapped for the 100 TB
     candidate path — MinHash bands → bucket-join candidates →
@@ -583,7 +592,9 @@ def q_dedup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank mass still sums to 1 over whatever graph LSH recovers (the
     no-dangling argument is per-graph, not per-corpus). Same persist-once
     graph relation (variant='lsh') and the same static 5-iteration loop;
-    the property test pins node-subset-of-exact and mass conservation."""
+    the oracle runs the PageRank twin over the MinHash oracle's pairs,
+    and the property test pins node-subset-of-exact and mass
+    conservation."""
     return _pagerank_ranks(spark, *pagerank_graph(spark, sf_dir, variant="lsh"))
 
 
@@ -1166,9 +1177,9 @@ def span_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     index the whole span family reads (r13 optimization: q_dup_span_stats
     and q_dedup_span_removal each re-ran the scan + split + posexplode +
     xxhash64 pass; one shared build saves a full corpus explode per
-    consumer, the r12 simhash_tokens doctrine). At 100 TB this is the
-    span/suffix index table an ExactSubstr dedup pipeline (Lee et al.
-    2022) materializes once per corpus snapshot.
+    consumer). At 100 TB this is the span/suffix index table an
+    ExactSubstr dedup pipeline (Lee et al. 2022) materializes once per
+    corpus snapshot.
 
     8-byte-key doctrine (q_decontaminate, _shingled): downstream shuffles
     and joins key on xxhash64(gram), never the ~30-byte gram string — 4x

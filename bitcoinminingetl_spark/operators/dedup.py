@@ -33,6 +33,7 @@ from bitcoinminingetl_spark.functions.vectors import (
     sign_bucket_udf,
     usable_norm_sql,
 )
+from bitcoinminingetl_spark.functions.xxhash64 import SEED, UDF_PREFIX
 from bitcoinminingetl_spark.registry import query
 
 _NGRAM = 3
@@ -105,10 +106,8 @@ def _shingled(docs: DataFrame, n: int = _NGRAM) -> DataFrame:
 
 def _shingle_strings(docs: DataFrame, n: int = _NGRAM) -> DataFrame:
     """(doc_id, s: string) with distinct n-word shingles per document,
-    UNHASHED — the engine-portable relation the md5 MinHash twin
-    (q_dedup_minhash_md5) draws its min-hashes from; _shingled is this
-    plus the xxhash64 projection every production-path consumer joins
-    on. DuckDB twin: shingle_sql."""
+    UNHASHED; _shingled is this plus the xxhash64 projection every
+    consumer joins on. DuckDB twin: shingle_sql."""
     shingles = F.array_distinct(ngram_array(F.split("text", " "), n))
     return (
         # NULL text contributes NO shingles (the doc has no content to
@@ -124,7 +123,6 @@ def _shingle_strings(docs: DataFrame, n: int = _NGRAM) -> DataFrame:
 
 
 _SHINGLE_INDEX_CACHE: dict[str, DataFrame] = {}
-_SHINGLE_STRINGS_CACHE: dict[str, DataFrame] = {}
 _SHINGLE_SETS_CACHE: dict[str, DataFrame] = {}
 
 
@@ -132,7 +130,7 @@ def _doc_shingle_sets(sh: DataFrame) -> DataFrame:
     """(doc_id, shingles: array, n_shingles) — the per-doc shingle-set
     relation _verify_candidates joins to both pair sides. Group-then-
     filter == filter-then-group for any doc_id-level predicate, so
-    consumers that restrict the corpus (q_corpus_dedup_lsh*'s exact-
+    consumers that restrict the corpus (q_corpus_dedup_lsh's exact-
     stage survivors) may semi-join the SHARED aggregate instead of
     re-aggregating a filtered index."""
     return sh.groupBy("doc_id").agg(
@@ -147,41 +145,16 @@ def shingle_sets(spark: SparkSession, sf_dir: str, n: int = _NGRAM) -> DataFrame
     (shingle_index -> pair_overlaps / shingle_sets). r13 optimization
     (guide §2.4): _verify_candidates references its per-doc set
     aggregate TWICE (doc_a side + doc_b side) and Spark recomputes the
-    whole groupBy+collect_set subtree per side — and FIVE registry
-    queries run that verify stage (q_dedup_minhash_lsh, q_dedup_
-    minhash_md5, q_dedup_minhash_mllib, q_corpus_dedup_lsh,
-    q_corpus_dedup_lsh_md5), so one bench pass aggregated the shingle
-    index into sets TEN times. One persist-once build serves all ten
-    references."""
+    whole groupBy+collect_set subtree per side — and three registry
+    queries run that verify stage (q_dedup_minhash_lsh,
+    q_dedup_minhash_mllib, q_corpus_dedup_lsh), so one bench pass
+    aggregated the shingle index into sets six times. One persist-once
+    build serves all six references."""
     key = f"{spark.sparkContext.applicationId}:{sf_dir}:{n}:sets"
     return lru_persisted(
         _SHINGLE_SETS_CACHE,
         key,
         lambda: _doc_shingle_sets(shingle_index(spark, sf_dir, n)),
-    )
-
-
-def shingle_strings(
-    spark: SparkSession, sf_dir: str, n: int = _NGRAM
-) -> DataFrame:
-    """The UNHASHED (doc_id, s) shingle relation persisted once per
-    (session, corpus, n) — the engine-portable sibling of shingle_index
-    that the md5 MinHash twins draw their lane min-hashes from
-    (min-of-md5 must be taken over the same strings DuckDB sees, never
-    over xxhash64 keys). r13 optimization: q_dedup_minhash_md5 and
-    q_corpus_dedup_lsh_md5 each re-ran the scan + tokenize + shingle
-    explode inline; one shared build saves a full corpus explode per
-    consumer (the r12 simhash_tokens doctrine — the twins' 16-min
-    aggregates stay deliberately separate so each keeps mirroring the
-    production plan past the shared scan). Kept independent of
-    shingle_index (not derived from it, not feeding it) so the
-    production index never pays the wider string persist when no md5
-    twin runs."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}:{n}:strings"
-    return lru_persisted(
-        _SHINGLE_STRINGS_CACHE,
-        key,
-        lambda: _shingle_strings(table(spark, sf_dir, "documents"), n),
     )
 
 
@@ -603,89 +576,54 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
     return band_explode(sig, lanes, F.xxhash64)
 
 
-@query("q_dedup_minhash_lsh")  # rows-only: xxhash64 signatures are Spark-specific
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + banded LSH near-dup detection, the 100 TB dedup path:
+def minhash_pairs_sql(sh: str) -> str:
+    """DuckDB twin of _verify_candidates(_candidate_pairs(minhash_bands(
+    _shingled(...)))) over the string-shingle relation ``sh`` (doc_id,
+    shingle): the shingles hashed as _shingled does, the 16 salted
+    min-hashes and band signatures of minhash_bands, capped candidates
+    and exact-Jaccard verify over the hashed shingles, every xxhash64
+    through the port's DuckDB functions (functions/xxhash64.py).
+    Returns (doc_a, doc_b, jaccard).
 
-    shingle -> banded signatures (minhash_bands) -> candidate pairs =
-    equi-join on (band, signature) -> exact Jaccard verification on
-    candidates only.
+    Every relation a port function reads, and every hashed relation
+    read more than once, is MATERIALIZED: DuckDB inlines a CTE at each
+    reference and would re-run the Python functions per reference, and
+    unnest output would reach them in small chunks."""
+    x = UDF_PREFIX
 
-    Probability a pair with Jaccard j becomes a candidate: 1-(1-j^4)^4
-    (~0.97 at j=0.8). Checked rows-only (signatures are engine-specific);
-    the unit test asserts candidates ⊆ exact pairs at threshold after
-    verification."""
-    sh = shingle_index(spark, sf_dir)
-    return _verify_candidates(
-        sh,
-        _candidate_pairs(minhash_bands(sh)),
-        sets=shingle_sets(spark, sf_dir),
-    )
+    def chain(lanes: list[str]) -> str:
+        acc = str(SEED)
+        for lane in lanes:
+            acc = f"{x}_long({lane}, {acc})"
+        return acc
 
-
-def minhash_bands_md5(shs: DataFrame) -> DataFrame:
-    """(doc_id, band, sig) banded MinHash signatures over ENGINE-PORTABLE
-    hashes — the md5 twin of minhash_bands: each of 4 salted md5s yields
-    4 independent 8-hex-char lanes, so mh[k] = min over shingles of
-    substr(md5(shingle || '|' || k//4), 1 + 8*(k%4), 8), KEPT AS THE HEX
-    STRING — fixed-width lowercase hex compares lexicographically ==
-    numerically and identically in Spark's UTF8_BINARY and DuckDB's
-    binary VARCHAR order, so the min needs no conv/cast at all. Band
-    signature = md5 of the comma-joined lane strings. A/B at sf0.1
-    (shared shingle index warm, 3 reps): 16-md5 + conv 4.2 s, 4-md5
-    lanes + conv 3.4 s, 4-md5 lanes + string-min 2.8 s — the adopted
-    form. `shs` is the UNHASHED (doc_id, s) string-shingle relation —
-    min-of-md5 must be taken over the same strings DuckDB sees, not
-    over xxhash64 keys. Same plan shape as the production path: ONE
-    16-min aggregate, one 4-way band explode."""
-    sig = shs.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat_ws("|", "s", F.lit(str(k // 4)))),
-                    1 + 8 * (k % 4),
-                    8,
-                )
-            ).alias(f"mh{k}")
-            for k in range(_MINHASH_K)
-        ]
-    )
-    lanes = [F.col(f"mh{k}") for k in range(_MINHASH_K)]
-    return band_explode(sig, lanes, lambda *ls: F.md5(F.concat_ws(",", *ls)))
-
-
-def minhash_md5_pairs_sql(sh: str) -> str:
-    """DuckDB twin of _verify_candidates(_candidate_pairs(
-    minhash_bands_md5(...))) over the string-shingle relation ``sh``
-    (doc_id, shingle): the same 16 md5-lane min-hashes (4 salted md5s ×
-    4 hex lanes, string min), md5-of-comma-joined-lanes band signatures,
-    capped candidates and exact-Jaccard verify. Returns (doc_a, doc_b,
-    jaccard)."""
-    mh = ", ".join(
-        f"min(substr(md5(concat(shingle, '|{k // 4}')), {1 + 8 * (k % 4)}, 8))"
-        f" AS mh{k}"
-        for k in range(_MINHASH_K)
-    )
+    mh = ", ".join(f"min({x}_int({k}, hl)) AS mh{k}" for k in range(_MINHASH_K))
     bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(concat_ws(',', "
-        + ", ".join(f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND))
-        + ")) AS sig FROM mh"
+        f"SELECT doc_id, {b} AS band, "
+        + chain([f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND)])
+        + " AS sig FROM mh"
         for b in range(_BANDS)
     )
     j = jaccard_sql("n_inter", "sa.n", "sb.n")
     return f"""
-WITH sh AS ({sh}),
-mh AS (SELECT doc_id, {mh} FROM sh GROUP BY doc_id),
-bands AS ({bands}),
+WITH sh AS MATERIALIZED ({sh}),
+hashed AS MATERIALIZED (
+    SELECT doc_id, {x}_string(shingle, {SEED}) AS shingle FROM sh
+),
+hs AS MATERIALIZED (
+    SELECT doc_id, shingle, {x}_long(shingle, {SEED}) AS hl FROM hashed
+),
+mh AS MATERIALIZED (SELECT doc_id, {mh} FROM hs GROUP BY doc_id),
+bands AS MATERIALIZED ({bands}),
 {capped_candidates_sql("bands")},
 sizes AS (
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
+    SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM hs GROUP BY doc_id
 ),
 inter AS (
     SELECT c.doc_a, c.doc_b, count(*) AS n_inter
     FROM cand c
-    JOIN sh a ON a.doc_id = c.doc_a
-    JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
+    JOIN hs a ON a.doc_id = c.doc_a
+    JOIN hs b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
     GROUP BY 1, 2
 )
 SELECT doc_a, doc_b, {roundn_sql(j, 6)} AS jaccard
@@ -696,26 +634,23 @@ WHERE {j} >= {_JACCARD_THRESHOLD}
 """
 
 
-@query("q_dedup_minhash_md5", oracle=minhash_md5_pairs_sql(shingle_sql()))
-def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-hashed MinHash+LSH twin (r12 VERDICT item 1): the exact
-    band/candidate/verify machinery of q_dedup_minhash_lsh — same
-    _candidate_pairs skeleton (one groupBy(band, sig) + in-group pair
-    generation, bucket cap), same _verify_candidates exact-Jaccard
-    stage — with min-hashes and band signatures drawn from md5 instead
-    of xxhash64. md5 bits are engine-portable (the r12 SimHash
-    conversion pattern, q_dedup_simhash_md5), so the ENTIRE verified
-    pair set value-hashes against a DuckDB oracle, putting the banding
-    machinery that q_dedup_minhash_lsh / q_corpus_dedup_lsh /
-    q_dedup_pagerank_lsh all share under a full value hash. xxhash64
-    stays the production path (fastest JVM-side hash; no string
-    round-trip through hex/conv). The unhashed shingle relation comes
-    from the shared persist-once build (shingle_strings) — r13: the
-    inline rebuild re-ran the corpus scan + tokenize + shingle explode
-    that q_corpus_dedup_lsh_md5 also pays."""
-    cand = _candidate_pairs(minhash_bands_md5(shingle_strings(spark, sf_dir)))
+@query("q_dedup_minhash_lsh", oracle=minhash_pairs_sql(shingle_sql()))
+def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash + banded LSH near-dup detection, the 100 TB dedup path:
+
+    shingle -> banded signatures (minhash_bands) -> candidate pairs =
+    equi-join on (band, signature) -> exact Jaccard verification on
+    candidates only.
+
+    Probability a pair with Jaccard j becomes a candidate: 1-(1-j^4)^4
+    (~0.97 at j=0.8). The oracle (minhash_pairs_sql) recomputes the
+    signatures with the XXH64 port; the unit test also asserts the
+    verified pairs are a subset of the exact pairs."""
+    sh = shingle_index(spark, sf_dir)
     return _verify_candidates(
-        shingle_index(spark, sf_dir), cand, sets=shingle_sets(spark, sf_dir)
+        sh,
+        _candidate_pairs(minhash_bands(sh)),
+        sets=shingle_sets(spark, sf_dir),
     )
 
 
@@ -761,63 +696,19 @@ _CHUNK_BITS = _SIMHASH_BITS // _SIMHASH_CHUNKS
 _HAMMING_MAX = 3
 
 
-@query("q_dedup_simhash")  # rows-only: xxhash64 bit patterns are Spark-specific
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: 32-bit signature per doc (sign of per-bit vote
-    sums over token hashes), candidate pairs via chunk blocking (two docs
-    within Hamming distance d < chunks must share >=1 of the 4 8-bit
-    chunks), popcount-XOR Hamming verify <= 3. All bit arithmetic is
-    JVM-side (shiftright/bit_count); one aggregate + one bounded join.
-    Production path hashes tokens with xxhash64 (fastest JVM-side hash);
-    its full value-hash correctness receipt is the md5-bit twin below
-    (q_dedup_simhash_md5), which runs the SAME vote/chunk/Hamming
-    machinery over engine-portable bits."""
-    tok = simhash_tokens(spark, sf_dir).withColumn(
-        "th", F.xxhash64("token")
-    )
-    return _simhash_pairs(tok)
-
-
-_SIMHASH_TOKENS_CACHE: dict[str, DataFrame] = {}
-
-
-def simhash_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, token) with per-doc distinct tokens — the shared input
-    of both SimHash variants, persisted once per (session, corpus)
-    through the functions/cache.py stack (r12 VERDICT item 6: the two
-    twins each recomputed the scan + tokenize + distinct explode —
-    ~one corpus scan saved across the pair; the 32-vote aggregates
-    stay deliberately separate so the twin keeps mirroring the
-    production plan past the shared scan)."""
-    key = f"{spark.sparkContext.applicationId}:{sf_dir}:simhash_tokens"
-    return lru_persisted(
-        _SIMHASH_TOKENS_CACHE,
-        key,
-        lambda: table(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias(
-                "token"
-            ),
-        ),
-    )
-
-
-# DuckDB twin of the md5-bit SimHash below: same 32 vote sums, same
-# signature fold, same chunk blocking and popcount-XOR verify — over
-# bits both engines derive identically (first 8 hex chars of md5(token)
-# as a 32-bit int; DuckDB casts '0x…' strings, Spark uses conv(…,16,10),
-# verified equal). The vote/signature stages are unrolled per bit, the
-# same oracle style as q_bpe_train's unrolled CTE.
-_SIMHASH_MD5_ORACLE = f"""
-WITH tok AS (
+# DuckDB twin of q_dedup_simhash: same 32 vote sums, same signature
+# fold, same chunk blocking and popcount-XOR verify, with the token hash
+# from the XXH64 port. The low 32 bits of the signed hash are read with
+# (th >> b) & 1, as _simhash_pairs does. The vote/signature stages are
+# unrolled per bit, the same oracle style as q_bpe_train's unrolled CTE.
+_SIMHASH_ORACLE = f"""
+WITH tok AS MATERIALIZED (
     SELECT DISTINCT doc_id, token FROM (
         SELECT doc_id, unnest(string_split(text, ' ')) AS token
         FROM documents
     )
-), th AS (
-    SELECT doc_id,
-           CAST(concat('0x', substr(md5(token), 1, 8)) AS BIGINT) AS th
-    FROM tok
+), th AS MATERIALIZED (
+    SELECT doc_id, {UDF_PREFIX}_string(token, {SEED}) AS th FROM tok
 ), votes AS (
     SELECT doc_id,
            {', '.join(
@@ -847,32 +738,25 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING_MAX}
 """
 
 
-@query("q_dedup_simhash_md5", oracle=_SIMHASH_MD5_ORACLE)
-def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-hashed SimHash twin (r11 VERDICT item 3): the exact
-    vote/chunk/Hamming machinery of q_dedup_simhash, with token bits
-    drawn from md5 instead of xxhash64 — md5 is engine-portable
-    (q_eval_split / q_fingerprint_winnow doctrine), so the ENTIRE pair
-    set value-hashes against a DuckDB oracle, closing the one near-dup
-    family that had neither a full-value oracle nor an exact
-    oracle-hashed twin. Same plan shape as the production path: one
-    32-vote aggregate, chunk-blocked candidate equi-join, popcount
-    verify — the md5+conv token hash is the only extra scan-side cost,
-    so the twin also certifies the machinery's plan, not just its
-    values (same pattern as q_ann_ivf's deterministic-quantizer
-    conversion in r10)."""
-    tok = simhash_tokens(spark, sf_dir).withColumn(
-        "th",
-        F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long"),
+@query("q_dedup_simhash", oracle=_SIMHASH_ORACLE)
+def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup: 32-bit signature per doc (sign of per-bit vote
+    sums over token hashes), candidate pairs via chunk blocking (two docs
+    within Hamming distance d < chunks must share >=1 of the 4 8-bit
+    chunks), popcount-XOR Hamming verify <= 3. All bit arithmetic is
+    JVM-side (shiftright/bit_count); one aggregate + one bounded join.
+    Tokens are the per-doc distinct words, hashed with xxhash64."""
+    tok = table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
     )
-    return _simhash_pairs(tok)
+    return _simhash_pairs(tok.withColumn("th", F.xxhash64("token")))
 
 
 def _simhash_pairs(tok: DataFrame) -> DataFrame:
     """Shared SimHash machinery: per-bit vote sums -> sign-fold into a
     32-bit signature -> chunk blocking -> Hamming verify. `tok` is a
-    (doc_id, token, th) relation; both variants differ only in how
-    `th` is derived.
+    (doc_id, token, th) relation.
 
     r13 optimization (guide §2.4 — remove shuffles/duplicated subtrees;
     measured A/B in OPTIMIZATION_r13.md):
@@ -1277,7 +1161,23 @@ def q_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drop_near_dups(survivors, pairs)
 
 
-@query("q_corpus_dedup_lsh")  # rows-only: LSH signatures are engine-specific
+# DuckDB twin of q_corpus_dedup_lsh: the whole shipped composition —
+# md5(text) exact stage, the MinHash pair body over the survivor
+# shingles, higher-id drop — in one value-hashed query.
+_CORPUS_DEDUP_LSH_ORACLE = f"""
+WITH survivors AS ({EXACT_SURVIVORS_SQL}),
+near_dups AS (
+    SELECT DISTINCT doc_b AS doc_id FROM ({minhash_pairs_sql(
+        f"SELECT s.doc_id, s.shingle FROM ({shingle_sql()}) s"
+        " JOIN survivors USING (doc_id)"
+    )})
+)
+SELECT doc_id FROM survivors
+WHERE doc_id NOT IN (SELECT doc_id FROM near_dups)
+"""
+
+
+@query("q_corpus_dedup_lsh", oracle=_CORPUS_DEDUP_LSH_ORACLE)
 def q_corpus_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_corpus_dedup with its near-dup stage swapped for the 100 TB
     candidate generator — the composition a training-data pipeline
@@ -1289,11 +1189,13 @@ def q_corpus_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
        verification on candidates only -> drop the higher doc_id of
        every verified pair >= 0.3.
 
-    Rows-only check (signatures are engine-specific); the unit test
-    asserts the planted byte-dup and near-dup are dropped and that the
-    survivor set CONTAINS q_corpus_dedup's (LSH candidates are a subset
-    of the exact pair set, so LSH can only drop fewer docs — the recall
-    trade is one-sided and auditable)."""
+    The oracle value-hashes the whole composition, so a wiring bug
+    between stages (banding the pre-dedup corpus, anti-joining on the
+    wrong pair side) shows as a mismatch. The unit test also asserts the
+    planted byte-dup and near-dup are dropped and that the survivor set
+    CONTAINS q_corpus_dedup's (LSH candidates are a subset of the exact
+    pair set, so LSH can only drop fewer docs — the recall trade is
+    one-sided and auditable)."""
     survivors = exact_survivors(table(spark, sf_dir, "documents"))
     # NO broadcast hint: the survivors are corpus-cardinality (one row
     # per distinct text) — forcing them to every executor OOMs at the
@@ -1308,60 +1210,6 @@ def q_corpus_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would just re-run the exact-stage aggregate twice more
     near_pairs = _verify_candidates(
         sh, _candidate_pairs(minhash_bands(sh)), sets=shingle_sets(spark, sf_dir)
-    )
-    return _drop_near_dups(survivors, near_pairs)
-
-
-# DuckDB twin of q_corpus_dedup_lsh_md5: the WHOLE shipped composition —
-# md5(text) exact stage, the md5 MinHash pair body over the survivor
-# shingles, higher-id drop — in one value-hashed query.
-_CORPUS_DEDUP_LSH_MD5_ORACLE = f"""
-WITH survivors AS ({EXACT_SURVIVORS_SQL}),
-near_dups AS (
-    SELECT DISTINCT doc_b AS doc_id FROM ({minhash_md5_pairs_sql(
-        f"SELECT s.doc_id, s.shingle FROM ({shingle_sql()}) s"
-        " JOIN survivors USING (doc_id)"
-    )})
-)
-SELECT doc_id FROM survivors
-WHERE doc_id NOT IN (SELECT doc_id FROM near_dups)
-"""
-
-
-@query("q_corpus_dedup_lsh_md5", oracle=_CORPUS_DEDUP_LSH_MD5_ORACLE)
-def q_corpus_dedup_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-hashed twin of the SHIPPED composition (q_corpus_dedup_lsh):
-    exact stage -> banded MinHash LSH candidates -> exact-Jaccard verify
-    -> higher-id drop, end to end under one full value hash.
-
-    q_dedup_minhash_md5 value-hashes the band/candidate/verify machinery
-    in isolation; this twin value-hashes the COMPOSITION those stages
-    ship inside — the survivor semi-join feeding the signature aggregate,
-    the keep-policy anti-join consuming the verified pairs — so a wiring
-    bug between stages (e.g. banding the pre-dedup corpus, or anti-
-    joining on the wrong pair side) is caught by the oracle, not only by
-    the planted-composition test. Same plan as the production path
-    (q_corpus_dedup_lsh): min-aggregate exact stage, ONE groupBy band
-    aggregate over the survivor shingles, _candidate_pairs'
-    groupBy(band, sig) pair generation with the bucket cap,
-    _verify_candidates on the hashed shingle index. md5-lane min-hashes
-    (minhash_bands_md5) replace xxhash64 solely for engine portability;
-    xxhash64 stays the production signature."""
-    survivors = exact_survivors(table(spark, sf_dir, "documents"))
-    # bands draw from the UNHASHED survivor shingles (md5 lanes must see
-    # the same strings DuckDB does); verification joins the shared
-    # xxhash64 shingle index — set cardinalities agree (see shingle_sql).
-    # Both relations are the persist-once builds (r13: the string
-    # shingles were an inline rebuild per twin).
-    shs = shingle_strings(spark, sf_dir).join(survivors, "doc_id", "semi")
-    sh = shingle_index(spark, sf_dir).join(survivors, "doc_id", "semi")
-    # UNFILTERED persist-once set relation (see q_corpus_dedup_lsh:
-    # the candidate inner join already restricts to survivors, and
-    # per-doc sets/counts are invariant to the doc-level filter)
-    near_pairs = _verify_candidates(
-        sh,
-        _candidate_pairs(minhash_bands_md5(shs)),
-        sets=shingle_sets(spark, sf_dir),
     )
     return _drop_near_dups(survivors, near_pairs)
 

@@ -1,9 +1,15 @@
 """Driver simulation: what the external harness does to this repo.
 
 Builds a plain SparkSession (default configs — deliberately NOT our
-session factory), smoke-runs ``entry``, then runs every ``queries()``
-entry at sf0.01 and diffs it against ``oracle_sql()`` via DuckDB
-(column names, row count, order-insensitive canonicalized values).
+session factory), smoke-runs ``entry``, then runs every registered
+query at sf0.01 and diffs it against its DuckDB oracle (column names,
+row count, order-insensitive canonicalized values).
+
+The oracles run on ``oracle_check.duck_connect``, which registers the
+XXH64 port, so the four xxhash64 dedup queries get MATCH here. The
+driver itself never checks them: ``__spark_entry__.oracle_sql``
+withholds oracles that call the port, because the driver's DuckDB does
+not have it (tests/test_entry.py binds the export on a plain DuckDB).
 
 Exit code 0 iff everything matches. Used by .claude/skills/verify.
 """

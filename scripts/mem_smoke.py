@@ -53,9 +53,7 @@ BOILERPLATE = "shared boilerplate sentence every document carries"
 GUARDED = [
     "q_dedup_ngram_pruned",      # df_cap stop-shingle prune
     "q_dedup_minhash_lsh",       # banded LSH + bucket_cap
-    "q_dedup_minhash_md5",       # oracle twin: same band join + bucket_cap (r13)
     "q_corpus_dedup_lsh",        # end-to-end pipeline on LSH candidates
-    "q_corpus_dedup_lsh_md5",    # oracle twin: same composition (r13)
     "q_dedup_simhash",           # chunk blocking
     "q_dedup_embed_cosine_lsh",  # sign-bit sub-buckets inside the block
     "q_semdedup",                # cluster-size cap

@@ -128,9 +128,7 @@ AUDIT = [
     ("q_tpch_returned_items", LINEAR_BAND, "selective fact agg + broadcast attach"),
     ("q_dedup_exact", LINEAR_BAND, "hash aggregate"),
     ("q_dedup_minhash_lsh", LINEAR_BAND, "banded LSH: O(docs x bands) shuffle"),
-    ("q_dedup_minhash_md5", LINEAR_BAND, "oracle twin: same band/candidate/verify plan, md5-lane min-hashes"),
     ("q_corpus_dedup_lsh", LINEAR_BAND, "the shippable dedup composition"),
-    ("q_corpus_dedup_lsh_md5", LINEAR_BAND, "oracle twin: same composition plan, md5-lane band signatures"),
     ("q_cosine_topk", LINEAR_BAND, "broadcast query side, corpus never shuffles"),
     ("q_knn_join_lsh", LINEAR_BAND, "blocked ANN join, narrow candidates"),
     ("q_dup_span_stats", LINEAR_BAND, "gram agg + skew-aware flag join"),
@@ -148,7 +146,6 @@ AUDIT = [
     ("q_collation_ci", LINEAR_BAND, "single collated hash aggregate (comparator folds case in-agg)"),
     ("q_decontaminate", LINEAR_BAND, "one shingle pass + 8-byte-key equi-join"),
     ("q_dedup_simhash", LINEAR_BAND, "chunk-blocked candidates + popcount verify"),
-    ("q_dedup_simhash_md5", LINEAR_BAND, "oracle twin: same chunk-blocked plan, md5+conv token bits"),
     ("q_dedup_clusters", LINEAR_BAND, "pointer-jumping CC: O(log diameter) rounds, linear per round"),
     ("q_bpe_train", LINEAR_BAND, "corpus touched once; merge rounds run on the vocab relation"),
     ("q_ann_ivf_kmeans", LINEAR_BAND, "KMeans per-fit amortized; probe join broadcast"),
@@ -348,11 +345,8 @@ DECADE_AUDIT = [
     # claims rest on these staying ~linear where their exact twins go
     # quadratic — the decade measures exactly that divergence
     ("q_dedup_minhash_lsh", 1.35, "banded LSH: 64-bit band signatures collide only on similarity -> candidates track near-dup pairs, linear on replica-local dups"),
-    ("q_dedup_minhash_md5", 1.35, "oracle twin of the row above: identical band/candidate/verify plan over md5-lane min-hashes, same linearity claim"),
     ("q_corpus_dedup_lsh", 1.35, "shippable end-to-end dedup: md5 exact stage + banded candidates + verify"),
-    ("q_corpus_dedup_lsh_md5", 1.35, "oracle twin of the row above: identical composition over md5-lane bands, same linearity claim"),
     ("q_dedup_simhash", 2.2, "FIXED-granularity blocker: 8-bit chunks pigeonhole ~n^2/256 candidates on a decorrelated corpus; production widens chunks with corpus size (config, not plan) — measured against the declared pigeonhole bound"),
-    ("q_dedup_simhash_md5", 2.2, "oracle twin of the row above: identical vote/chunk/Hamming plan over md5 bits, same declared pigeonhole bound"),
     ("q_knn_join_lsh", 2.2, "FIXED-granularity blocker: 6-plane buckets pigeonhole ~|q||n|/64 per table on isotropic data; production adds planes with corpus size — measured against the declared bound"),
     ("q_dedup_embed_cosine_lsh", 1.35, "label blocks grow in count not size; sign sub-buckets bound within-block pairs -> linear"),
     # r10 VERDICT item 4: the three most expensive bench queries whose

@@ -27,7 +27,7 @@ import shutil
 
 import pytest
 
-from bitcoinminingetl_spark.oracle_check import canon, compare
+from bitcoinminingetl_spark.oracle_check import canon, compare, duck_connect
 from bitcoinminingetl_spark.registry import load_all
 from tests.conftest import SF_DIR
 
@@ -530,19 +530,8 @@ def test_full_differential_sweep_on_adversarial_corpus(spark, adv_dir):
     gaps (TRY_CAST-NaN crashes, strict JSON, phantom corrupt-vector
     pairs), 3 sub-ulp residuals now VERIFIED to 12 significant digits
     (ADV_DIFF_TOLERANT), and the 4 declared engine-limit residuals."""
-    import glob
-
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect(adv_dir)
     try:
-        for t in (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings"
-        ).split():
-            p = f"{adv_dir}/{t}.parquet"
-            src = f"'{p}/*.parquet'" if glob.glob(f"{p}/*.parquet") else f"'{p}'"
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
         undeclared = {}
         matched = 0
         for name, spec in sorted(REGISTRY.items()):

@@ -91,7 +91,7 @@ def test_unpersist_all_clears_every_registered_cache(spark):
 
 def test_r13_shared_relations_build_once_per_corpus(spark, sf_dir):
     """r13 shared-relation optimizations: the span-gram index, the
-    unhashed shingle relation and the surrogate bucket relation must be
+    surrogate bucket relation and the BM25 tf table must be
     persist-once per (session, corpus) — a second call returns the SAME
     persisted DataFrame (one build, every consumer reads executor
     storage), which is the entire optimization."""
@@ -99,7 +99,6 @@ def test_r13_shared_relations_build_once_per_corpus(spark, sf_dir):
         span_dup_grams,
         span_grams,
     )
-    from bitcoinminingetl_spark.operators.dedup import shingle_strings
     from bitcoinminingetl_spark.operators.reference_pipeline import (
         surrogate_buckets,
     )
@@ -108,7 +107,6 @@ def test_r13_shared_relations_build_once_per_corpus(spark, sf_dir):
     for fn in (
         span_grams,
         span_dup_grams,
-        shingle_strings,
         surrogate_buckets,
         bm25_tf,
     ):

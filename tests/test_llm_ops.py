@@ -13,37 +13,26 @@ REGISTRY = load_all()
 
 def test_minhash_candidates_subset_of_exact(spark, sf_dir):
     """Verified MinHash+LSH pairs must be a subset of the exact Jaccard
-    pairs at the same threshold (LSH can miss pairs, never invent them)
-    — for the xxhash64 production path AND its md5-lane oracle twin
-    (q_dedup_minhash_md5, r12 VERDICT item 1: same band/candidate/verify
-    machinery over engine-portable bits). The subset + planted-dup
-    recall properties are hash-function independent."""
+    pairs at the same threshold (LSH can miss pairs, never invent them)."""
     exact = {
         (r.doc_a, r.doc_b)
         for r in REGISTRY["q_dedup_ngram_jaccard"].fn(spark, sf_dir).collect()
     }
-    for name in ("q_dedup_minhash_lsh", "q_dedup_minhash_md5"):
-        lsh = {
-            (r.doc_a, r.doc_b)
-            for r in REGISTRY[name].fn(spark, sf_dir).collect()
-        }
-        assert lsh, f"{name}: no pairs — planted duplicates should be detected"
-        assert lsh <= exact, name
-        # planted exact duplicates (jaccard 1.0) collide in every band
-        assert len(lsh) >= len(exact) // 2, name
+    lsh = {
+        (r.doc_a, r.doc_b)
+        for r in REGISTRY["q_dedup_minhash_lsh"].fn(spark, sf_dir).collect()
+    }
+    assert lsh, "no pairs — planted duplicates should be detected"
+    assert lsh <= exact
+    # planted exact duplicates (jaccard 1.0) collide in every band
+    assert len(lsh) >= len(exact) // 2
 
 
 def test_simhash_finds_planted_duplicates(spark, sf_dir):
-    """Exact duplicates have identical simhash -> hamming 0 pairs exist
-    — for the xxhash64 production path AND its md5-bit oracle twin
-    (q_dedup_simhash_md5, r11 VERDICT item 3: same vote/chunk/Hamming
-    machinery over engine-portable bits). The exact-duplicate property
-    is hash-function independent, so both variants must find the
-    planted byte dups at hamming 0."""
-    for name in ("q_dedup_simhash", "q_dedup_simhash_md5"):
-        rows = REGISTRY[name].fn(spark, sf_dir).collect()
-        assert rows, name
-        assert any(r.hamming == 0 for r in rows), name
+    """Exact duplicates have identical simhash -> hamming 0 pairs exist."""
+    rows = REGISTRY["q_dedup_simhash"].fn(spark, sf_dir).collect()
+    assert rows
+    assert any(r.hamming == 0 for r in rows)
 
 
 def test_simhash_pairs_dedup_without_distinct(spark):
@@ -394,27 +383,22 @@ def test_corpus_dedup_lsh_composition(spark, sf_dir, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    # xxhash64 production path AND the md5-lane oracle twin
-    # (q_corpus_dedup_lsh_md5, r13): same composition, so the planted
-    # drops are hash-function independent
-    for name in ("q_corpus_dedup_lsh", "q_corpus_dedup_lsh_md5"):
-        lsh_survivors = {
-            r.doc_id
-            for r in REGISTRY[name].fn(spark, str(tmp_path)).collect()
-        }
-        assert 1 in lsh_survivors and 4 in lsh_survivors, name
-        assert 2 not in lsh_survivors, name  # byte dup
-        assert 3 not in lsh_survivors, name  # near dup (9/11 > 0.3)
+    lsh_survivors = {
+        r.doc_id
+        for r in REGISTRY["q_corpus_dedup_lsh"].fn(spark, str(tmp_path)).collect()
+    }
+    assert 1 in lsh_survivors and 4 in lsh_survivors
+    assert 2 not in lsh_survivors  # byte dup
+    assert 3 not in lsh_survivors  # near dup (9/11 > 0.3)
 
     # superset property on the real corpus
     exact = {
         r.doc_id for r in REGISTRY["q_corpus_dedup"].fn(spark, sf_dir).collect()
     }
-    for name in ("q_corpus_dedup_lsh", "q_corpus_dedup_lsh_md5"):
-        lsh = {
-            r.doc_id for r in REGISTRY[name].fn(spark, sf_dir).collect()
-        }
-        assert lsh >= exact, name
+    lsh = {
+        r.doc_id for r in REGISTRY["q_corpus_dedup_lsh"].fn(spark, sf_dir).collect()
+    }
+    assert lsh >= exact
 
 
 def test_embed_cosine_lsh_finds_planted_near_dups(spark, tmp_path):

@@ -96,10 +96,7 @@ def test_minhash_gate_goes_red_on_threshold_flip(spark, sf_dir):
     """Push the Jaccard verification threshold above 1.0: even the
     planted byte-identical duplicates (jaccard exactly 1.0) fail
     verification, the LSH pair set empties, and the planted-dup gate
-    must fail. The gate covers BOTH MinHash variants — the planted test
-    loops the xxhash64 production path and the md5-lane oracle twin
-    (q_dedup_minhash_md5), which share _verify_candidates and the
-    mutated threshold."""
+    must fail."""
     with _mutated(dedup_mod, "_JACCARD_THRESHOLD", 1.01):
         with pytest.raises(AssertionError):
             _gate_minhash_subset(spark, sf_dir)
