@@ -1044,3 +1044,47 @@ def test_session_state_expires_with_watermark(spark, landed_events, tmp_path):
     assert v["batches"] >= 2, "drain produced too few stateful batches"
     assert v["rows_removed"] > 0, v
     assert v["final_state_rows"] < v["peak_state_rows"], v
+
+
+def test_checkpoints_commit_through_filesystem_manager(
+    spark, landed_events, tmp_path
+):
+    """get_spark's sessions write streaming checkpoints through Spark's
+    FileSystem-based manager (its FileContext default makes Hadoop's local
+    filesystem fork a process per file operation without libhadoop). A
+    commit replaces an existing file, as a re-run state version needs,
+    and a drained stateful stream leaves no temp file in its checkpoint:
+    the offset/commit logs and the state store each commit by rename."""
+    import os
+
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    ckpt = tmp_path / "ckpt"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    mgr = getattr(jvm, pkg + "CheckpointFileManager").create(
+        Path(str(ckpt)), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    if mgr.getClass().getName() == pkg + "ChecksumCheckpointFileManager":
+        inner = mgr.getClass().getDeclaredField("underlyingFileMgr")
+        inner.setAccessible(True)
+        mgr = inner.get(mgr)
+    assert mgr.getClass().getName() == pkg + "FileSystemBasedCheckpointFileManager"
+
+    commit_dir = tmp_path / "commit"
+    for payload in (b"first", b"second"):
+        out = mgr.createAtomic(Path(str(commit_dir / "1.delta")), True)
+        out.write(payload)
+        out.close()
+    assert sorted(os.listdir(commit_dir)) == [".1.delta.crc", "1.delta"]
+    assert (commit_dir / "1.delta").read_bytes() == b"second"
+
+    stream = read_event_stream(spark, landed_events, max_files_per_trigger=1)
+    q = drain(
+        run_to_parquet(
+            windowed_metric_averages(stream), str(tmp_path / "out"), str(ckpt)
+        )
+    )
+    assert q.lastProgress["batchId"] >= 2
+    names = [f for _, _, files in os.walk(ckpt) for f in files]
+    assert any(f.endswith(".delta") for f in names), names  # state store ran
+    assert not [f for f in names if ".tmp" in f], names
